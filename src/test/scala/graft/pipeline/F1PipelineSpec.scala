@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Golden tests of the F1 model DAG over the edge-row fixtures of
@@ -122,29 +123,49 @@ class F1PipelineSpec extends SparkSpec {
       F1Intermediate.driverLapFeatures(sdl, partitionAggsViaJoin = true))
   }
 
-  test("full pipeline: optimized ≡ faithful formulations end-to-end") {
-    val a = F1Pipeline.build(raw, persistFeatures = false, optimized = true)
-    val b = F1Pipeline.build(raw, persistFeatures = false, optimized = false)
+  /** The reference-faithful composition — two-stage W1/W2 dedup, join+rank
+    * as-of join, window partition aggregates, back-joined final mart — over
+    * the two-frame fixtures: the oracle for every scale-path formulation.
+    */
+  private lazy val faithful = {
+    val feats = F1Intermediate.driverLapFeatures(sdl, partitionAggsViaJoin = false)
+    F1Pipeline.Marts(
+      F1Marts.fctDriverLaps(feats),
+      F1Marts.fctDriverRaceSummary(feats),
+      F1Marts.finalF1(feats),
+      F1Intermediate.raceControlAll(
+        F1Staging.stgRaceControl(rawRcHist, isRealtime = false),
+        F1Staging.stgRaceControl(rawRcRt, isRealtime = true)))
+  }
+
+  private def assertSameMarts(a: F1Pipeline.Marts, b: F1Pipeline.Marts): Unit = {
     assertSameRows(a.fctDriverRaceSummary, b.fctDriverRaceSummary)
     assertSameRows(a.fctDriverLaps, b.fctDriverLaps)
+    assertSameRows(a.finalF1, b.finalF1)
+    assertSameRows(a.raceControlAll, b.raceControlAll)
+  }
+
+  test("full pipeline: optimized ≡ faithful formulations end-to-end") {
+    assertSameMarts(F1Pipeline.buildTagged(F1Pipeline.tagged(raw)), faithful)
   }
 
   test("tagged-union build ≡ two-frame build (fused W1+W2, windowed final mart)") {
     // the fixtures exercise exactly the cases the fusion must preserve: W1's
-    // latest-raw-date pick, the NULLS-FIRST trap, W2 realtime-beats-historical
+    // latest-raw-date pick, the NULLS-FIRST trap, W2 realtime-beats-historical;
+    // the tagged frames are built as one log per endpoint, the way a unified
+    // landing table arrives, and checked layer by layer
+    def tag(df: DataFrame, rt: Boolean) =
+      df.withColumn("__is_realtime", lit(rt))
     val taggedRaw = F1Pipeline.TaggedRaw(
-      rawLapsHist.withColumn("__is_realtime", lit(false))
-        .unionByName(rawLapsRt.withColumn("__is_realtime", lit(true))),
-      rawPosHist.withColumn("__is_realtime", lit(false))
-        .unionByName(rawPosRt.withColumn("__is_realtime", lit(true))),
-      rawRcHist.withColumn("__is_realtime", lit(false))
-        .unionByName(rawRcRt.withColumn("__is_realtime", lit(true))))
-    val a = F1Pipeline.build(raw)
-    val t = F1Pipeline.buildTagged(taggedRaw)
-    assertSameRows(a.fctDriverRaceSummary, t.fctDriverRaceSummary)
-    assertSameRows(a.fctDriverLaps, t.fctDriverLaps)
-    assertSameRows(a.finalF1, t.finalF1)
-    assertSameRows(a.raceControlAll, t.raceControlAll)
+      tag(rawLapsRt, rt = true).unionByName(tag(rawLapsHist, rt = false)),
+      tag(rawPosRt, rt = true).unionByName(tag(rawPosHist, rt = false)),
+      tag(rawRcRt, rt = true).unionByName(tag(rawRcHist, rt = false)))
+    assertSameRows(
+      F1Intermediate.lapsAllTagged(F1Staging.stgLapsTagged(taggedRaw.laps)), lapsAll)
+    assertSameRows(
+      F1Intermediate.positionAllTagged(F1Staging.stgPositionTagged(taggedRaw.positions)),
+      positionAll)
+    assertSameMarts(F1Pipeline.buildTagged(taggedRaw), faithful)
   }
 
   test("race-control staging + dedup: nullif/try-double, message filter, realtime wins") {
@@ -221,6 +242,22 @@ class F1PipelineSpec extends SparkSpec {
     F1Pipeline.run(raw, out)
     val laps = spark.read.parquet(s"$out/fct_driver_laps")
     assert(laps.count() == 5)
-    assert(spark.read.parquet(s"$out/final_f1").columns.contains("avg_performance_score"))
+    assertSameRows(laps, faithful.fctDriverLaps)
+    assertSameRows(spark.read.parquet(s"$out/fct_driver_race_summary"),
+      faithful.fctDriverRaceSummary)
+    assertSameRows(spark.read.parquet(s"$out/final_f1"), faithful.finalF1)
+  }
+
+  test("run releases its feature checkpoint, also when a write fails") {
+    // the session is shared across suites: check the RDDs this run registered
+    val sc = spark.sparkContext
+    def persisted = sc.getPersistentRDDs.keySet
+    val before = persisted
+    val dir = java.nio.file.Files.createTempDirectory("f1marts")
+    F1Pipeline.run(raw, dir.resolve("ok").toString)
+    assert((persisted -- before).isEmpty)
+    val file = java.nio.file.Files.createFile(dir.resolve("not-a-dir"))
+    intercept[Exception](F1Pipeline.run(raw, file.resolve("marts").toString))
+    assert((persisted -- before).isEmpty)
   }
 }
