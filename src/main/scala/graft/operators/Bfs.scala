@@ -27,28 +27,25 @@ object Bfs {
         greatest(col(srcCol), col(dstCol)).as("v"))
       .filter(col("u") =!= col("v")).distinct()
     // one in-row explode instead of a self-union (whose two legs each
-    // re-ran e's distinct shuffle), read at a size-derived ⌈rows/64k⌉
-    // width — the [[Dedup.connectedComponents]] device
-    val undCp = e.select(explode(array(
+    // re-ran e's distinct shuffle), read at the size-derived ⌈rows/64k⌉
+    // width ([[Checkpoints.sized]]); every checkpoint here counts its own
+    // rows ([[Checkpoints.state]]), so the width costs no count job and
+    // each round plans its joins on true sizes
+    val undCp = Checkpoints.state(e.select(explode(array(
         struct(col("u"), col("v")),
         struct(col("v").as("u"), col("u").as("v")))).as("__e"))
-      .select(col("__e.u").as("u"), col("__e.v").as("v"))
-      .localCheckpoint()
-    val undParts = undCp.rdd.getNumPartitions
-    val nW = math.max(1L, math.min(undParts.toLong,
-      undCp.count() / 65536L + 1L)).toInt
-    val und = if (nW < undParts) undCp.coalesce(nW) else undCp
-    var settled = sources.select(col(sourceCol).as("node")).distinct()
-      .withColumn("level", lit(0L)).localCheckpoint()
+      .select(col("__e.u").as("u"), col("__e.v").as("v")))
+    val und = Checkpoints.sized(undCp.df, undCp.rows)
+    var settled = Checkpoints.state(sources.select(col(sourceCol).as("node"))
+      .distinct().withColumn("level", lit(0L))).df
     var frontier = settled
     for (h <- 1 to maxHops) {
-      val next = und.join(frontier, und("u") === frontier("node"))
+      val next = Checkpoints.state(und.join(frontier, und("u") === frontier("node"))
         .select(und("v").as("node"))
         .distinct()
         .join(settled.select(col("node")), Seq("node"), "left_anti")
-        .withColumn("level", lit(h.toLong))
-        .localCheckpoint()
-      val grown = settled.unionByName(next).localCheckpoint()
+        .withColumn("level", lit(h.toLong))).df
+      val grown = Checkpoints.state(settled.unionByName(next)).df
       // grown is a materialized COPY — the prior settled and the consumed
       // frontier are both superseded (round-1 frontier IS settled; the
       // double release is a harmless repeat unpersist of the same RDD)
@@ -57,7 +54,7 @@ object Bfs {
       settled = grown
       frontier = next
     }
-    Checkpoints.release(undCp)
+    Checkpoints.release(undCp.df)
     // the final round's frontier checkpoint is a SEPARATE RDD from settled
     // (its rows are a subset, its blocks are not) — without this it leaks
     // one frame per call for the JVM lifetime; the alias guard covers

@@ -111,16 +111,18 @@ object Dedup {
     * MapReduce and Beyond") by skipping its per-round edge rewrites; swap
     * that in if component diameters grow adversarial.
     *
-    * Scale notes: labels are `localCheckpoint`ed each round — without lineage
-    * truncation the plan doubles per iteration and analysis cost explodes
-    * long before data cost matters — and each round's checkpoint is RELEASED
-    * once the next round's is materialized ([[Checkpoints.release]]): the
-    * loop holds exactly one label frame in the block manager, not one per
-    * round. Convergence is detected by the label SUM:
-    * labels only ever decrease, so an unchanged sum means a fixpoint — one
-    * cheap aggregate per round instead of a change-count join. Isolated
-    * nodes never reach the edge list; callers left-join and coalesce to the
-    * node's own id.
+    * Scale notes: labels are checkpointed each round
+    * ([[Checkpoints.state]]) — without lineage truncation the plan doubles
+    * per iteration and analysis cost explodes long before data cost
+    * matters — and each round's checkpoint is RELEASED once the next
+    * round's is materialized ([[Checkpoints.release]]): the loop holds
+    * exactly one label frame in the block manager, not one per round, and
+    * none after it returns or throws. Convergence is detected by the label
+    * SUM: labels only ever decrease, so an unchanged sum means a fixpoint —
+    * the sum is observed by each round's checkpointing job itself, so the
+    * convergence test costs no job and no change-count join. Isolated
+    * nodes never reach the edge list; callers left-join and coalesce to
+    * the node's own id.
     */
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
                           maxIters: Int = 50): DataFrame = {
@@ -128,54 +130,48 @@ object Dedup {
     // two legs each re-evaluated the edge pipeline (for the LSH-pair
     // callers that is the whole shingle+minhash+verify chain) at
     // materialization — the melt emits the identical (a,b)+(b,a) multiset
-    // from a single evaluation. Eager localCheckpoint, not persist: the
-    // loop re-reads this frame every round, and a checkpoint's blocks are
+    // from a single evaluation. Eager checkpoint, not persist: the loop
+    // re-reads this frame every round, and a checkpoint's blocks are
     // released the moment the converged labels ship.
-    val symCp = edges
+    val symCp = Checkpoints.state(edges
       .select(col(srcCol).cast("long").as("__s"),
         col(dstCol).cast("long").as("__d"))
       .select(explode(array(
         struct(col("__s").as("__a"), col("__d").as("__b")),
         struct(col("__d").as("__a"), col("__s").as("__b")))).as("__e"))
-      .select(col("__e.__a").as("__a"), col("__e.__b").as("__b"))
-      .localCheckpoint(true)
-    // SIZE-DERIVED loop width (the [[Preference.bradleyTerryDistributed]]
-    // device): near-dup edge lists are usually far smaller than the
-    // session's shuffle width, and every round's join + label checkpoint +
-    // convergence aggregate was scheduling 32-task stages over a few
-    // thousand rows (measured on q181: ~15 jobs of 200-500 ms each, almost
-    // all scheduling). ⌈rows / 64k⌉ partitions reads/writes as many tasks
-    // as the data warrants — a per-row bound that keeps its parallelism on
-    // a billion-edge graph, never a core-count constant.
-    val symParts = symCp.rdd.getNumPartitions
-    val nW = math.max(1L, math.min(symParts.toLong,
-      symCp.count() / 65536L + 1L)).toInt
-    val sym = if (nW < symParts) symCp.coalesce(nW) else symCp
-    var labels = sym.select(col("__a").as("node")).distinct()
+      .select(col("__e.__a").as("__a"), col("__e.__b").as("__b")))
+    // SIZE-DERIVED loop width ([[Checkpoints.sized]]): near-dup edge lists
+    // are usually far smaller than the session's shuffle width, and every
+    // round's join + label checkpoint was scheduling 32-task stages over a
+    // few thousand rows (measured on q181: ~15 jobs of 200-500 ms each,
+    // almost all scheduling). The label frames are coalesced to the same
+    // width (node-sized ≤ edge-sized).
+    val sym = Checkpoints.sized(symCp.df, symCp.rows)
+    val nW = sym.rdd.getNumPartitions
+    val labelSum = coalesce(sum("component"), lit(0L)).as("__sum")
+    var labels = Checkpoints.state(sym.select(col("__a").as("node")).distinct()
       .withColumn("component", col("node"))
-      .coalesce(nW)
-      .localCheckpoint(true)
-    var lastSum = labels.agg(coalesce(sum("component"), lit(0L))).head().getLong(0)
+      .coalesce(nW), labelSum)
     var converged = false
     var iter = 0
     while (!converged && iter < maxIters) {
-      val next = sym.join(labels.withColumnRenamed("node", "__b"), "__b")
-        .select(col("__a").as("node"), col("component"))
-        .union(labels)
-        .groupBy("node").agg(min("component").as("component"))
-        .coalesce(nW) // folds into the reduce stage — narrow, no extra pass
-        .localCheckpoint(true)
-      val s = next.agg(coalesce(sum("component"), lit(0L))).head().getLong(0)
-      converged = s == lastSum
-      lastSum = s
+      val next = Checkpoints.state(
+        sym.join(labels.df.withColumnRenamed("node", "__b"), "__b")
+          .select(col("__a").as("node"), col("component"))
+          .union(labels.df)
+          .groupBy("node").agg(min("component").as("component"))
+          .coalesce(nW), // folds into the reduce stage — narrow, no extra pass
+        labelSum)
+      converged = next.observed.getLong(0) == labels.observed.getLong(0)
       // next is eagerly materialized — the superseded round's blocks can go
-      Checkpoints.release(labels)
+      Checkpoints.release(labels.df)
       labels = next
       iter += 1
     }
-    Checkpoints.release(symCp)
+    Checkpoints.release(symCp.df)
+    if (!converged) Checkpoints.release(labels.df)
     require(converged, s"connectedComponents did not converge in $maxIters rounds")
-    labels
+    labels.df
   }
 
   /** Soft dedup: instead of DROPPING near-duplicates, weight each row by the

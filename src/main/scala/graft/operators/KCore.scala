@@ -25,12 +25,17 @@ object KCore {
     *
     * ADAPTIVE CONVERGENCE: the peel only ever REMOVES edges, so an
     * unchanged edge COUNT between rounds proves the edge SET is stable and
-    * every further round a no-op — the loop exits as soon as the count
-    * (one long off an already-checkpointed frame, no extra join) stops
-    * falling. Fixed-round oracle replays are unaffected (identical
-    * output), and an over-provisioned `rounds` on a stable core stops
-    * paying per-round degree shuffles (spec'd). Pass `adaptive = false`
-    * to force exactly `rounds` iterations.
+    * every further round a no-op — the loop exits after the first round
+    * that removes no edge. The counts are the row counts the checkpointing
+    * jobs observe ([[Checkpoints.state]]), so the test costs no job.
+    * Fixed-round oracle replays are unaffected (identical output), and an
+    * over-provisioned `rounds` on a stable core stops paying per-round
+    * degree shuffles (spec'd). Pass `adaptive = false` to force exactly
+    * `rounds` iterations.
+    *
+    * The result is itself an eager checkpoint and every working checkpoint
+    * is released before returning (the self-cleaning class of the
+    * [[graft.operators]] lifecycle contract).
     */
   def peel(edges: DataFrame, srcCol: String, dstCol: String,
            k: Int, rounds: Int, adaptive: Boolean = true): DataFrame =
@@ -45,43 +50,35 @@ object KCore {
       .filter(col("u") =!= col("v")).distinct()
     // symmetrize with ONE in-row explode, not a self-union (the union's
     // two legs each re-ran e0's distinct shuffle at materialization), then
-    // read the loop-invariant edge set at a size-derived width — ⌈rows/64k⌉
-    // tasks, a per-row bound like [[Dedup.connectedComponents]]'s, so the
-    // per-round degree aggregate and semi-joins schedule as many tasks as
-    // the DATA warrants (and the narrow width propagates to every round's
-    // checkpoint through the semi-joins' stream side).
-    val undCp = e0.select(explode(array(
+    // read the loop-invariant edge set at the size-derived ⌈rows/64k⌉
+    // width ([[Checkpoints.sized]]), so the per-round degree aggregate and
+    // semi-joins schedule as many tasks as the DATA warrants (and the
+    // narrow width propagates to every round's checkpoint through the
+    // semi-joins' stream side).
+    val undCp = Checkpoints.state(e0.select(explode(array(
         struct(col("u"), col("v")),
         struct(col("v").as("u"), col("u").as("v")))).as("__e"))
-      .select(col("__e.u").as("u"), col("__e.v").as("v"))
-      .localCheckpoint()
-    val undParts = undCp.rdd.getNumPartitions
-    val nW = math.max(1L, math.min(undParts.toLong,
-      undCp.count() / 65536L + 1L)).toInt
-    var und = if (nW < undParts) undCp.coalesce(nW) else undCp
-    var undIsCp = false // round-0 view shares undCp's blocks — release once
-    var prevEdges = -1L
+      .select(col("__e.u").as("u"), col("__e.v").as("v")))
+    var und = Checkpoints.sized(undCp.df, undCp.rows)
+    var undState = undCp // the checkpoint und reads (round 0: undCp's view)
     var executed = 0
     var converged = false
     for (r <- 1 to rounds if !converged) {
       val alive = und.groupBy(col("u")).agg(count(lit(1)).as("__d"))
         .filter(col("__d") >= k)
         .select(col("u").as("node"))
-      val next = und
+      val next = Checkpoints.state(und
         .join(alive, und("u") === alive("node"), "left_semi")
-        .join(alive, und("v") === alive("node"), "left_semi")
-        .localCheckpoint()
-      if (adaptive && r < rounds) {
-        val cur = next.count() // a count over the fresh checkpoint: cheap
-        converged = cur == prevEdges
-        prevEdges = cur
-      }
-      // superseded round's edge set (round 1's view shares undCp's blocks)
-      Checkpoints.release(if (undIsCp) und else undCp)
-      und = next
-      undIsCp = true
+        .join(alive, und("v") === alive("node"), "left_semi"))
+      converged = adaptive && next.rows == undState.rows
+      Checkpoints.release(undState.df) // superseded round's edge set
+      und = next.df
+      undState = next
       executed = r
     }
-    (und.groupBy(col("u").as("node")).agg(count(lit(1)).as("deg")), executed)
+    val out = Checkpoints.state(
+      und.groupBy(col("u").as("node")).agg(count(lit(1)).as("deg"))).df
+    Checkpoints.release(undState.df)
+    (out, executed)
   }
 }

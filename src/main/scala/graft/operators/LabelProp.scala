@@ -54,19 +54,16 @@ object LabelProp {
         greatest(col(srcCol), col(dstCol)).as("v"))
       .filter(col("u") =!= col("v")).distinct()
     // one in-row explode instead of a self-union (whose two legs each
-    // re-ran e's distinct shuffle), read at a size-derived ⌈rows/64k⌉
-    // width so the per-round vote join schedules tasks proportional to
-    // the edge DATA, not the session shuffle width — the
-    // [[Dedup.connectedComponents]] device
-    val undCp = e.select(explode(array(
+    // re-ran e's distinct shuffle), read at the size-derived ⌈rows/64k⌉
+    // width ([[Checkpoints.sized]]) so the per-round vote join schedules
+    // tasks proportional to the edge DATA, not the session shuffle width;
+    // the checkpoint counts its own rows, so the width costs no count job
+    val undCp = Checkpoints.state(e.select(explode(array(
         struct(col("u"), col("v")),
         struct(col("v").as("u"), col("u").as("v")))).as("__e"))
-      .select(col("__e.u").as("u"), col("__e.v").as("v"))
-      .localCheckpoint()
-    val undParts = undCp.rdd.getNumPartitions
-    val nW = math.max(1L, math.min(undParts.toLong,
-      undCp.count() / 65536L + 1L)).toInt
-    val und = if (nW < undParts) undCp.coalesce(nW) else undCp
+      .select(col("__e.u").as("u"), col("__e.v").as("v")))
+    val und = Checkpoints.sized(undCp.df, undCp.rows)
+    val nW = und.rdd.getNumPartitions
     var labels = und.select(col("u").as("node")).distinct()
       .withColumn("label", col("node"))
     val w = Window.partitionBy("u").orderBy(col("__n").desc, col("label"))
@@ -76,11 +73,10 @@ object LabelProp {
       val votes = und.join(labels, und("v") === labels("node"))
         .groupBy(und("u"), labels("label"))
         .agg(count(lit(1)).as("__n"))
-      val next = votes.withColumn("__rn", row_number().over(w))
+      val next = Checkpoints.state(votes.withColumn("__rn", row_number().over(w))
         .filter(col("__rn") === 1)
         .select(col("u").as("node"), col("label"))
-        .coalesce(nW) // node-sized ≤ edge-sized; folds into the window stage
-        .localCheckpoint()
+        .coalesce(nW)).df // node-sized ≤ edge-sized; folds into the window stage
       // changed-label count: the node set is constant (und is fixed), so
       // zero changes proves next == labels exactly. Skipped on the last
       // round — the result ships regardless.
@@ -97,7 +93,7 @@ object LabelProp {
     // rounds == 0 returns the init projection OVER und — releasing its
     // blocks would truncate lineage the result still needs (the PageRank
     // rounds-0 hazard); after ≥1 round labels is an independent checkpoint
-    if (executed >= 1) Checkpoints.release(undCp)
+    if (executed >= 1) Checkpoints.release(undCp.df)
     (labels, executed)
   }
 }

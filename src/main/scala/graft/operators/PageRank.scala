@@ -18,7 +18,8 @@ import org.apache.spark.sql.functions._
   *   - undirected expansion (each edge contributes both ways) means every
   *     node in the edge list has degree ≥ 1 — no dangling-mass term to
   *     redistribute (the variant that needs it is documented, not hidden);
-  *   - driver state: the node COUNT (one long, for the teleport constant).
+  *   - driver state: the node COUNT (one long, for the teleport constant),
+  *     observed by the degree checkpoint's own job.
   *
   * Determinism: contributions are IEEE doubles summed under a commutative
   * aggregate; reassociation differences are ~1 ulp per fan-in and invisible
@@ -48,38 +49,39 @@ object PageRank {
   def pageRankWithStats(edges: DataFrame, srcCol: String, dstCol: String,
                         rounds: Int, d: Double = 0.85,
                         tol: Double = 0.0): (DataFrame, Int) = {
-    val und = edges
+    val und = Checkpoints.state(edges
       .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"))
       .unionByName(edges.select(col(dstCol).cast("long").as("u"),
         col(srcCol).cast("long").as("v")))
-      .distinct()
-      .localCheckpoint(true) // read by deg AND the undDeg join — one scan
-    val deg = und.groupBy("u").agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true)
-    val n = deg.count() // driver state: ONE long (the teleport denominator)
+      .distinct()).df // read by deg AND the undDeg join — one scan
+    val deg = Checkpoints.state(und.groupBy("u").agg(count(lit(1)).as("deg")))
+    // driver state: ONE long (the teleport denominator), the row count the
+    // degree checkpoint's own job observed
+    val n = deg.rows
     // the edge⋈degree join is ROUND-INVARIANT — hoisted out of the loop and
     // checkpointed once as (u, v, deg), each round pays ONE join (ranks
     // attach) instead of two. und is only read here, so its blocks are
     // released as soon as undDeg holds. rounds == 0 never enters the loop
     // (the init projection reads deg alone), so the edge-scale build is
-    // skipped entirely on that early-exit path.
-    val undDeg = if (rounds >= 1)
-        und.join(deg, "u")
-          .select(col("u"), col("v"), col("deg"))
-          .localCheckpoint(true)
-      else null
+    // skipped entirely on that early-exit path. Each round reads undDeg at
+    // the size-derived ⌈rows/64k⌉ width ([[Checkpoints.sized]]), not at the
+    // session's shuffle width.
+    val undDegCp = if (rounds >= 1)
+        Some(Checkpoints.state(und.join(deg.df, "u")
+          .select(col("u"), col("v"), col("deg"))))
+      else None
     Checkpoints.release(und)
     val base = (1.0 - d) / n
-    var ranks = deg.select(col("u").as("node"), lit(1.0 / n).as("pr"))
+    var ranks = deg.df.select(col("u").as("node"), lit(1.0 / n).as("pr"))
     var executed = 0
     var converged = false
-    for (r <- 1 to rounds if !converged) {
+    val undDegScan = undDegCp.map(st => Checkpoints.sized(st.df, st.rows))
+    for (undDeg <- undDegScan; r <- 1 to rounds if !converged) {
       val contribs = undDeg
         .join(ranks, undDeg("u") === ranks("node"))
         .select(col("v").as("node"), (col("pr") / col("deg")).as("c"))
-      val next = contribs.groupBy("node")
-        .agg((lit(base) + lit(d) * sum(col("c"))).as("pr"))
-        .localCheckpoint(true)
+      val next = Checkpoints.state(contribs.groupBy("node")
+        .agg((lit(base) + lit(d) * sum(col("c"))).as("pr"))).df
       // L1 delta vs the superseded round: node-sized join of two cached
       // frames, ONE double to the driver. Skipped on the last round (the
       // result ships regardless) and entirely when tol < 0.
@@ -97,12 +99,8 @@ object PageRank {
     // deg's blocks would truncate lineage the result still needs ("block
     // not found" at materialization). Only once a round has run is ranks
     // an independent eager checkpoint, making undDeg/deg safely superseded.
-    if (executed >= 1) {
-      Checkpoints.release(undDeg)
-      Checkpoints.release(deg)
-    } else if (undDeg != null) {
-      Checkpoints.release(undDeg) // never referenced by the init projection
-    }
+    undDegCp.foreach(st => Checkpoints.release(st.df)) // never read by the init projection
+    if (executed >= 1) Checkpoints.release(deg.df)
     (ranks, executed)
   }
 }

@@ -74,27 +74,26 @@ object Preference {
     *
     * Scale shape per iteration: the unordered-pair census (persisted once,
     * comparison-distinct-bounded) equi-joins the ratings table twice on
-    * item — AQE broadcasts the ratings side while it is small and falls
-    * back to hash joins when it is not — then ONE explode-melt +
-    * map-side-combined keyed sum per item (the census join executes
-    * exactly once per iteration). Each iteration eagerly
-    * `localCheckpoint`s the items-bounded `raw` frame: the max rescale and
-    * the next ratings are trivial scans of that checkpoint (checkpointing
-    * the ratings directly would re-execute the census chain inside the
-    * max's scalar subquery), and truncation keeps the logical plan from
-    * doubling per iteration (the exact 2^k inlining the oracle's
-    * `AS MATERIALIZED` suppresses — Catalyst analysis would blow up past
-    * ~15 iterations). A sparser checkpoint cadence was MEASURED SLOWER —
-    * see the in-loop comment. Superseded checkpoints are released as soon
-    * as the next one holds. Note `mx`'s broadcast re-evaluates per
-    * consumer of the returned ratings — a scan of an items-bounded
-    * LogicalRDD, not the census chain. Local checkpoints trade executor-loss replayability
-    * for lineage truncation; on a real cluster with flaky executors, swap
-    * for reliable `checkpoint` under a checkpoint dir. The returned
-    * leaderboard is itself checkpointed (items-bounded), every working
-    * cache is dropped before returning, and the rank window is a
-    * single-partition sort of the ITEM VOCABULARY — bounded by items,
-    * never by comparisons.
+    * item — the planner broadcasts the ratings side while it is small and
+    * falls back to hash joins when it is not, deciding on the TRUE size of
+    * the previous round's checkpoint ([[Checkpoints.state]]) — then ONE
+    * explode-melt + map-side-combined keyed sum per item (the census join
+    * executes exactly once per iteration). Each iteration eagerly
+    * checkpoints the items-bounded `raw` frame and observes its maximum in
+    * the same job, so the rescale is a literal and the next ratings are a
+    * projection of that checkpoint: three jobs per round (the ratings
+    * broadcast, the census-join shuffle, the checkpoint). Truncation keeps
+    * the logical plan from doubling per iteration (the exact 2^k inlining
+    * the oracle's `AS MATERIALIZED` suppresses — Catalyst analysis would
+    * blow up past ~15 iterations). A sparser checkpoint cadence was
+    * MEASURED SLOWER — see the in-loop comment. Superseded checkpoints are
+    * released as soon as the next one holds. Local checkpoints trade
+    * executor-loss replayability for lineage truncation; on a real cluster
+    * with flaky executors, swap for reliable `checkpoint` under a
+    * checkpoint dir. The returned leaderboard is itself checkpointed
+    * (items-bounded), every working cache is dropped before returning, and
+    * the rank window is a single-partition sort of the ITEM VOCABULARY —
+    * bounded by items, never by comparisons.
     */
   def bradleyTerryDistributed(comparisons: DataFrame, winnerCol: String,
                               loserCol: String,
@@ -115,56 +114,44 @@ object Preference {
     // per-round job over these tiny tables would schedule 32+ tasks —
     // measured: the 10-round loop ran 97 jobs of 32-99 tasks each with
     // half its wall time in scheduling. The directed census is dropped as
-    // soon as both hold (nothing else reads it).
-    val wl = census.select(col("__w").as("item"), col("__n").as("__wv"),
-        lit(0L).as("__lv"))
+    // soon as both hold (nothing else reads it). Both count their rows in
+    // the checkpointing job, so the ⌈rows/64k⌉ loop-scan width
+    // ([[Checkpoints.sized]]: one task for an items-bounded census, six for
+    // q278's 368k-pair one) costs no extra job.
+    val wl = Checkpoints.state(census.select(col("__w").as("item"),
+        col("__n").as("__wv"), lit(0L).as("__lv"))
       .unionAll(census.select(col("__l"), lit(0L), col("__n")))
       .groupBy("item")
-      .agg(sum(col("__wv")).as("__wins"), sum(col("__lv")).as("__losses"))
-      .localCheckpoint(true)
-    val pc0 = census.select(least(col("__w"), col("__l")).as("__a"),
+      .agg(sum(col("__wv")).as("__wins"), sum(col("__lv")).as("__losses")))
+    val pc0 = Checkpoints.state(census.select(
+        least(col("__w"), col("__l")).as("__a"),
         greatest(col("__w"), col("__l")).as("__b"), col("__n"))
-      .groupBy("__a", "__b").agg(sum(col("__n")).as("__n"))
-      .localCheckpoint(true)
+      .groupBy("__a", "__b").agg(sum(col("__n")).as("__n")))
     census.unpersist(blocking = false)
-    // SIZE-DERIVED loop-scan width: the checkpointed state tables keep the
-    // pre-checkpoint stage's partition count (32-way here), so ten rounds
-    // of census scans schedule 32 tasks regardless of how small the census
-    // is. A narrow coalesce to ⌈rows / 64k⌉ partitions reads the same
-    // blocks with as many tasks as the DATA warrants — one for an
-    // items-bounded census, six for q278's 368k-pair one, thousands for a
-    // 10⁹-pair one — a per-row bound, never a core-count constant (the
-    // counts are one tiny checkpoint-scan job each, setup-phase).
-    def sized(df: DataFrame): DataFrame = {
-      val parts = df.rdd.getNumPartitions
-      val n = math.max(1L, math.min(parts.toLong,
-        df.count() / 65536L + 1L)).toInt
-      if (n < parts) df.coalesce(n) else df
-    }
-    val pc = sized(pc0)
-    val wlLoop = sized(wl)
+    val pc = Checkpoints.sized(pc0.df, pc0.rows)
+    val wlLoop = Checkpoints.sized(wl.df, wl.rows)
     var r = wlLoop.select(col("item"), lit(1000000L).as("__r"))
     // the eager per-iteration checkpoint sits on RAW (the items-bounded
-    // W_i/d_i frame), not on r: the old shape checkpointed r, whose plan
-    // embeds `broadcast(mx)` — a scalar subquery over the SAME heavy
-    // census-join chain — so every iteration executed the pc⋈r⋈r chain
-    // TWICE (once for the max, once for the projection). With raw
-    // checkpointed first, mx and r are two trivial scans of an
-    // items-bounded LogicalRDD and the census join runs exactly once per
-    // iteration. Superseded checkpoints are released as soon as the next
-    // one holds (same discipline as [[PageRank.pageRankWithStats]]).
+    // W_i/d_i frame), and its job observes max(__raw): the rescale is a
+    // literal, so the next ratings are one projection of raw. Both rating
+    // legs read that one projection through aliases, so exchange reuse
+    // builds ONE broadcast of it per round, and raw's true statistics keep
+    // it broadcast in every round (see [[Checkpoints]]). Superseded
+    // checkpoints are released as soon as the next one holds (same
+    // discipline as [[PageRank.pageRankWithStats]]).
     var prevRaw: Option[DataFrame] = None
     for (_ <- 1 to iters) {
+      val ra = r.as("__ra"); val rb = r.as("__rb")
       val t = pc
-        .join(r.select(col("item").as("__a"), col("__r").as("__ra")), "__a")
-        .join(r.select(col("item").as("__b"), col("__r").as("__rb")), "__b")
+        .join(ra, col("__a") === col("__ra.item"))
+        .join(rb, col("__b") === col("__rb.item"))
         // a pair of two zero-rated items carries no gradient — dropped,
         // exactly the driver loop's guard (an unguarded division would be
         // Infinity -> overflow)
-        .filter(col("__ra") + col("__rb") > 0L)
+        .filter(col("__ra.__r") + col("__rb.__r") > 0L)
         .select(col("__a"), col("__b"),
           floor(col("__n").cast("double") * lit(1e12) /
-            (col("__ra") + col("__rb")).cast("double") + lit(0.5))
+            (col("__ra.__r") + col("__rb.__r")).cast("double") + lit(0.5))
             .as("__t"))
       // melt (a, b, t) → (item, t) with ONE evaluation of t: the old
       // unionAll of two projections re-ran the census join per leg. The
@@ -193,29 +180,27 @@ object Preference {
       // the lazy round's census chain is NOT deduplicated by exchange
       // reuse across the two ratings legs, so its join+agg executes twice
       // per materialization. Reverted 2026-08-19 (round 14).
-      val raw = rawPlan.localCheckpoint()
-      val mx = raw.agg(max(col("__raw")).as("__mx"))
-      r = raw.crossJoin(broadcast(mx))
-        .select(col("item"),
-          when(col("__mx") > 0.0,
-            floor(col("__raw") / col("__mx") * lit(1e6) + lit(0.5)))
-            .otherwise(lit(1000000L)).as("__r"))
+      val raw = Checkpoints.state(rawPlan, max(col("__raw")).as("__mx"))
+      // a NULL max (no items) takes the otherwise branch
+      val mx = lit(raw.observed.get(0)).cast(DoubleType)
+      r = raw.df.select(col("item"),
+        when(mx > 0.0, floor(col("__raw") / mx * lit(1e6) + lit(0.5)))
+          .otherwise(lit(1000000L)).as("__r"))
       prevRaw.foreach(Checkpoints.release) // superseded round (r reads raw_i only)
-      prevRaw = Some(raw)
+      prevRaw = Some(raw.df)
     }
     val s = r.agg(sum(col("__r")).as("__s"))
-    val out = wlLoop.join(r, "item").crossJoin(broadcast(s))
+    val out = Checkpoints.state(wlLoop.join(r, "item").crossJoin(broadcast(s))
       .select(col("item"), col("__wins").as("wins"),
         col("__losses").as("losses"),
         (col("__wins") + col("__losses")).as("n_comparisons"),
         round(col("__r").cast("double") / col("__s").cast("double"), 6)
           .as("rating"),
         row_number().over(
-          Window.orderBy(col("__r").desc, col("item").asc)).as("rank"))
-      .localCheckpoint()
-    Checkpoints.release(wl); Checkpoints.release(pc0)
+          Window.orderBy(col("__r").desc, col("item").asc)).as("rank")))
+    Checkpoints.release(wl.df); Checkpoints.release(pc0.df)
     prevRaw.foreach(Checkpoints.release) // out is eager — last raw superseded
-    out
+    out.df
   }
 
   /** [[bradleyTerry]] over a PRE-AGGREGATED directed census (winner, loser,

@@ -74,11 +74,7 @@ class PreferenceSpec extends SparkSpec {
     // NULL row — every code path (zero-rated pairs, the null filter, tie
     // ranks) crossed; ratings must match the driver MM loop EXACTLY (the
     // integer-millionth state leaves no tolerance to hide behind)
-    val comp = ((1 to 40).flatMap { i =>
-      val a = s"m${i % 13}"; val b = s"m${(i * 7 + 3) % 13}"
-      if (a == b) Nil else Seq((Some(a), Some(b)))
-    } ++ Seq((Some("m1"), Some("zz")), (Some("m2"), Some("zz")),
-      (None, Some("m1")))).toDF("w", "l")
+    val comp = PreferenceSpec.sharedFixture(spark)
     for (it <- Seq(1, 3, 10)) {
       val driver = Preference.bradleyTerry(comp, "w", "l", iters = it)
         .orderBy("item").collect()
@@ -101,5 +97,21 @@ class PreferenceSpec extends SparkSpec {
     assert(rows.count() == 1200L)
     val top = rows.orderBy("rank").head()
     assert(top.getString(0) == "i0" && top.getInt(5) == 1)
+  }
+}
+
+object PreferenceSpec {
+
+  /** A ring tournament with asymmetric counts plus a never-winner and a
+    * NULL row, as (w, l) comparisons.
+    */
+  def sharedFixture(spark: org.apache.spark.sql.SparkSession)
+      : org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    ((1 to 40).flatMap { i =>
+      val a = s"m${i % 13}"; val b = s"m${(i * 7 + 3) % 13}"
+      if (a == b) Nil else Seq((Some(a), Some(b)))
+    } ++ Seq((Some("m1"), Some("zz")), (Some("m2"), Some("zz")),
+      (None, Some("m1")))).toDF("w", "l")
   }
 }
