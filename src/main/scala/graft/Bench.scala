@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): runs every declared query against
@@ -73,66 +70,12 @@ object Bench {
       case b if !failed && secs <= 0.25 && secs > 1.5 * b => secs / b
     }
 
-  private final class Totals extends SparkListener {
-    val shuffleRead = new AtomicLong
-    val shuffleWrite = new AtomicLong
-    val memSpill = new AtomicLong
-    val diskSpill = new AtomicLong
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-      val m = sc.stageInfo.taskMetrics
-      if (m != null) {
-        shuffleRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        memSpill.addAndGet(m.memoryBytesSpilled)
-        diskSpill.addAndGet(m.diskBytesSpilled)
-      }
-    }
-    def snapshot: (Long, Long, Long, Long) =
-      (shuffleRead.get, shuffleWrite.get, memSpill.get, diskSpill.get)
-  }
-
-  /** The listener bus is async — poll until the totals stop moving (two
-    * consecutive quiet 50 ms windows) so each query's stages are attributed
-    * to it, not its successor. Bounded so a stuck bus can't hang the bench.
-    */
-  private def settle(t: Totals): Unit = {
-    var prev = t.snapshot
-    var stable = 0
-    var waited = 0
-    while (stable < 2 && waited < 2000) {
-      Thread.sleep(50); waited += 50
-      val cur = t.snapshot
-      if (cur == prev) stable += 1 else { stable = 0; prev = cur }
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE coalescing optimizes for shuffle BYTES; the F1 window stages are
-      // CPU-bound per row (~25 µs/row of window+cast work over a ~16 MB
-      // shuffle), so the default 1 MB floor coalesced 32 partitions to 16
-      // and halved the hot stage's parallelism (q39 stage wall 1.59 s → 0.74 s
-      // at 128k, round-11 root-cause). Local-scale tuning only: at cluster
-      // scale real partitions dwarf any floor and this is a no-op.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PART", "128k"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val totals = new Totals
-    spark.sparkContext.addSparkListener(totals)
-
-    Seq("lineitem", "orders", "customer", "part", "supplier",
-        "documents", "embeddings", "events").foreach { t =>
-      try graft.sources.Tables.load(spark, sfDir, t).count()
-      catch { case _: Throwable => () }
-    }
+    val spark = BenchSession.build()
+    val metrics = new QueryMetrics
+    spark.sparkContext.addSparkListener(metrics)
+    BenchSession.warm(spark, sfDir)
 
     // best of three runs per query: single-JVM timings vary ±15% and the
     // allocation-heavy queries (shingle joins) occasionally catch a G1 mixed
@@ -154,8 +97,8 @@ object Bench {
         // landing as a concurrent-mark stall inside query N+1's timing —
         // measured as 10x per-query swings on the shingle-heavy family
         System.gc()
-        settle(totals)
-        val before = totals.snapshot
+        metrics.settle()
+        val before = metrics.snapshot
         val t0 = System.nanoTime()
         try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         catch { case e: Throwable =>
@@ -163,20 +106,11 @@ object Bench {
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
         }
         val dt = (System.nanoTime() - t0) / 1e9
-        settle(totals)
-        val after = totals.snapshot
-        // queries are independent — drop any intra-query persisted data so
-        // later queries aren't taxed by cache residue / GC pressure.
-        // clearCache only drops SQL-cached relations; localCheckpoint and
-        // explicit persist() blocks live in the BLOCK MANAGER and otherwise
-        // accumulate for the life of the JVM (ContextCleaner reclaims them
-        // only after the owning Dataset is GC'd — too late for a 201-query
-        // suite, and the observed mechanism behind ambient 4x ghosts on the
-        // iterative-graph family: q41 r5, q181 r6). Fixtures memoize PATHS,
-        // not frames, so dropping every persistent RDD between reps is safe.
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        metrics.settle()
+        val after = metrics.snapshot
+        // queries are independent: drop any intra-query persisted data so
+        // later queries aren't taxed by cache residue / GC pressure
+        BenchSession.release(spark)
         (dt, ((after._2 - before._2) / 1e6, (after._1 - before._1) / 1e6,
           (after._3 - before._3 + after._4 - before._4) / 1e6))
       }

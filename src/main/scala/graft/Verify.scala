@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,14 +9,7 @@ object Verify {
     // query names to run, for fast local oracle iteration on a subset
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(',').map(_.trim).toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchSession.build()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -29,12 +21,8 @@ object Verify {
         e.getStackTrace.take(8).foreach(f => System.err.println(s"    at $f"))
       }
       // queries are independent; intra-query persisted frames (shingle sets,
-      // signatures) must not accumulate across the sequential queries —
-      // clearCache drops SQL-cached relations, the RDD sweep drops any
-      // still-held localCheckpoint blocks (same discipline as Bench)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      // signatures, checkpoints) must not accumulate across them
+      BenchSession.release(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -37,13 +37,12 @@ package graft
   *     would either recompute the expensive shared stage per consumer or
   *     truncate lineage the result still needs, so THE SESSION OWNER
   *     releases: after fully consuming the returned frame, call
-  *     `spark.catalog.clearCache()` (drops SQL-cached relations) and
-  *     sweep `spark.sparkContext.getPersistentRDDs.values.foreach(
-  *     _.unpersist(blocking = false))` (drops checkpoint blocks), exactly
-  *     as `graft.Bench` does between reps and `graft.Verify` between
-  *     queries. A long-lived composing session that never releases will
-  *     accumulate cached relations without bound; note `clearCache()` also
-  *     evicts caller-owned caches, so a surgical caller can instead
+  *     [[graft.BenchSession.release]] (the SQL cache and every persistent
+  *     RDD, checkpoint blocks included; `clearCache()` alone leaves the
+  *     checkpoints), as `graft.Bench`, `graft.Verify` and the tools do
+  *     between queries. A long-lived composing session that never releases
+  *     will accumulate cached relations without bound; note the release
+  *     also evicts caller-owned caches, so a surgical caller can instead
   *     `unpersist` the returned frame's inputs selectively.
   *
   * Every caller-released operator notes the contract in its own scaladoc

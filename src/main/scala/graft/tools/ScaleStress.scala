@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.SparkEntry
+import graft.{BenchSession, SparkEntry}
 import graft.operators.Similarity
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -165,7 +165,7 @@ object ScaleStress {
       val t0 = System.nanoTime()
       fn(spark, dir).write.format("noop").mode("overwrite").save()
       val dt = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
+      BenchSession.release(spark)
       peakHeap = math.max(peakHeap, heapMB())
       dt
     }.min
@@ -183,15 +183,7 @@ object ScaleStress {
     val genOnly = args.length > 3 && args(3) == "gen-only"
     val reps = if (args.length > 4) args(4).toInt else 2
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchSession.build()
 
     if (!new java.io.File(s"$out/lineitem.parquet").exists())
       generate(spark, src, out, factor)
@@ -199,10 +191,7 @@ object ScaleStress {
     if (genOnly) { spark.stop(); return }
 
     // warm both scan paths so footer/session costs stay out of rep 1
-    Seq(src, out).foreach { d =>
-      Seq("lineitem", "orders", "documents", "embeddings", "events")
-        .foreach(t => Tables.load(spark, d, t).count(): Unit)
-    }
+    Seq(src, out).foreach(BenchSession.warm(spark, _))
 
     println(f"[scale] | query | ${src} (s) | ${out} ×$factor (s) | ratio | heap base/scaled (MB) |")
     var totalBase = 0.0
