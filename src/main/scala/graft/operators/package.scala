@@ -30,7 +30,7 @@ package graft
   *     census, a shingle table, a qrels frame:
   *     [[operators.FuzzyJoin.fellegiSunter]] / `fellegiSunterEm`,
   *     [[operators.Evaluation.multiclassPrf]] / `krippendorffAlpha` /
-  *     `pairedBootstrapCi` / `corpusBleu`,
+  *     `pairedBootstrapCi`,
   *     [[operators.TextDedup.prefixJaccardJoin]] /
   *     `exactSubstringSpans` / `duplicateSpanCoverage`, and the
   *     language-model censuses). An eager release inside the operator

@@ -124,7 +124,7 @@ object F1Synthetic {
       lapsExploded.filter(col("__v") =!= "h").drop("__v"),
       posExploded.filter(col("__v") === "h").drop("__v"),
       posExploded.filter(col("__v") === "r").drop("__v"),
-      rcHist(spark, dir), rcRt(spark, dir))
+      rcHist(ord), rcRt(ord))
   }
 
   /** Tagged-union raw shape ([[F1Pipeline.TaggedRaw]]): the same generated
@@ -141,7 +141,7 @@ object F1Synthetic {
         .withColumn("__is_realtime", col("__v") =!= "h").drop("__v"),
       posExplodedFrame(ord)
         .withColumn("__is_realtime", col("__v") === "r").drop("__v"),
-      rcExplodedFrame(spark, dir))
+      rcExplodedFrame(ord))
   }
 
   /** Race-control raw rows from orders: unique message per order keeps the
@@ -149,8 +149,8 @@ object F1Synthetic {
     * deterministically to exercise the nullif + guarded-double staging
     * (stg_openf1_race_control_historical.sql:41-76) at data scale.
     */
-  private def rcBase(spark: SparkSession, dir: String): DataFrame =
-    Tables.load(spark, dir, "orders").select(
+  private def rcBase(ord: DataFrame): DataFrame =
+    ord.select(
       (col("o_orderkey") % 20 % 5).cast("string").as("meeting_key"),
       (col("o_orderkey") % 20).cast("string").as("session_key"),
       col("o_orderdate").cast("timestamp").cast("string").as("date"),
@@ -168,10 +168,10 @@ object F1Synthetic {
       concat(lit("MSG "), col("o_orderkey").cast("string")).as("message"),
       lit("2023").as("year"))
 
-  private def rcHist(spark: SparkSession, dir: String): DataFrame = rcBase(spark, dir)
+  private def rcHist(ord: DataFrame): DataFrame = rcBase(ord)
 
-  private def rcRt(spark: SparkSession, dir: String): DataFrame =
-    rcBase(spark, dir).filter(col("session_key").cast("int") % 4 === 0)
+  private def rcRt(ord: DataFrame): DataFrame =
+    rcBase(ord).filter(col("session_key").cast("int") % 4 === 0)
       .withColumn("flag", lit("RED")) // same (keys, ts, message) → realtime wins
       // the realtime staging uses the reference's UNGUARDED cast
       // (stg_openf1_race_control_realtime.sql:28) — under ANSI, '' / 'nan'
@@ -183,10 +183,10 @@ object F1Synthetic {
     * [[rcHist]] ∪ [[rcRt]] with the realtime flag/sector overrides applied
     * row-level instead of in a second filtered branch.
     */
-  private def rcExplodedFrame(spark: SparkSession, dir: String): DataFrame = {
+  private def rcExplodedFrame(ord: DataFrame): DataFrame = {
     val tags = when(col("session_key").cast("int") % 4 === 0,
       array(lit(false), lit(true))).otherwise(array(lit(false)))
-    rcBase(spark, dir)
+    rcBase(ord)
       .withColumn("__is_realtime", explode(tags))
       .withColumn("flag", when(col("__is_realtime"), lit("RED")).otherwise(col("flag")))
       .withColumn("sector", when(col("__is_realtime"), lit("None")).otherwise(col("sector")))

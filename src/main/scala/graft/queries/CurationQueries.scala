@@ -856,19 +856,18 @@ private[graft] object CurationQueries {
       * against its own full text after dropping every 7th token (the
       * lossy-summarizer stand-in), clipped p₁..p₄ from exact BIGINT
       * counts, brevity penalty exercised (the candidate corpus is the
-      * SHORT side by construction), n as a column dimension — one explode
-      * per side, never four plans.
+      * SHORT side by construction), every pair clipped inside its row by
+      * one kernel pass (one row per document).
       */
     "q270_corpus_bleu" -> ((s, dir) => {
       val pairs = docs(s, dir)
-        .select(col("doc_id"), col("text"),
-          split(col("text"), " ").as("__t"))
-        .select(col("doc_id"),
+        .select(col("text"), split(col("text"), " ").as("__t"))
+        .select(
           expr("array_join(transform(filter(sequence(0, size(__t) - 1), " +
             "i -> (i + 1) % 7 != 0), i -> element_at(__t, i + 1)), ' ')")
             .as("cand"),
           col("text").as("ref"))
-      Evaluation.corpusBleu(pairs, "doc_id", "cand", "ref")
+      Evaluation.corpusBleu(pairs, "cand", "ref")
     }),
 
     /** UniMax sampling allocation (extension; [[graft.operators.Curation

@@ -475,6 +475,14 @@ class PlanShapeSpec extends SparkSpec {
     assert(!plan.contains("Join"), plan)
   }
 
+  test("q270 corpus BLEU: the gram stream never shuffles; only the global sum's single-partition exchange") {
+    val plan = executedPlanOf(SparkEntry.queries("q270_corpus_bleu")(spark, dir))
+    val exchanges = plan.linesIterator.filter(_.contains("Exchange")).toSeq
+    assert(exchanges.nonEmpty && exchanges.forall(_.contains("SinglePartition")),
+      s"a keyed exchange came back — grams left their row:\n$plan")
+    assert(!plan.contains("hashpartitioning") && !plan.contains("Join"), plan)
+  }
+
   test("q269 URL dedup: all normalization at the scan side, keyed exchanges only, no join") {
     val plan = planOf(SparkEntry.queries("q269_url_dedup")(spark, dir))
     // two keyed exchanges: the canonical-key dedup + the second phase the

@@ -1,7 +1,15 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.functions.BleuCounts
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.BoundReference
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 
 class EvaluationSpec extends SparkSpec {
   import spark.implicits._
@@ -344,18 +352,18 @@ class EvaluationSpec extends SparkSpec {
 
   test("corpusBleu: identity → 1; clipping caps repeated grams; brevity penalty exact") {
     val self = Seq((1L, "a b c d e f", "a b c d e f")).toDF("id", "c", "r")
-    val s = Evaluation.corpusBleu(self, "id", "c", "r").collect().head
+    val s = Evaluation.corpusBleu(self, "c", "r").collect().head
     assert(s.getDouble(6) == 1.0 && s.getDouble(7) == 1.0)
     // candidate "the the the the" vs reference "the cat": clipped unigram
     // count = min(4, 1) = 1 → p1 = 0.25; no shared bigram → p2 = 0 → BLEU
     // NULL (never log(0))
     val clip = Seq((1L, "the the the the", "the cat x y z")).toDF("id", "c", "r")
-    val c = Evaluation.corpusBleu(clip, "id", "c", "r").collect().head
+    val c = Evaluation.corpusBleu(clip, "c", "r").collect().head
     assert(c.getDouble(2) == 0.25 && c.getDouble(3) == 0.0)
     assert(c.isNullAt(7))
     // strict-prefix candidate: every p_n = 1, BLEU = bp = exp(1 - 6/5)
     val short = Seq((1L, "a b c d e", "a b c d e f")).toDF("id", "c", "r")
-    val sh = Evaluation.corpusBleu(short, "id", "c", "r").collect().head
+    val sh = Evaluation.corpusBleu(short, "c", "r").collect().head
     val bp = BigDecimal(math.exp(1.0 - 6.0 / 5.0))
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     assert(sh.getDouble(6) == bp && sh.getDouble(7) == bp)
@@ -383,7 +391,146 @@ class EvaluationSpec extends SparkSpec {
     // doc 1's candidate gram "x" appears only in doc 2's reference; pair
     // clipping must score p1 = 0 for doc 1's gram
     val pairs = Seq((1L, "x", "a"), (2L, "a", "x")).toDF("id", "c", "r")
-    val r = Evaluation.corpusBleu(pairs, "id", "c", "r").collect().head
+    val r = Evaluation.corpusBleu(pairs, "c", "r").collect().head
     assert(r.getDouble(2) == 0.0) // 0 of 2 unigrams match within-pair
+  }
+
+  /** The (id, n, gram) census formulation corpusBleu replaced, kept as the
+    * reference: candidate and reference melt into one side-tagged gram
+    * stream, the census clips per (id, n, gram), the lengths are a
+    * separate aggregate.
+    */
+  private def censusBleu(pairs: DataFrame, idCol: String, candCol: String,
+                         refCol: String): DataFrame = {
+    val maxN = 4
+    val census = pairs
+      .select(col(idCol).as("__id"),
+        explode(array(
+          struct(col(candCol).as("__text"), lit(1L).as("__c")),
+          struct(col(refCol).as("__text"), lit(0L).as("__c")))).as("__m"))
+      .select(col("__id"), split(col("__m.__text"), " ").as("__t"),
+        col("__m.__c").as("__c"))
+      .select(col("__id"), col("__t"), col("__c"),
+        explode(sequence(lit(1), lit(maxN))).as("__n"))
+      .filter(size(col("__t")) >= col("__n"))
+      .select(col("__id"), col("__n"), col("__c"),
+        explode(expr(
+          "transform(sequence(0, size(__t) - __n), " +
+            "i -> array_join(slice(__t, i + 1, __n), ' '))")).as("__gram"))
+      .groupBy("__id", "__n", "__gram")
+      .agg(sum(col("__c")).as("__c_cand"),
+        sum(lit(1L) - col("__c")).as("__c_ref"))
+    val clipped = census
+      .groupBy("__n").agg(
+        sum(least(col("__c_cand"), col("__c_ref"))).as("__match"),
+        sum(col("__c_cand")).as("__total"))
+    val lens = pairs.agg(
+      sum(size(split(col(candCol), " ")).cast("long")).as("cand_tokens"),
+      sum(size(split(col(refCol), " ")).cast("long")).as("ref_tokens"))
+    val byN = clipped.groupBy()
+      .pivot("__n", (1 to maxN).map(n => n: Any))
+      .agg(first(col("__match")).as("m"), first(col("__total")).as("t"))
+    def p(n: Int): Column =
+      when(col(s"${n}_t") > 0,
+        col(s"${n}_m").cast("double") / col(s"${n}_t").cast("double"))
+    val c = col("cand_tokens").cast("double")
+    val r = col("ref_tokens").cast("double")
+    val bp = when(c >= r, lit(1.0)).otherwise(exp(lit(1.0) - r / c))
+    val logSum = (1 to maxN).map(n => log(p(n))).reduce(_ + _)
+    lens.crossJoin(byN).select(
+      col("cand_tokens"), col("ref_tokens"),
+      round(p(1), 6).as("p1"), round(p(2), 6).as("p2"),
+      round(p(3), 6).as("p3"), round(p(4), 6).as("p4"),
+      round(bp, 6).as("brevity_penalty"),
+      when((1 to maxN).map(n => p(n) > 0.0).reduce(_ && _),
+        round(bp * exp(logSum / lit(maxN.toDouble)), 6)).as("bleu"))
+  }
+
+  /** Field-by-field equality, doubles compared by their bits. */
+  private def assertSameBits(a: Row, b: Row, what: String): Unit = {
+    assert(a.length == b.length, what)
+    (0 until a.length).foreach { i =>
+      val same = (a.get(i), b.get(i)) match {
+        case (x: Double, y: Double) =>
+          java.lang.Double.doubleToRawLongBits(x) ==
+            java.lang.Double.doubleToRawLongBits(y)
+        case (x, y) => x == y
+      }
+      assert(same, s"$what: field ${a.schema.fieldNames(i)}: $a vs $b")
+    }
+  }
+
+  private def assertMatchesCensus(pairs: Seq[(Long, String, String)],
+                                  what: String): Unit = {
+    val df = pairs.toDF("id", "c", "r")
+    assertSameBits(Evaluation.corpusBleu(df, "c", "r").collect().head,
+      censusBleu(df, "id", "c", "r").collect().head, what)
+  }
+
+  test("corpusBleu: the per-row kernel returns the census row bit for bit") {
+    val rnd = new scala.util.Random(7)
+    val vocab = Seq("a", "b", "c", "the", "cat", "é", "ß", "日本", "")
+    def text(): String =
+      if (rnd.nextInt(20) == 0) null
+      else Seq.fill(rnd.nextInt(12))(vocab(rnd.nextInt(vocab.size))).mkString(" ")
+    assertMatchesCensus((1L to 300L).map(i => (i, text(), text())),
+      "seeded random corpus")
+    assertMatchesCensus(Seq((1L, "the the the cat the", "the cat the cat"),
+      (2L, "a a a a", "a a")), "repeated grams")
+    assertMatchesCensus(Seq((1L, "a b", "a b c"), (2L, "x", "x y"),
+      (3L, "a b c", "a")), "texts shorter than n")
+    assertMatchesCensus(Seq((1L, "", ""), (2L, "a b c d e", ""),
+      (3L, "", "a b")), "empty strings")
+    assertMatchesCensus(Seq((1L, " a b", "a b "), (2L, "a  b c", "a  b  c"),
+      (3L, "  ", " "), (4L, " a  b ", " a  b ")), "leading, trailing, double spaces")
+    assertMatchesCensus(Seq((1L, "café naïve 日本 語", "café 日本 語 naïve"),
+      (2L, "ß ß ø", "ø ß")), "multi-byte UTF-8 tokens")
+    assertMatchesCensus(Seq((1L, null, "a b c"), (2L, "a b c d", "a b c d")),
+      "NULL candidate")
+    assertMatchesCensus(Seq((1L, "a b c", null), (2L, "a b c d", "a b c d")),
+      "NULL reference")
+    assertMatchesCensus(Seq((1L, null, "a b c")), "only a NULL candidate")
+    assertMatchesCensus(Seq((1L, "a b c", null)), "only a NULL reference")
+  }
+
+  test("BleuCounts: interpreted eval and codegen return the same counters") {
+    val e = BleuCounts(BoundReference(0, StringType, nullable = true),
+      BoundReference(1, StringType, nullable = true))
+    val gen = GenerateUnsafeProjection.generate(Seq(e))
+    def u(s: String) = if (s == null) null else UTF8String.fromString(s)
+    def longs(r: InternalRow): Seq[Option[Long]] =
+      (0 until BleuCounts.schema.size).map(i =>
+        if (r.isNullAt(i)) None else Some(r.getLong(i)))
+    val cases = Seq(("a b a", "a a b"), ("the the the the", "the cat"),
+      ("", ""), (" a  b ", "a b"), ("café 日本 café", "日本 café"),
+      (null, "a b"), ("a b", null), (null, null), ("a b c d e", "a b c d e"))
+    cases.foreach { case (c, r) =>
+      val in = InternalRow(u(c), u(r))
+      val interp = longs(e.eval(in).asInstanceOf[InternalRow])
+      assert(interp == longs(gen(in).getStruct(0, BleuCounts.schema.size)),
+        s"eval/codegen disagree on ($c, $r)")
+    }
+    // hand-counted: unigrams min(2,2) + min(1,1) = 3 of 3; bigrams
+    // {a b, b a} vs {a a, a b} share one; the trigrams differ
+    val abc = longs(e.eval(InternalRow(u("a b a"), u("a a b"))).asInstanceOf[InternalRow])
+    assert(abc == Seq(3L, 1L, 0L, 0L, 3L, 2L, 1L, 0L, 3L, 3L).map(Some(_)))
+    val nul = longs(e.eval(InternalRow(null, u("a b"))).asInstanceOf[InternalRow])
+    assert(nul == Seq.fill(8)(Some(0L)) ++ Seq(None, Some(2L)))
+  }
+
+  test("corpusBleu persists nothing: no persistent RDD, no SQL-cache entry") {
+    // the session is shared across suites: check the RDDs this call registered
+    val sc = spark.sparkContext
+    def persisted = sc.getPersistentRDDs.keySet
+    val before = persisted
+    val pairs = Seq((1L, "a b c d", "a b c e"), (2L, "x y", "x y z"))
+      .toDF("id", "c", "r")
+    val out = Evaluation.corpusBleu(pairs, "c", "r")
+    out.collect()
+    assert((persisted -- before).isEmpty)
+    assert(!out.queryExecution.executedPlan.toString.contains("InMemory"),
+      out.queryExecution.executedPlan.toString)
+    assert(pairs.storageLevel == StorageLevel.NONE)
+    assert(pairs.select("c", "r").storageLevel == StorageLevel.NONE)
   }
 }
