@@ -56,12 +56,4 @@ object ZOrder {
       shiftleft(shiftright(c.cast("long"), b).bitwiseAND(lit(1L)), b * n + i))
       .reduce(_ + _)
   }
-
-  /** SQL emitter for [[zValueN]]. */
-  def zValueNSql(cols: Seq[String], bits: Int): String = {
-    require(cols.size >= 2 && bits > 0 && cols.size * bits <= 62)
-    val n = cols.size
-    (for (b <- 0 until bits; (c, i) <- cols.zipWithIndex) yield
-      s"((($c >> $b) & 1) << ${b * n + i})").mkString(" + ")
-  }
 }

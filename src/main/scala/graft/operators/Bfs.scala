@@ -8,12 +8,15 @@ import org.apache.spark.sql.functions._
   * neighborhoods, lineage walks) beside [[PageRank]] (influence),
   * [[LabelProp]] (density) and [[Dedup]]'s HashMin (full reachability).
   *
-  * Level-synchronous relaxation: each round joins the CURRENT FRONTIER
-  * (only — not the settled set) to the adjacency list, min-combines new
-  * candidates, and anti-joins out already-settled nodes. Work per round is
-  * O(frontier × avg degree), the textbook distributed-BFS bound; settled
-  * state is (node, level) — data-proportional, never driver-side.
-  * Lineage truncated per round like the other iterative operators.
+  * Level-synchronous relaxation over ONE settled (node, level) state:
+  * round h reads its frontier as the rows at level h − 1, joins only that
+  * frontier (not the settled set) to the adjacency list, min-combines new
+  * candidates, anti-joins out already-settled nodes and appends them at
+  * level h. Work per round is O(frontier × avg degree), the textbook
+  * distributed-BFS bound; settled state is data-proportional, never
+  * driver-side. Lineage truncated per round like the other iterative
+  * operators: one checkpoint per round, whose observed row count also
+  * stops the search early once a round settles no node.
   */
 object Bfs {
 
@@ -23,43 +26,20 @@ object Bfs {
     */
   def levels(edges: DataFrame, srcCol: String, dstCol: String,
              sources: DataFrame, sourceCol: String, maxHops: Int): DataFrame = {
-    val e = edges.select(least(col(srcCol), col(dstCol)).as("u"),
-        greatest(col(srcCol), col(dstCol)).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-    // one in-row explode instead of a self-union (whose two legs each
-    // re-ran e's distinct shuffle), read at the size-derived ⌈rows/64k⌉
-    // width ([[Checkpoints.sized]]); every checkpoint here counts its own
-    // rows ([[Checkpoints.state]]), so the width costs no count job and
-    // each round plans its joins on true sizes
-    val undCp = Checkpoints.state(e.select(explode(array(
-        struct(col("u"), col("v")),
-        struct(col("v").as("u"), col("u").as("v")))).as("__e"))
-      .select(col("__e.u").as("u"), col("__e.v").as("v")))
+    // read at the size-derived ⌈rows/64k⌉ width ([[Checkpoints.sized]])
+    val undCp = Checkpoints.undirected(edges, srcCol, dstCol)
     val und = Checkpoints.sized(undCp.df, undCp.rows)
-    var settled = Checkpoints.state(sources.select(col(sourceCol).as("node"))
-      .distinct().withColumn("level", lit(0L))).df
-    var frontier = settled
-    for (h <- 1 to maxHops) {
-      val next = Checkpoints.state(und.join(frontier, und("u") === frontier("node"))
-        .select(und("v").as("node"))
-        .distinct()
-        .join(settled.select(col("node")), Seq("node"), "left_anti")
-        .withColumn("level", lit(h.toLong))).df
-      val grown = Checkpoints.state(settled.unionByName(next)).df
-      // grown is a materialized COPY — the prior settled and the consumed
-      // frontier are both superseded (round-1 frontier IS settled; the
-      // double release is a harmless repeat unpersist of the same RDD)
-      Checkpoints.release(settled)
-      Checkpoints.release(frontier)
-      settled = grown
-      frontier = next
-    }
-    Checkpoints.release(undCp.df)
-    // the final round's frontier checkpoint is a SEPARATE RDD from settled
-    // (its rows are a subset, its blocks are not) — without this it leaks
-    // one frame per call for the JVM lifetime; the alias guard covers
-    // maxHops == 0, where frontier IS the returned settled
-    if (frontier ne settled) Checkpoints.release(frontier)
-    settled
+    Checkpoints.iterate(Checkpoints.state(sources.select(col(sourceCol).as("node"))
+        .distinct().withColumn("level", lit(0L))),
+      maxHops, held = Seq(undCp.df),
+      step = (settled, h) => {
+        val frontier = settled.df.filter(col("level") === h - 1)
+        settled.df.unionByName(und.join(frontier, und("u") === frontier("node"))
+          .select(und("v").as("node"))
+          .distinct()
+          .join(settled.df.select(col("node")), Seq("node"), "left_anti")
+          .withColumn("level", lit(h.toLong)))
+      },
+      done = (prev, next, _) => next.rows == prev.rows)._1
   }
 }

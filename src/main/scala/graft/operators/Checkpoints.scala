@@ -1,16 +1,17 @@
 package graft.operators
 
+import scala.annotation.tailrec
 import scala.concurrent.{Await, TimeoutException}
 import scala.concurrent.duration._
 
 import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Observation, Row}
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.functions._
 
 /** Loop state for the iterative operators ([[Preference]], [[Dedup]],
   * [[KCore]], [[PageRank]], [[LabelProp]], [[Bfs]]): one eager checkpoint
-  * per round that knows its own size, and the block-manager hygiene that
-  * goes with it.
+  * per round that knows its own size, the round driver ([[iterate]]) all
+  * six loops run on, and the block-manager hygiene that goes with them.
   *
   * WHY THE STATISTICS ARE REWRITTEN: an eager `localCheckpoint` wraps its
   * blocks in a `LogicalRDD` that inherits the ESTIMATED statistics of the
@@ -90,6 +91,64 @@ object Checkpoints {
     val n = math.min(parts.toLong, rows / 65536L + 1L).toInt
     if (n < parts) df.coalesce(n) else df
   }
+
+  /** The round driver of the iterative operators. Round `r` (1 to
+    * `rounds`) checkpoints `step(prev, r)` through [[state]] with the loop's
+    * `observed` aggregates, asks `done(prev, next, r)` whether to stop, and
+    * releases `prev` once `next` holds. `init` is round 0's state, handed
+    * over to the driver: an eager checkpoint, or a lazy frame over `held`
+    * (the loop-invariant frames the rounds read) whose `rows`/`observed`
+    * are whatever the first `step`/`done` reads of them.
+    *
+    * Returns the checkpointed `finish(last)` (the last state itself without
+    * a `finish`; checkpointed when no round ran, so it never reads `held`)
+    * and the number of rounds that ran. Every other frame (each superseded
+    * state, the last one under a `finish`, `held`) is released on return,
+    * and on a throw from `init`, `step`, `done` or `finish` alike.
+    */
+  def iterate(init: => State, rounds: Int, step: (State, Int) => DataFrame,
+              done: (State, State, Int) => Boolean = (_, _, _) => false,
+              observed: Seq[Column] = Nil, held: Seq[DataFrame] = Nil,
+              finish: Option[State => DataFrame] = None): (DataFrame, Int) = {
+    var live = held.toList // what a throw releases
+    try {
+      @tailrec def loop(prev: State, r: Int): (State, Int) =
+        if (r > rounds) (prev, r - 1)
+        else {
+          val next = state(step(prev, r), observed: _*)
+          live = next.df :: live
+          val stop = done(prev, next, r)
+          release(prev.df)
+          live = live.filterNot(_ eq prev.df)
+          if (stop) (next, r) else loop(next, r + 1)
+        }
+      val first = init
+      live = first.df :: live
+      val (last, ran) = loop(first, 1)
+      val out = finish match {
+        case Some(f) => state(f(last)).df
+        case None if ran == 0 => state(last.df).df
+        case None => last.df
+      }
+      live.filterNot(_ eq out).foreach(release)
+      (out, ran)
+    } catch {
+      case t: Throwable => live.foreach(release); throw t
+    }
+  }
+
+  /** The undirected simple graph of `edges` as one eager checkpoint of
+    * (u, v): every distinct non-loop edge in both directions. One in-row
+    * explode symmetrizes it, not a self-union, whose two legs each re-ran
+    * the distinct shuffle.
+    */
+  def undirected(edges: DataFrame, srcCol: String, dstCol: String): State =
+    state(edges.select(least(col(srcCol), col(dstCol)).as("u"),
+        greatest(col(srcCol), col(dstCol)).as("v"))
+      .filter(col("u") =!= col("v")).distinct()
+      .select(explode(array(struct(col("u"), col("v")),
+        struct(col("v").as("u"), col("u").as("v")))).as("__e"))
+      .select(col("__e.u").as("u"), col("__e.v").as("v")))
 
   /** Release the storage behind an eager [[DataFrame.localCheckpoint]] once
     * the frame is SUPERSEDED. Only call after every consumer has

@@ -115,7 +115,7 @@ object Dedup {
     * ([[Checkpoints.state]]) — without lineage truncation the plan doubles
     * per iteration and analysis cost explodes long before data cost
     * matters — and each round's checkpoint is RELEASED once the next
-    * round's is materialized ([[Checkpoints.release]]): the loop holds
+    * round's is materialized ([[Checkpoints.iterate]]): the loop holds
     * exactly one label frame in the block manager, not one per round, and
     * none after it returns or throws. Convergence is detected by the label
     * SUM: labels only ever decrease, so an unchanged sum means a fixpoint —
@@ -126,6 +126,7 @@ object Dedup {
     */
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
                           maxIters: Int = 50): DataFrame = {
+    require(maxIters >= 1, s"maxIters must be >= 1, got $maxIters")
     // symmetrize with ONE in-row explode, not a self-union: the union's
     // two legs each re-evaluated the edge pipeline (for the LSH-pair
     // callers that is the whole shingle+minhash+verify chain) at
@@ -149,29 +150,21 @@ object Dedup {
     val sym = Checkpoints.sized(symCp.df, symCp.rows)
     val nW = sym.rdd.getNumPartitions
     val labelSum = coalesce(sum("component"), lit(0L)).as("__sum")
-    var labels = Checkpoints.state(sym.select(col("__a").as("node")).distinct()
-      .withColumn("component", col("node"))
-      .coalesce(nW), labelSum)
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIters) {
-      val next = Checkpoints.state(
+    Checkpoints.iterate(Checkpoints.state(sym.select(col("__a").as("node"))
+        .distinct().withColumn("component", col("node")).coalesce(nW), labelSum),
+      maxIters, held = Seq(symCp.df), observed = Seq(labelSum),
+      step = (labels, _) =>
         sym.join(labels.df.withColumnRenamed("node", "__b"), "__b")
           .select(col("__a").as("node"), col("component"))
           .union(labels.df)
           .groupBy("node").agg(min("component").as("component"))
           .coalesce(nW), // folds into the reduce stage — narrow, no extra pass
-        labelSum)
-      converged = next.observed.getLong(0) == labels.observed.getLong(0)
-      // next is eagerly materialized — the superseded round's blocks can go
-      Checkpoints.release(labels.df)
-      labels = next
-      iter += 1
-    }
-    Checkpoints.release(symCp.df)
-    if (!converged) Checkpoints.release(labels.df)
-    require(converged, s"connectedComponents did not converge in $maxIters rounds")
-    labels.df
+      done = (prev, next, r) => {
+        val fixed = next.observed.getLong(0) == prev.observed.getLong(0)
+        require(fixed || r < maxIters,
+          s"connectedComponents did not converge in $maxIters rounds")
+        fixed
+      })._1
   }
 
   /** Soft dedup: instead of DROPPING near-duplicates, weight each row by the

@@ -44,41 +44,20 @@ object KCore {
   /** [[peel]] plus the number of rounds actually executed. */
   def peelWithStats(edges: DataFrame, srcCol: String, dstCol: String,
                     k: Int, rounds: Int,
-                    adaptive: Boolean = true): (DataFrame, Int) = {
-    val e0 = edges.select(least(col(srcCol), col(dstCol)).as("u"),
-        greatest(col(srcCol), col(dstCol)).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-    // symmetrize with ONE in-row explode, not a self-union (the union's
-    // two legs each re-ran e0's distinct shuffle at materialization), then
-    // read the loop-invariant edge set at the size-derived ⌈rows/64k⌉
-    // width ([[Checkpoints.sized]]), so the per-round degree aggregate and
-    // semi-joins schedule as many tasks as the DATA warrants (and the
-    // narrow width propagates to every round's checkpoint through the
-    // semi-joins' stream side).
-    val undCp = Checkpoints.state(e0.select(explode(array(
-        struct(col("u"), col("v")),
-        struct(col("v").as("u"), col("u").as("v")))).as("__e"))
-      .select(col("__e.u").as("u"), col("__e.v").as("v")))
-    var und = Checkpoints.sized(undCp.df, undCp.rows)
-    var undState = undCp // the checkpoint und reads (round 0: undCp's view)
-    var executed = 0
-    var converged = false
-    for (r <- 1 to rounds if !converged) {
-      val alive = und.groupBy(col("u")).agg(count(lit(1)).as("__d"))
-        .filter(col("__d") >= k)
-        .select(col("u").as("node"))
-      val next = Checkpoints.state(und
-        .join(alive, und("u") === alive("node"), "left_semi")
-        .join(alive, und("v") === alive("node"), "left_semi"))
-      converged = adaptive && next.rows == undState.rows
-      Checkpoints.release(undState.df) // superseded round's edge set
-      und = next.df
-      undState = next
-      executed = r
-    }
-    val out = Checkpoints.state(
-      und.groupBy(col("u").as("node")).agg(count(lit(1)).as("deg"))).df
-    Checkpoints.release(undState.df)
-    (out, executed)
-  }
+                    adaptive: Boolean = true): (DataFrame, Int) =
+    // the state is the surviving edge set, read at the size-derived
+    // ⌈rows/64k⌉ width ([[Checkpoints.sized]]), so the degree aggregate and
+    // the semi-joins schedule as many tasks as the DATA warrants
+    Checkpoints.iterate(Checkpoints.undirected(edges, srcCol, dstCol), rounds,
+      step = (prev, _) => {
+        val und = Checkpoints.sized(prev.df, prev.rows)
+        val alive = und.groupBy(col("u")).agg(count(lit(1)).as("__d"))
+          .filter(col("__d") >= k)
+          .select(col("u").as("node"))
+        und.join(alive, und("u") === alive("node"), "left_semi")
+          .join(alive, und("v") === alive("node"), "left_semi")
+      },
+      done = (prev, next, _) => adaptive && next.rows == prev.rows,
+      finish = Some(last => Checkpoints.sized(last.df, last.rows)
+        .groupBy(col("u").as("node")).agg(count(lit(1)).as("deg"))))
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -50,50 +50,29 @@ object LabelProp {
   def propagateWithStats(edges: DataFrame, srcCol: String, dstCol: String,
                          rounds: Int,
                          adaptive: Boolean = true): (DataFrame, Int) = {
-    val e = edges.select(least(col(srcCol), col(dstCol)).as("u"),
-        greatest(col(srcCol), col(dstCol)).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-    // one in-row explode instead of a self-union (whose two legs each
-    // re-ran e's distinct shuffle), read at the size-derived ⌈rows/64k⌉
-    // width ([[Checkpoints.sized]]) so the per-round vote join schedules
-    // tasks proportional to the edge DATA, not the session shuffle width;
-    // the checkpoint counts its own rows, so the width costs no count job
-    val undCp = Checkpoints.state(e.select(explode(array(
-        struct(col("u"), col("v")),
-        struct(col("v").as("u"), col("u").as("v")))).as("__e"))
-      .select(col("__e.u").as("u"), col("__e.v").as("v")))
+    // read at the size-derived ⌈rows/64k⌉ width ([[Checkpoints.sized]]) so
+    // the per-round vote join schedules tasks proportional to the edge DATA,
+    // not the session shuffle width
+    val undCp = Checkpoints.undirected(edges, srcCol, dstCol)
     val und = Checkpoints.sized(undCp.df, undCp.rows)
     val nW = und.rdd.getNumPartitions
-    var labels = und.select(col("u").as("node")).distinct()
-      .withColumn("label", col("node"))
     val w = Window.partitionBy("u").orderBy(col("__n").desc, col("label"))
-    var executed = 0
-    var converged = false
-    for (r <- 1 to rounds if !converged) {
-      val votes = und.join(labels, und("v") === labels("node"))
-        .groupBy(und("u"), labels("label"))
+    // round 0's rows are never read: done skips round 1
+    Checkpoints.iterate(Checkpoints.State(und.select(col("u").as("node"))
+        .distinct().withColumn("label", col("node")), -1L, Row.empty),
+      rounds, held = Seq(undCp.df),
+      step = (labels, _) => und.join(labels.df, und("v") === labels.df("node"))
+        .groupBy(und("u"), labels.df("label"))
         .agg(count(lit(1)).as("__n"))
-      val next = Checkpoints.state(votes.withColumn("__rn", row_number().over(w))
+        .withColumn("__rn", row_number().over(w))
         .filter(col("__rn") === 1)
         .select(col("u").as("node"), col("label"))
-        .coalesce(nW)).df // node-sized ≤ edge-sized; folds into the window stage
+        .coalesce(nW), // node-sized ≤ edge-sized; folds into the window stage
       // changed-label count: the node set is constant (und is fixed), so
       // zero changes proves next == labels exactly. Skipped on the last
       // round — the result ships regardless.
-      if (adaptive && r > 1 && r < rounds) {
-        val changed = next
-          .join(labels.withColumnRenamed("label", "__prev"), "node")
-          .filter(col("label") =!= col("__prev")).count()
-        converged = changed == 0L
-      }
-      Checkpoints.release(labels) // superseded round (no-op on round 1)
-      labels = next
-      executed = r
-    }
-    // rounds == 0 returns the init projection OVER und — releasing its
-    // blocks would truncate lineage the result still needs (the PageRank
-    // rounds-0 hazard); after ≥1 round labels is an independent checkpoint
-    if (executed >= 1) Checkpoints.release(undCp.df)
-    (labels, executed)
+      done = (prev, next, r) => adaptive && r > 1 && r < rounds &&
+        next.df.join(prev.df.withColumnRenamed("label", "__prev"), "node")
+          .filter(col("label") =!= col("__prev")).count() == 0L)
   }
 }

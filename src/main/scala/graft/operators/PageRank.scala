@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** PageRank by power iteration (Page, Brin, Motwani & Winograd 1999) over an
@@ -61,7 +61,7 @@ object PageRank {
     // the edge⋈degree join is ROUND-INVARIANT — hoisted out of the loop and
     // checkpointed once as (u, v, deg), each round pays ONE join (ranks
     // attach) instead of two. und is only read here, so its blocks are
-    // released as soon as undDeg holds. rounds == 0 never enters the loop
+    // released as soon as undDeg holds. rounds == 0 never runs a round
     // (the init projection reads deg alone), so the edge-scale build is
     // skipped entirely on that early-exit path. Each round reads undDeg at
     // the size-derived ⌈rows/64k⌉ width ([[Checkpoints.sized]]), not at the
@@ -71,36 +71,23 @@ object PageRank {
           .select(col("u"), col("v"), col("deg"))))
       else None
     Checkpoints.release(und)
+    val undDeg = undDegCp.map(st => Checkpoints.sized(st.df, st.rows))
     val base = (1.0 - d) / n
-    var ranks = deg.df.select(col("u").as("node"), lit(1.0 / n).as("pr"))
-    var executed = 0
-    var converged = false
-    val undDegScan = undDegCp.map(st => Checkpoints.sized(st.df, st.rows))
-    for (undDeg <- undDegScan; r <- 1 to rounds if !converged) {
-      val contribs = undDeg
-        .join(ranks, undDeg("u") === ranks("node"))
-        .select(col("v").as("node"), (col("pr") / col("deg")).as("c"))
-      val next = Checkpoints.state(contribs.groupBy("node")
-        .agg((lit(base) + lit(d) * sum(col("c"))).as("pr"))).df
+    Checkpoints.iterate(Checkpoints.State(
+        deg.df.select(col("u").as("node"), lit(1.0 / n).as("pr")), n, Row.empty),
+      rounds, held = deg.df +: undDegCp.map(_.df).toSeq,
+      step = (ranks, _) => {
+        val e = undDeg.get // present: a round runs only when rounds >= 1
+        e.join(ranks.df, e("u") === ranks.df("node"))
+          .select(col("v").as("node"), (col("pr") / col("deg")).as("c"))
+          .groupBy("node").agg((lit(base) + lit(d) * sum(col("c"))).as("pr"))
+      },
       // L1 delta vs the superseded round: node-sized join of two cached
       // frames, ONE double to the driver. Skipped on the last round (the
       // result ships regardless) and entirely when tol < 0.
-      if (tol >= 0.0 && r > 1 && r < rounds) {
-        val delta = next.join(ranks.withColumnRenamed("pr", "__prev"), "node")
+      done = (prev, next, r) => tol >= 0.0 && r > 1 && r < rounds &&
+        next.df.join(prev.df.withColumnRenamed("pr", "__prev"), "node")
           .agg(coalesce(sum(abs(col("pr") - col("__prev"))), lit(0.0)))
-          .head().getDouble(0)
-        converged = delta <= tol
-      }
-      Checkpoints.release(ranks) // superseded round's blocks (no-op on round 1)
-      ranks = next
-      executed = r
-    }
-    // rounds == 0 returns the lazy init projection OVER deg — releasing
-    // deg's blocks would truncate lineage the result still needs ("block
-    // not found" at materialization). Only once a round has run is ranks
-    // an independent eager checkpoint, making undDeg/deg safely superseded.
-    undDegCp.foreach(st => Checkpoints.release(st.df)) // never read by the init projection
-    if (executed >= 1) Checkpoints.release(deg.df)
-    (ranks, executed)
+          .head().getDouble(0) <= tol)
   }
 }

@@ -114,33 +114,40 @@ object Preference {
     // per-round job over these tiny tables would schedule 32+ tasks —
     // measured: the 10-round loop ran 97 jobs of 32-99 tasks each with
     // half its wall time in scheduling. The directed census is dropped as
-    // soon as both hold (nothing else reads it). Both count their rows in
-    // the checkpointing job, so the ⌈rows/64k⌉ loop-scan width
-    // ([[Checkpoints.sized]]: one task for an items-bounded census, six for
-    // q278's 368k-pair one) costs no extra job.
-    val wl = Checkpoints.state(census.select(col("__w").as("item"),
-        col("__n").as("__wv"), lit(0L).as("__lv"))
-      .unionAll(census.select(col("__l"), lit(0L), col("__n")))
-      .groupBy("item")
-      .agg(sum(col("__wv")).as("__wins"), sum(col("__lv")).as("__losses")))
-    val pc0 = Checkpoints.state(census.select(
-        least(col("__w"), col("__l")).as("__a"),
-        greatest(col("__w"), col("__l")).as("__b"), col("__n"))
-      .groupBy("__a", "__b").agg(sum(col("__n")).as("__n")))
-    census.unpersist(blocking = false)
+    // soon as both hold (nothing else reads it), or when either throws.
+    // Both count their rows in the checkpointing job, so the ⌈rows/64k⌉
+    // loop-scan width ([[Checkpoints.sized]]: one task for an items-bounded
+    // census, six for q278's 368k-pair one) costs no extra job.
+    val (wl, pc0) = try (
+      Checkpoints.state(census.select(col("__w").as("item"),
+          col("__n").as("__wv"), lit(0L).as("__lv"))
+        .unionAll(census.select(col("__l"), lit(0L), col("__n")))
+        .groupBy("item")
+        .agg(sum(col("__wv")).as("__wins"), sum(col("__lv")).as("__losses"))),
+      Checkpoints.state(census.select(
+          least(col("__w"), col("__l")).as("__a"),
+          greatest(col("__w"), col("__l")).as("__b"), col("__n"))
+        .groupBy("__a", "__b").agg(sum(col("__n")).as("__n"))))
+    finally census.unpersist(blocking = false)
     val pc = Checkpoints.sized(pc0.df, pc0.rows)
     val wlLoop = Checkpoints.sized(wl.df, wl.rows)
-    var r = wlLoop.select(col("item"), lit(1000000L).as("__r"))
-    // the eager per-iteration checkpoint sits on RAW (the items-bounded
-    // W_i/d_i frame), and its job observes max(__raw): the rescale is a
-    // literal, so the next ratings are one projection of raw. Both rating
-    // legs read that one projection through aliases, so exchange reuse
-    // builds ONE broadcast of it per round, and raw's true statistics keep
-    // it broadcast in every round (see [[Checkpoints]]). Superseded
-    // checkpoints are released as soon as the next one holds (same
-    // discipline as [[PageRank.pageRankWithStats]]).
-    var prevRaw: Option[DataFrame] = None
-    for (_ <- 1 to iters) {
+    // the iteration state is RAW (the items-bounded W_i/d_i frame),
+    // eagerly checkpointed each round by a job that observes max(__raw):
+    // the rescale is a literal, so the ratings are one projection of raw.
+    // Round 0 is raw ≡ 1 with max 1, the uniform 10⁶ start.
+    def ratings(raw: Checkpoints.State): DataFrame = {
+      // a NULL max (no items) takes the otherwise branch
+      val mx = lit(raw.observed.get(0)).cast(DoubleType)
+      raw.df.select(col("item"),
+        when(mx > 0.0, floor(col("__raw") / mx * lit(1e6) + lit(0.5)))
+          .otherwise(lit(1000000L)).as("__r"))
+    }
+    // one MM round. Both rating legs read the one ratings projection
+    // through aliases, so exchange reuse builds ONE broadcast of it per
+    // round, and raw's true statistics keep it broadcast in every round
+    // (see [[Checkpoints]]).
+    def mm(raw: Checkpoints.State): DataFrame = {
+      val r = ratings(raw)
       val ra = r.as("__ra"); val rb = r.as("__rb")
       val t = pc
         .join(ra, col("__a") === col("__ra.item"))
@@ -168,39 +175,34 @@ object Preference {
         .unionAll(wlLoop.select(col("item"), lit(0L), col("__wins")))
         .groupBy("item")
         .agg(sum(col("__t")).as("__d"), sum(col("__w")).as("__wins"))
-      val rawPlan = d
-        .select(col("item"),
-          when(col("__d") > 0L,
-            col("__wins").cast("double") / col("__d").cast("double"))
-            .otherwise(lit(0.0)).as("__raw"))
-      // CHECKPOINT CADENCE — measured, per-iteration is right: a
-      // checkpoint-every-second-iteration variant (lazy odd rounds riding
-      // into the even round's single materialization) was 1.7-2.6× SLOWER
-      // at sf0.1/96g (13.9-21.5 s vs 8.1 s, quiet box, 3 reps × 2 runs) —
-      // the lazy round's census chain is NOT deduplicated by exchange
-      // reuse across the two ratings legs, so its join+agg executes twice
-      // per materialization. Reverted 2026-08-19 (round 14).
-      val raw = Checkpoints.state(rawPlan, max(col("__raw")).as("__mx"))
-      // a NULL max (no items) takes the otherwise branch
-      val mx = lit(raw.observed.get(0)).cast(DoubleType)
-      r = raw.df.select(col("item"),
-        when(mx > 0.0, floor(col("__raw") / mx * lit(1e6) + lit(0.5)))
-          .otherwise(lit(1000000L)).as("__r"))
-      prevRaw.foreach(Checkpoints.release) // superseded round (r reads raw_i only)
-      prevRaw = Some(raw.df)
+      d.select(col("item"),
+        when(col("__d") > 0L,
+          col("__wins").cast("double") / col("__d").cast("double"))
+          .otherwise(lit(0.0)).as("__raw"))
     }
-    val s = r.agg(sum(col("__r")).as("__s"))
-    val out = Checkpoints.state(wlLoop.join(r, "item").crossJoin(broadcast(s))
-      .select(col("item"), col("__wins").as("wins"),
-        col("__losses").as("losses"),
-        (col("__wins") + col("__losses")).as("n_comparisons"),
-        round(col("__r").cast("double") / col("__s").cast("double"), 6)
-          .as("rating"),
-        row_number().over(
-          Window.orderBy(col("__r").desc, col("item").asc)).as("rank")))
-    Checkpoints.release(wl.df); Checkpoints.release(pc0.df)
-    prevRaw.foreach(Checkpoints.release) // out is eager — last raw superseded
-    out.df
+    // CHECKPOINT CADENCE — measured, per-iteration is right: a
+    // checkpoint-every-second-iteration variant (lazy odd rounds riding
+    // into the even round's single materialization) was 1.7-2.6× SLOWER
+    // at sf0.1/96g (13.9-21.5 s vs 8.1 s, quiet box, 3 reps × 2 runs) —
+    // the lazy round's census chain is NOT deduplicated by exchange
+    // reuse across the two ratings legs, so its join+agg executes twice
+    // per materialization. Reverted 2026-08-19 (round 14).
+    Checkpoints.iterate(Checkpoints.State(
+        wlLoop.select(col("item"), lit(1.0).as("__raw")), wl.rows, Row(1.0)),
+      iters, step = (raw, _) => mm(raw),
+      observed = Seq(max(col("__raw")).as("__mx")), held = Seq(wl.df, pc0.df),
+      finish = Some { raw =>
+        val r = ratings(raw)
+        val s = r.agg(sum(col("__r")).as("__s"))
+        wlLoop.join(r, "item").crossJoin(broadcast(s))
+          .select(col("item"), col("__wins").as("wins"),
+            col("__losses").as("losses"),
+            (col("__wins") + col("__losses")).as("n_comparisons"),
+            round(col("__r").cast("double") / col("__s").cast("double"), 6)
+              .as("rating"),
+            row_number().over(
+              Window.orderBy(col("__r").desc, col("item").asc)).as("rank"))
+      })._1
   }
 
   /** [[bradleyTerry]] over a PRE-AGGREGATED directed census (winner, loser,

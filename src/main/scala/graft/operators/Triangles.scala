@@ -34,7 +34,8 @@ object Triangles {
     // two deg-attach joins and the deg aggregate each re-expand, plus
     // nEdges) and deg three times — without materialization the distinct
     // shuffle re-runs per reference. Persist both (edge- and node-bounded);
-    // released below once the 1-row result is eagerly checkpointed.
+    // released below once the 1-row result is eagerly checkpointed, or
+    // when a job throws.
     val e = edges
       .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"))
       .filter(col("u") =!= col("v"))
@@ -45,39 +46,43 @@ object Triangles {
     val und = e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
     val deg = und.groupBy("u").agg(count(lit(1)).as("deg"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // oriented a→b iff (deg_a, a) < (deg_b, b): join each endpoint's degree
-    // on, keep the lexicographically increasing direction
-    val withDeg = und
-      .join(deg.select(col("u"), col("deg").as("dega")), Seq("u"))
-      .join(deg.select(col("u").as("v"), col("deg").as("degb")), Seq("v"))
-    val oriented = withDeg
-      .filter(col("dega") < col("degb") ||
-        (col("dega") === col("degb") && col("u") < col("v")))
-      .select(col("u").as("a"), col("v").as("b"),
-        col("degb").as("db"))
-      .localCheckpoint(true) // reused by both sides of the wedge join
-    // wedges (a, b, c) with b before c in (deg, id) order; close with b→c
-    val wedges = oriented.select(col("a"), col("b"), col("db"))
-      .join(oriented.select(col("a"), col("b").as("c"), col("db").as("dc")),
-        Seq("a"))
-      .filter(col("db") < col("dc") ||
-        (col("db") === col("dc") && col("b") < col("c")))
-      .select(col("b").as("wa"), col("c").as("wb"))
-    val closed = wedges.join(oriented.select(col("a").as("wa"),
-      col("b").as("wb")), Seq("wa", "wb"))
-    val nNodes = deg.agg(count(lit(1)).as("n_nodes"))
-    val nEdges = e.agg(count(lit(1)).as("n_edges"))
-    // materialize the 1-row result eagerly so oriented's edge-sized
-    // checkpoint blocks can be released NOW — returning a frame lazy over
-    // oriented would leak one oriented copy per call for the JVM lifetime
-    // (the ambient-slowdown class the Checkpoints release discipline kills)
-    val out = closed.agg(count(lit(1)).as("n_triangles"))
-      .crossJoin(broadcast(nNodes)).crossJoin(broadcast(nEdges))
-      .select(col("n_nodes"), col("n_edges"), col("n_triangles"))
-      .localCheckpoint(true)
-    Checkpoints.release(oriented)
-    e.unpersist(blocking = false)
-    deg.unpersist(blocking = false)
-    out
+    try {
+      // oriented a→b iff (deg_a, a) < (deg_b, b): join each endpoint's
+      // degree on, keep the lexicographically increasing direction
+      val withDeg = und
+        .join(deg.select(col("u"), col("deg").as("dega")), Seq("u"))
+        .join(deg.select(col("u").as("v"), col("deg").as("degb")), Seq("v"))
+      val oriented = withDeg
+        .filter(col("dega") < col("degb") ||
+          (col("dega") === col("degb") && col("u") < col("v")))
+        .select(col("u").as("a"), col("v").as("b"),
+          col("degb").as("db"))
+        .localCheckpoint(true) // reused by both sides of the wedge join
+      try {
+        // wedges (a, b, c) with b before c in (deg, id) order; close with b→c
+        val wedges = oriented.select(col("a"), col("b"), col("db"))
+          .join(oriented.select(col("a"), col("b").as("c"), col("db").as("dc")),
+            Seq("a"))
+          .filter(col("db") < col("dc") ||
+            (col("db") === col("dc") && col("b") < col("c")))
+          .select(col("b").as("wa"), col("c").as("wb"))
+        val closed = wedges.join(oriented.select(col("a").as("wa"),
+          col("b").as("wb")), Seq("wa", "wb"))
+        val nNodes = deg.agg(count(lit(1)).as("n_nodes"))
+        val nEdges = e.agg(count(lit(1)).as("n_edges"))
+        // materialize the 1-row result eagerly so oriented's edge-sized
+        // checkpoint blocks can be released NOW — returning a frame lazy
+        // over oriented would leak one oriented copy per call for the JVM
+        // lifetime (the ambient-slowdown class the Checkpoints release
+        // discipline kills)
+        closed.agg(count(lit(1)).as("n_triangles"))
+          .crossJoin(broadcast(nNodes)).crossJoin(broadcast(nEdges))
+          .select(col("n_nodes"), col("n_edges"), col("n_triangles"))
+          .localCheckpoint(true)
+      } finally Checkpoints.release(oriented)
+    } finally {
+      e.unpersist(blocking = false)
+      deg.unpersist(blocking = false)
+    }
   }
 }

@@ -4,14 +4,15 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
-/** The reference's window-function surface (SURVEY §2.6, W4–W9, from
-  * `/root/reference/dbt/models/intermediate/int_driver_lap_features.sql:26-62`):
-  * lag/lead, 5-row rolling mean & sample stddev, partition-wide min, and a
-  * windowed count-distinct.
+/** Window helpers for the reference's window-function surface (SURVEY
+  * §2.6, W4–W9, from its
+  * `dbt/models/intermediate/int_driver_lap_features.sql:26-62`).
+  * The lag/lead and rolling windows (W4–W6) are built inline by
+  * [[graft.pipeline.F1Intermediate]]'s feature layer on one shared
+  * (partition, order) spec, so Spark plans a single shuffle + sort for all
+  * of them.
   *
   * Scale notes:
-  *   - W4–W6 share one (partition, order) spec → Spark plans a single shuffle
-  *     + sort for all of them; keep them on the same [[WindowSpec]].
   *   - Unbounded partition-wide aggregates (W7–W9) are cheaper as a
   *     `groupBy().agg()` + broadcast back-join than as window functions — one
   *     partial-aggregated shuffle instead of a full sort of every row
@@ -23,21 +24,6 @@ object WindowFeatures {
 
   def orderedWindow(partition: Seq[String], order: Seq[Column]): WindowSpec =
     Window.partitionBy(partition.map(col): _*).orderBy(order: _*)
-
-  /** W4: lag + lead of one column over a shared spec. */
-  def withLagLead(df: DataFrame, w: WindowSpec, src: String, prevName: String, nextName: String): DataFrame =
-    df.withColumn(prevName, lag(col(src), 1).over(w))
-      .withColumn(nextName, lead(col(src), 1).over(w))
-
-  /** W5/W6: n-row trailing rolling mean and sample stddev (a 1-row frame
-    * yields NULL stddev in both Snowflake and Spark).
-    */
-  def withRolling(df: DataFrame, w: WindowSpec, src: String, n: Int,
-                  avgName: String, stdName: String): DataFrame = {
-    val frame = w.rowsBetween(-(n - 1), Window.currentRow)
-    df.withColumn(avgName, avg(col(src)).over(frame))
-      .withColumn(stdName, stddev_samp(col(src)).over(frame))
-  }
 
   /** W9 faithful form: exact windowed count-distinct via `size(collect_set)`
     * (Snowflake `count(distinct …) over` has no direct Spark equivalent).

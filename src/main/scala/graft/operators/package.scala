@@ -9,21 +9,17 @@ package graft
   *
   *   - '''Self-cleaning''' — the operator ends in an eager boundary (a
   *     terminal `localCheckpoint` or a bounded `collect`) and releases
-  *     every internal persist/checkpoint before returning, or before
-  *     throwing ([[operators.Triangles.triangleCount]] and the six
-  *     iterative loops: [[operators.Preference.bradleyTerryDistributed]],
+  *     every internal persist/checkpoint it registered, on return and on
+  *     throw ([[operators.Triangles.triangleCount]]). The six iterative
+  *     loops ([[operators.Preference.bradleyTerryDistributed]],
   *     [[operators.Dedup.connectedComponents]], [[operators.KCore.peel]],
   *     [[operators.PageRank.pageRank]], [[operators.LabelProp.propagate]],
-  *     [[operators.Bfs.levels]]). The returned frame is an independent
-  *     `LogicalRDD`; callers own nothing but it, and may release it with
-  *     [[operators.Checkpoints.release]] once consumed. The loops take
-  *     every checkpoint through [[operators.Checkpoints.state]] (one eager
-  *     checkpoint per round that observes its own row count and
-  *     convergence aggregates and carries true statistics) and release
-  *     each as soon as the next round's holds. Two documented exceptions:
-  *     `pageRank` with `rounds = 0` and `propagate` with `rounds = 0`
-  *     return a lazy projection over an internal checkpoint, which the
-  *     session owner drops.
+  *     [[operators.Bfs.levels]]) follow ONE rule, kept in one place, the
+  *     round driver [[operators.Checkpoints.iterate]]: every loop returns
+  *     an independent checkpoint, and releases everything else on return,
+  *     on throw and at round 0. Callers own nothing but the returned
+  *     `LogicalRDD`, and may release it with
+  *     [[operators.Checkpoints.release]] once consumed.
   *
   *   - '''Caller-released''' — the operator returns a LAZY frame that
   *     still READS one or more internal `persist`s (a shared candidate

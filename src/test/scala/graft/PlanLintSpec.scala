@@ -25,6 +25,7 @@ class PlanLintSpec extends SparkSpec {
   test("no declared query plans a non-broadcast cartesian product") {
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
+        val before = spark.sparkContext.getPersistentRDDs.keySet
         val bad =
           try {
             val plan = fn(spark, dir).queryExecution.executedPlan.toString
@@ -34,6 +35,7 @@ class PlanLintSpec extends SparkSpec {
             case e: Throwable => Seq(s"$name: FAILED TO PLAN: ${e.getMessage}")
           }
         spark.catalog.clearCache()
+        releaseSince(before)
         bad
     }
     assert(offenders.isEmpty,

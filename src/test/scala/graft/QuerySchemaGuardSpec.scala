@@ -22,6 +22,7 @@ class QuerySchemaGuardSpec extends SparkSpec {
   test("every declared query output is atomic — no array/map/struct column") {
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
+        val before = spark.sparkContext.getPersistentRDDs.keySet
         val bad =
           try fn(spark, dir).schema.fields.collect {
             case f if nested(f.dataType) =>
@@ -30,7 +31,10 @@ class QuerySchemaGuardSpec extends SparkSpec {
           catch {
             case e: Throwable => Seq(s"$name: FAILED TO BUILD: ${e.getMessage}")
           }
-        spark.catalog.clearCache() // builder queries persist fixture frames
+        // builder queries persist fixture frames, and the loop operators
+        // checkpoint eagerly at build time: drop both
+        spark.catalog.clearCache()
+        releaseSince(before)
         bad
     }
     assert(offenders.isEmpty,

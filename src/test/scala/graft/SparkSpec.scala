@@ -22,6 +22,14 @@ object SparkSpec {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.spark
 
+  /** Unpersist the RDDs registered since `before` (a
+    * `getPersistentRDDs` key set): what one build left behind in this
+    * shared session, checkpoint blocks included.
+    */
+  def releaseSince(before: collection.Set[Int]): Unit =
+    (spark.sparkContext.getPersistentRDDs -- before).values
+      .foreach(_.unpersist(blocking = false))
+
   def strDf(schema: StructType, rows: Seq[Seq[String]]): DataFrame =
     spark.createDataFrame(
       spark.sparkContext.parallelize(rows.map(Row(_: _*)), 2), schema)

@@ -135,4 +135,74 @@ class CheckpointsSpec extends SparkSpec {
     assert(e.getMessage.contains("did not converge"))
     assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
   }
+
+  /** A round driver over `spark.range(5)` that adds one per round, holding
+    * one loop-invariant checkpoint; `step` throws at round `failStepAt` and
+    * `done` at round `failDoneAt` (0: never).
+    */
+  private def failingLoop(failStepAt: Int, failDoneAt: Int): Unit = {
+    val held = Checkpoints.state(spark.range(10).toDF()).df
+    Checkpoints.iterate(Checkpoints.state(spark.range(5).toDF()), rounds = 5,
+      held = Seq(held),
+      step = (prev, r) => {
+        if (r == failStepAt) throw new IllegalStateException(s"step $r")
+        prev.df.select((col("id") + 1).as("id"))
+      },
+      done = (_, _, r) =>
+        if (r == failDoneAt) throw new IllegalStateException(s"done $r")
+        else false)
+  }
+
+  test("iterate: a step or done that throws releases the state and held frames") {
+    val sc = spark.sparkContext
+    Seq((2, 0), (0, 2), (0, 1)).foreach { case (failStep, failDone) =>
+      val before = sc.getPersistentRDDs.keySet
+      intercept[IllegalStateException](failingLoop(failStep, failDone))
+      assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
+        s"step throws at $failStep, done at $failDone")
+    }
+  }
+
+  test("zero-round loops return a frame that release frees completely") {
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L)).toDF("s", "d")
+    val runs = Seq[(String, () => DataFrame)](
+      "PageRank" -> (() => PageRank.pageRank(edges, "s", "d", rounds = 0)),
+      "LabelProp" -> (() => LabelProp.propagate(edges, "s", "d", rounds = 0)),
+      "KCore" -> (() => KCore.peel(edges, "s", "d", k = 2, rounds = 0)),
+      "Bfs" -> (() => Bfs.levels(edges, "s", "d", Seq(1L).toDF("n"), "n",
+        maxHops = 0)))
+    val leaks = runs.map { case (name, run) => name -> leftBehind(run()) }
+      .filter(_._2.nonEmpty)
+    assert(leaks.isEmpty, s"left persisted RDDs: $leaks")
+  }
+
+  test("Bfs stops once a round settles no node, with the same output") {
+    // the path 0-1-2 is exhausted after two hops: the third round settles
+    // nothing, so a 50-hop budget runs the same rounds as a 3-hop one
+    val edges = Seq((0L, 1L), (1L, 2L)).toDF("s", "d")
+    val src = Seq(0L).toDF("n")
+    val outs = collection.mutable.Map.empty[Int, Set[(Long, Long)]]
+    def jobs(hops: Int): Int = jobsOf {
+      val out = Bfs.levels(edges, "s", "d", src, "n", maxHops = hops)
+      outs(hops) = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
+      Checkpoints.release(out)
+    }
+    val (j3, j50) = (jobs(3), jobs(50))
+    assert(j50 == j3, s"maxHops=3: $j3 jobs, maxHops=50: $j50 jobs")
+    assert(outs(3) == Set(0L -> 0L, 1L -> 1L, 2L -> 2L) && outs(50) == outs(3))
+  }
+
+  test("triangleCount releases its persists when a job throws") {
+    // a non-numeric src fails the ANSI cast inside the first eager job
+    // (a range, not a local relation, whose cast the optimizer would fold
+    // and fail before anything persists)
+    val bad = spark.range(1, 5)
+      .select(concat(lit("n"), col("id")).as("s"), (col("id") + 1).as("d"))
+    val sc = spark.sparkContext
+    spark.catalog.clearCache()
+    val before = sc.getPersistentRDDs.keySet
+    intercept[Exception](Triangles.triangleCount(bad, "s", "d"))
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
 }
