@@ -319,10 +319,18 @@ object TextDedup {
     // four consumers (freq, sizes, and both verify legs ta/tb) re-evaluate
     // the shingle explode without materialization — persist the
     // (doc × distinct-shingle)-bounded frame so tokenization runs once.
+    // Both persisted frames are MATERIALIZED before anything plans over
+    // them: a lazy cache lands mid-query, and AQE planned the joins above
+    // it from estimates or from true sizes depending on whether it had
+    // landed yet — under co-tenant load 1 call in 4 ran an extra
+    // 26.9k-row shuffle (1.05 vs 0.47 MB on the benchmark corpus). A
+    // checkpoint (Checkpoints.state) drops the cache's hash-by-id
+    // partitioning, so the rarity window would shuffle on every call.
     // Cleanup: session owner drops persisted blocks between queries.
     val toks = wordShingles(df, idCol, textCol, n)
       .select(col("id"), col("s").as("tok"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    toks.count()
     // global rarity: (document frequency ASC, token ASC) is a total order —
     // used directly, never materialized as a rank (see Scaladoc)
     val freq = toks.groupBy("tok").agg(count(lit(1)).as("df_"))
@@ -338,6 +346,7 @@ object TextDedup {
       // both legs of the candidate self-join read this frame — persist so
       // the rarity window runs once, not per leg
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    prefix.count()
     val cand = prefix.as("x").join(prefix.as("y"),
         col("x.tok") === col("y.tok") && col("x.id") < col("y.id"))
       .select(col("x.id").as("a_id"), col("y.id").as("b_id"))

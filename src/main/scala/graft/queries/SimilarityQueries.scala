@@ -523,7 +523,7 @@ private[graft] object SimilarityQueries {
     /** MIPS store APPEND path (extension; [[graft.sources.AnnStore
       * .appendMips]] — the guarded half of the frozen-banding contract):
       * the store is built once, then a re-keyed copy of the corpus is
-      * APPENDED — banded against the persisted `_graft_ann_meta` stats
+      * APPENDED — banded against the persisted [[graft.sources.StoreState]] stats
       * (never re-derived; [[graft.operators.Similarity
       * .normRangedBucketedFrozen]] replays the build arithmetic
       * bit-identically), with out-of-contract rows rejected whole-batch

@@ -26,9 +26,8 @@ import org.apache.spark.sql.functions._
   *
   * At 100 TB the write is one narrow map + a partitioned write (the only
   * shuffle is the per-band max for MIPS, band-count-sized); appends land in
-  * new files under existing partition dirs (MIPS band maxima are frozen at
-  * first build and must be carried as table metadata — here re-derived at
-  * build time because the store is a deterministic function of the corpus).
+  * new files under existing partition dirs (MIPS band maxima and IVF
+  * centroids are frozen at first build and carried as [[StoreState]]).
   * Partition-count guidance: nPlanes sizes the fan-out — 2^nPlanes · nBands
   * directories — so 8–12 planes (256–4096 buckets) keeps partitions in the
   * 10–100 GB range at corpus scale; the probe cost is corpus/2^nPlanes.
@@ -208,8 +207,8 @@ object AnnStore {
     * [[Similarity.mipsNormRangedTopK]] via `normRangedBucketed`. The
     * banding statistics the construction FROZE at build time — gmin/gmax
     * (band edges) and each band's max ‖x‖² (its augmentation constant) —
-    * are persisted beside the data as `_graft_ann_meta` (underscore-
-    * prefixed: Spark's parquet reader skips it), because they are TABLE
+    * are persisted beside the data as [[StoreState]] (an underscore-
+    * prefixed file Spark's parquet reader skips), because they are TABLE
     * STATE, not a recomputable function of whatever rows happen to be
     * present after appends: [[appendMips]] must band new rows against
     * exactly these values or its buckets disagree with every probe.
@@ -219,7 +218,7 @@ object AnnStore {
     // persist so the data write and the stats collect read ONE
     // materialization — a nondeterministic (or concurrently changing)
     // input would otherwise band the written partitions against one
-    // computation and freeze _graft_ann_meta from another, and every
+    // computation and freeze the store state from another, and every
     // later append/probe would diverge with no error anywhere
     val bucketed = Similarity.normRangedBucketed(emb, vecCol, nPlanes, dim,
       nBands).persist()
@@ -230,14 +229,14 @@ object AnnStore {
       .drop("__gmax", "__gmin", "__m2", "__aug")
       .write.mode("overwrite").partitionBy("band", "bucket").parquet(path)
     // nBands + 1 rows of table state, collected AFTER the data lands (the
-    // overwrite clears the directory, meta included) from the SAME cached
+    // overwrite clears the directory, state included) from the SAME cached
     // frame the write consumed
     val stats = bucketed
       .select(col("__band"), col("__m2"), col("__gmin"), col("__gmax"))
       .distinct().collect()
     val (gmin, gmax) = (stats.head.getDouble(2), stats.head.getDouble(3))
     val bands = stats.map(r => r.getInt(0) -> r.getDouble(1)).toSeq.sortBy(_._1)
-    writeMeta(emb.sparkSession, path, Seq(
+    StoreState.write(emb.sparkSession, path, "mips", Seq(
       "nPlanes" -> nPlanes.toString, "dim" -> dim.toString,
       "nBands" -> nBands.toString,
       // java.lang.Double.toString is shortest-round-trip — parses back exact
@@ -260,7 +259,7 @@ object AnnStore {
   def appendMips(emb: DataFrame, idCol: String, vecCol: String,
                  path: String): Unit = {
     val spark = emb.sparkSession
-    val meta = readMeta(spark, path)
+    val meta = StoreState.read(spark, path, "mips")
     def d(k: String) = meta(k).toDouble
     val nBands = meta("nBands").toInt
     val bandMax = (0 until nBands)
@@ -350,7 +349,7 @@ object AnnStore {
     * third leaf of the store family beside the angular and MIPS layouts.
     * Centroids come from the same deterministic Lloyd training the ad-hoc
     * operators use ([[Similarity.ivfCentroids]]) and are FROZEN as table
-    * state in `_graft_ann_meta` (k×dim shortest-round-trip doubles): like
+    * state in [[StoreState]] (k×dim shortest-round-trip doubles): like
     * the MIPS band maxima, they are NOT a recomputable function of whatever
     * rows are present after appends — [[appendIvf]] must assign new rows
     * against exactly these values or its partitions disagree with every
@@ -373,8 +372,8 @@ object AnnStore {
       cached
         .withColumn("cluster", Similarity.assignCluster(col(vecCol), centroids))
         .write.mode("overwrite").partitionBy("cluster").parquet(path)
-      writeMeta(emb.sparkSession, path, Seq(
-        "kind" -> "ivf", "nClusters" -> nClusters.toString,
+      StoreState.write(emb.sparkSession, path, "ivf", Seq(
+        "nClusters" -> nClusters.toString,
         "dim" -> centroids.head.length.toString) ++
         centroids.zipWithIndex.map { case (c, i) =>
           s"centroid.$i" -> c.map(_.toString).mkString(",")
@@ -553,52 +552,10 @@ object AnnStore {
 
   private[graft] def readIvfCentroids(spark: SparkSession,
                                       path: String): Array[Array[Double]] = {
-    val meta = readMeta(spark, path)
-    require(meta.get("kind").contains("ivf"),
-      s"$path is not a graft IVF store (kind=${meta.getOrElse("kind", "?")})")
+    val meta = StoreState.read(spark, path, "ivf")
     (0 until meta("nClusters").toInt).map { i =>
       meta(s"centroid.$i").split(',').map(_.toDouble)
     }.toArray
-  }
-
-  /** Persist table state beside the data as `_graft_ann_meta` — underscore-
-    * prefixed so Spark's parquet discovery skips it. One `k=v` line per
-    * entry, written atomically enough for this single-writer file (create
-    * with overwrite; appends never touch it). Values are
-    * `java.lang.Double.toString` shortest-round-trip strings where numeric,
-    * so `toDouble` parses back the exact build-time bits.
-    */
-  private def metaPath(path: String) = new org.apache.hadoop.fs.Path(
-    path, "_graft_ann_meta")
-
-  private[graft] def writeMeta(spark: SparkSession, path: String,
-                               entries: Seq[(String, String)]): Unit = {
-    val p = metaPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(entries.map { case (k, v) => s"$k=$v" }
-      .mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  private[graft] def readMeta(spark: SparkSession,
-                              path: String): Map[String, String] = {
-    val p = metaPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p),
-      s"no _graft_ann_meta under $path — not a graft ANN store with table " +
-        "state, or built before metadata persistence; rebuild via " +
-        "writeMips/writeIvf.")
-    val in = fs.open(p)
-    val text = try {
-      val buf = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 8192, false)
-      buf.toString("UTF-8")
-    } finally in.close()
-    text.linesIterator.filter(_.nonEmpty).map { line =>
-      val i = line.indexOf('=')
-      line.substring(0, i) -> line.substring(i + 1)
-    }.toMap
   }
 
   /** Shared probe tail: prune to `bucket = sig` (literal cast to the

@@ -1,7 +1,6 @@
 package graft.sources
 
 import graft.operators.Evaluation
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -32,24 +31,6 @@ import org.apache.spark.sql.functions._
   */
 object ConformalStore {
 
-  private def metaPath(path: String) = new Path(path, "_graft_conf_meta")
-
-  private def writeMeta(spark: SparkSession, path: String): Unit = {
-    val p = metaPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write("kind=conformal\n".getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  private def requireStore(spark: SparkSession, path: String): Unit = {
-    val p = metaPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p),
-      s"no _graft_conf_meta under $path — not a graft conformal store; " +
-        "build via ConformalStore.create.")
-  }
-
   private def censusOf(scores: DataFrame, groupCol: String,
                        scoreCol: String): DataFrame =
     // NULL scores carry no rank information and are excluded exactly as
@@ -64,12 +45,9 @@ object ConformalStore {
     * counts are tagged `first_batch = -1`: earlier than every real batch.
     */
   def create(scores: DataFrame, groupCol: String, scoreCol: String,
-             path: String): Unit = {
-    val counts = censusOf(scores, groupCol, scoreCol)
-      .withColumn("first_batch", lit(-1L))
-    TxLog.overwrite(counts, path, partitionCol = "grp")
-    writeMeta(scores.sparkSession, path)
-  }
+             path: String): Unit =
+    StoreState.create(censusOf(scores, groupCol, scoreCol), path, "grp",
+      "conformal")
 
   /** Exactly-once incremental refresh: the batch's score census lands
     * under the (appId, batchVersion) fence; a replayed batch no-ops.
@@ -78,18 +56,16 @@ object ConformalStore {
   def ingestBatch(spark: SparkSession, scores: DataFrame, groupCol: String,
                   scoreCol: String, path: String, appId: String,
                   batchVersion: Long): Long = {
-    requireStore(spark, path)
-    val fresh = censusOf(scores, groupCol, scoreCol)
-      .withColumn("first_batch", lit(batchVersion))
-    TxLog.appendOnce(fresh, path, appId, batchVersion,
-      partitionCol = Some("grp"))
+    StoreState.read(spark, path, "conformal") // fails on a non-store path
+    StoreState.ingest(censusOf(scores, groupCol, scoreCol), path, "grp",
+      appId, batchVersion)
   }
 
   /** The accumulated census: per-batch rows sum per (grp, score) —
     * exact, order-independent.
     */
   def census(spark: SparkSession, path: String): DataFrame = {
-    requireStore(spark, path)
+    StoreState.read(spark, path, "conformal") // fails on a non-store path
     TxLog.read(spark, path)
       .groupBy("grp", "score").agg(sum(col("n")).as("n"))
   }
@@ -104,7 +80,7 @@ object ConformalStore {
     Evaluation.conformalThresholdFromCensus(census(spark, path),
       "grp", "score", "n", alphaMicro)
 
-  /** CENSUS COMPACTION — the [[PreferenceStore.compactCensus]] rule:
+  /** CENSUS COMPACTION — the [[StoreState.compact]] rule:
     * sum-merge rows of batches STRICTLY EARLIER than `upTo` into one row
     * per (grp, score) tagged with the max merged `first_batch`, keep later
     * rows as-is. Thresholds are unchanged (integer sums re-associate); the
@@ -112,15 +88,7 @@ object ConformalStore {
     * Caller contract: `upTo` at most the ingest watermark. Returns the new
     * table version.
     */
-  def compactCensus(spark: SparkSession, path: String, upTo: Long): Long = {
-    requireStore(spark, path)
-    val cur = TxLog.read(spark, path)
-    val cols = Seq("grp", "score", "n", "first_batch").map(col)
-    val merged = cur.filter(col("first_batch") < upTo)
-      .groupBy("grp", "score")
-      .agg(sum(col("n")).as("n"), max(col("first_batch")).as("first_batch"))
-      .select(cols: _*)
-    val recent = cur.filter(col("first_batch") >= upTo).select(cols: _*)
-    TxLog.overwrite(merged.unionByName(recent), path, partitionCol = "grp")
-  }
+  def compactCensus(spark: SparkSession, path: String, upTo: Long): Long =
+    StoreState.compact(spark, path, "conformal", Seq("grp", "score"), "n",
+      "grp", upTo)
 }

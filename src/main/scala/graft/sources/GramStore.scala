@@ -1,7 +1,6 @@
 package graft.sources
 
 import graft.operators.TextDedup
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -28,45 +27,11 @@ import org.apache.spark.sql.functions._
   */
 object GramStore {
 
-  private def metaPath(path: String) = new Path(path, "_graft_gram_meta")
-
-  private def writeMeta(spark: SparkSession, path: String,
-                        entries: Seq[(String, String)]): Unit = {
-    val p = metaPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(entries.map { case (k, v) => s"$k=$v" }
-      .mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  private[graft] def readMeta(spark: SparkSession,
-                              path: String): Map[String, String] = {
-    val p = metaPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p),
-      s"no _graft_gram_meta under $path — not a graft gram store; build " +
-        "via GramStore.create.")
-    val in = fs.open(p)
-    val text = try {
-      val buf = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 8192, false)
-      buf.toString("UTF-8")
-    } finally in.close()
-    text.linesIterator.filter(_.nonEmpty).map { line =>
-      val i = line.indexOf('=')
-      require(i > 0,
-        s"malformed _graft_gram_meta line under $path: '$line' — not a " +
-          "graft gram store (expected key=value lines)")
-      line.substring(0, i) -> line.substring(i + 1)
-    }.toMap
-  }
+  private[graft] def readMeta(spark: SparkSession, path: String) =
+    StoreState.read(spark, path, "gram")
 
   def minTokensOf(spark: SparkSession, path: String): Int =
     readMeta(spark, path)("minTokens").toInt
-
-  private def bucketed(grams: DataFrame, nBuckets: Int): DataFrame =
-    grams.withColumn("bucket", pmod(xxhash64(col("h")), lit(nBuckets)))
 
   /** One-time census build from the existing corpus: distinct gram
     * fingerprints, hash-bucketed partitions, `minTokens` frozen as table
@@ -78,14 +43,11 @@ object GramStore {
   def create(docs: DataFrame, idCol: String, textCol: String, path: String,
              minTokens: Int = 50, nBuckets: Int = 16): Unit = {
     require(nBuckets >= 1, s"nBuckets must be >= 1, got $nBuckets")
-    val grams = bucketed(
+    val grams = StoreState.bucketed(
       TextDedup.gramWindows(docs, idCol, textCol, minTokens)
         .select(col("h")).distinct(), nBuckets)
-      .withColumn("first_batch", lit(-1L))
-    TxLog.overwrite(grams, path, partitionCol = "bucket")
-    writeMeta(docs.sparkSession, path, Seq(
-      "kind" -> "gram", "minTokens" -> minTokens.toString,
-      "nBuckets" -> nBuckets.toString))
+    StoreState.create(grams, path, "bucket", "gram", Seq(
+      "minTokens" -> minTokens.toString, "nBuckets" -> nBuckets.toString))
   }
 
   /** Read-only probe: maximal duplicated spans of `batch` against
@@ -127,13 +89,11 @@ object GramStore {
     // census as of strictly-earlier batches — the replay-deterministic view
     val earlier = TxLog.read(spark, path)
       .filter(col("first_batch") < batchVersion).select(col("h"))
-    val fresh = bucketed(
+    val fresh = StoreState.bucketed(
       inWins.select(col("h")).distinct()
         .join(TxLog.read(spark, path).select(col("h")), Seq("h"),
           "left_anti"), nBuckets)
-      .withColumn("first_batch", lit(batchVersion))
-    TxLog.appendOnce(fresh, path, appId, batchVersion,
-      partitionCol = Some("bucket"))
+    StoreState.ingest(fresh, path, "bucket", appId, batchVersion)
     spansAgainst(batch, idCol, textCol, minTokens, earlier)
   }
 }

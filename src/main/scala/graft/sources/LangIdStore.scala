@@ -1,7 +1,6 @@
 package graft.sources
 
 import graft.operators.LangId
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -33,42 +32,8 @@ import org.apache.spark.sql.functions._
   */
 object LangIdStore {
 
-  private def metaPath(path: String) = new Path(path, "_graft_langid_meta")
-
-  private def writeMeta(spark: SparkSession, path: String,
-                        entries: Seq[(String, String)]): Unit = {
-    val p = metaPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(entries.map { case (k, v) => s"$k=$v" }
-      .mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  private[graft] def readMeta(spark: SparkSession,
-                              path: String): Map[String, String] = {
-    val p = metaPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p),
-      s"no _graft_langid_meta under $path — not a graft langid store; " +
-        "build via LangIdStore.create.")
-    val in = fs.open(p)
-    val text = try {
-      val buf = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 8192, false)
-      buf.toString("UTF-8")
-    } finally in.close()
-    text.linesIterator.filter(_.nonEmpty).map { line =>
-      val i = line.indexOf('=')
-      require(i > 0,
-        s"malformed _graft_langid_meta line under $path: '$line'")
-      line.substring(0, i) -> line.substring(i + 1)
-    }.toMap
-  }
-
-  private def countsOf(labeled: DataFrame, langCol: String, textCol: String,
-                       buckets: Int): DataFrame =
-    LangId.trigramCounts(labeled, langCol, textCol, buckets)
+  private def bucketsOf(spark: SparkSession, path: String): Int =
+    StoreState.read(spark, path, "langid")("buckets").toInt
 
   /** One-time census build from an initial labeled corpus. Pre-existing
     * counts are tagged `first_batch = -1`: earlier than every real batch.
@@ -77,11 +42,8 @@ object LangIdStore {
   def create(labeled: DataFrame, langCol: String, textCol: String,
              path: String, buckets: Int = 4096): Unit = {
     require(buckets >= 2, s"buckets must be >= 2, got $buckets")
-    val counts = countsOf(labeled, langCol, textCol, buckets)
-      .withColumn("first_batch", lit(-1L))
-    TxLog.overwrite(counts, path, partitionCol = "lang")
-    writeMeta(labeled.sparkSession, path, Seq(
-      "kind" -> "langid", "buckets" -> buckets.toString))
+    StoreState.create(LangId.trigramCounts(labeled, langCol, textCol,
+      buckets), path, "lang", "langid", Seq("buckets" -> buckets.toString))
   }
 
   /** Exactly-once incremental refresh: the batch's per-(lang, bucket)
@@ -92,13 +54,9 @@ object LangIdStore {
     */
   def ingestBatch(spark: SparkSession, labeled: DataFrame, langCol: String,
                   textCol: String, path: String, appId: String,
-                  batchVersion: Long): Long = {
-    val buckets = readMeta(spark, path)("buckets").toInt
-    val fresh = countsOf(labeled, langCol, textCol, buckets)
-      .withColumn("first_batch", lit(batchVersion))
-    TxLog.appendOnce(fresh, path, appId, batchVersion,
-      partitionCol = Some("lang"))
-  }
+                  batchVersion: Long): Long =
+    StoreState.ingest(LangId.trigramCounts(labeled, langCol, textCol,
+      bucketsOf(spark, path)), path, "lang", appId, batchVersion)
 
   /** The frozen profiles the store currently holds: per-batch count rows
     * sum per (lang, bucket) — exact, order-independent — then normalize to
@@ -116,11 +74,11 @@ object LangIdStore {
     */
   def classify(spark: SparkSession, path: String, docs: DataFrame,
                idCol: String, textCol: String): DataFrame = {
-    val buckets = readMeta(spark, path)("buckets").toInt
+    val buckets = bucketsOf(spark, path)
     LangId.classify(docs, idCol, textCol, profiles(spark, path), buckets)
   }
 
-  /** CENSUS COMPACTION — the [[LineStore.compactCensus]] rule at profile
+  /** CENSUS COMPACTION — the [[StoreState.compact]] rule at profile
     * granularity: sum-merge count rows of batches STRICTLY EARLIER than
     * `upTo` into one row per (lang, bucket) tagged with the max merged
     * `first_batch`, keep later rows as-is. Profiles are unchanged (integer
@@ -128,16 +86,7 @@ object LangIdStore {
     * overwrite so replays still no-op. Caller contract: `upTo` at most the
     * ingest watermark. Returns the new table version.
     */
-  def compactCounts(spark: SparkSession, path: String, upTo: Long): Long = {
-    readMeta(spark, path) // fail loudly on a non-langid-store path
-    val cur = TxLog.read(spark, path)
-    val cols = Seq("lang", "bucket", "cnt", "first_batch").map(col)
-    val merged = cur.filter(col("first_batch") < upTo)
-      .groupBy("lang", "bucket")
-      .agg(sum(col("cnt")).as("cnt"),
-        max(col("first_batch")).as("first_batch"))
-      .select(cols: _*)
-    val recent = cur.filter(col("first_batch") >= upTo).select(cols: _*)
-    TxLog.overwrite(merged.unionByName(recent), path, partitionCol = "lang")
-  }
+  def compactCounts(spark: SparkSession, path: String, upTo: Long): Long =
+    StoreState.compact(spark, path, "langid", Seq("lang", "bucket"), "cnt",
+      "lang", upTo)
 }

@@ -1,7 +1,6 @@
 package graft.sources
 
 import graft.operators.TextDedup
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -32,64 +31,11 @@ import org.apache.spark.sql.functions._
   */
 object LineStore {
 
-  private def metaPath(path: String) = new Path(path, "_graft_line_meta")
+  private[graft] def readMeta(spark: SparkSession, path: String) =
+    StoreState.read(spark, path, "line")
 
-  private def writeMeta(spark: SparkSession, path: String,
-                        entries: Seq[(String, String)]): Unit = {
-    val p = metaPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(entries.map { case (k, v) => s"$k=$v" }
-      .mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  private[graft] def readMeta(spark: SparkSession,
-                              path: String): Map[String, String] = {
-    val p = metaPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p),
-      s"no _graft_line_meta under $path — not a graft line store; build " +
-        "via LineStore.create.")
-    val in = fs.open(p)
-    val text = try {
-      val buf = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 8192, false)
-      buf.toString("UTF-8")
-    } finally in.close()
-    text.linesIterator.filter(_.nonEmpty).map { line =>
-      val i = line.indexOf('=')
-      require(i > 0,
-        s"malformed _graft_line_meta line under $path: '$line' — not a " +
-          "graft line store (expected key=value lines)")
-      line.substring(0, i) -> line.substring(i + 1)
-    }.toMap
-  }
-
-  // the meta file is line-based key=value — a unit pattern containing
-  // literal newlines ("\n", "\n\n+") must round-trip through an escape
-  private def encodePattern(p: String): String =
-    p.replace("\\", "\\\\").replace("\n", "\\n")
-  private def decodePattern(p: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < p.length) {
-      if (p.charAt(i) == '\\' && i + 1 < p.length) {
-        p.charAt(i + 1) match {
-          case 'n' => sb.append('\n'); i += 2
-          case '\\' => sb.append('\\'); i += 2
-          case c => sb.append(c); i += 2
-        }
-      } else { sb.append(p.charAt(i)); i += 1 }
-    }
-    sb.toString
-  }
-
-  private[graft] def unitPatternOf(spark: SparkSession, path: String): String =
-    decodePattern(readMeta(spark, path)("unitPattern"))
-
-  private def bucketed(census: DataFrame, nBuckets: Int): DataFrame =
-    census.withColumn("bucket", pmod(xxhash64(col("h")), lit(nBuckets)))
+  private[graft] def unitPatternOf(spark: SparkSession, path: String) =
+    readMeta(spark, path)("unitPattern")
 
   /** Per-hash occurrence counts of the non-blank normalized units of
     * `docs` — the append-only census delta one corpus slice contributes.
@@ -109,13 +55,11 @@ object LineStore {
              nBuckets: Int = 16): Unit = {
     require(nBuckets >= 1, s"nBuckets must be >= 1, got $nBuckets")
     require(minCount >= 2, s"minCount must be >= 2, got $minCount")
-    val census = bucketed(censusOf(docs, idCol, textCol, unitPattern),
-      nBuckets).withColumn("first_batch", lit(-1L))
-    TxLog.overwrite(census, path, partitionCol = "bucket")
-    writeMeta(docs.sparkSession, path, Seq(
-      "kind" -> "line", "minCount" -> minCount.toString,
-      "unitPattern" -> encodePattern(unitPattern),
-      "nBuckets" -> nBuckets.toString))
+    StoreState.create(
+      StoreState.bucketed(censusOf(docs, idCol, textCol, unitPattern),
+        nBuckets), path, "bucket", "line", Seq(
+        "minCount" -> minCount.toString, "unitPattern" -> unitPattern,
+        "nBuckets" -> nBuckets.toString))
   }
 
   /** Read-only probe: `batch` cleaned against (census ∪ batch) —
@@ -127,7 +71,7 @@ object LineStore {
                  idCol: String, textCol: String): DataFrame = {
     val meta = readMeta(spark, path)
     cleanAgainst(batch, idCol, textCol, meta("minCount").toInt,
-      decodePattern(meta("unitPattern")), TxLog.read(spark, path))
+      meta("unitPattern"), TxLog.read(spark, path))
   }
 
   private def cleanAgainst(batch: DataFrame, idCol: String, textCol: String,
@@ -151,56 +95,24 @@ object LineStore {
                   textCol: String, path: String, appId: String,
                   batchVersion: Long): DataFrame = {
     val meta = readMeta(spark, path)
-    val (minCount, unitPattern) =
-      (meta("minCount").toInt, decodePattern(meta("unitPattern")))
-    val nBuckets = meta("nBuckets").toInt
-    val fresh = bucketed(censusOf(batch, idCol, textCol, unitPattern),
-      nBuckets).withColumn("first_batch", lit(batchVersion))
-    TxLog.appendOnce(fresh, path, appId, batchVersion,
-      partitionCol = Some("bucket"))
-    cleanAgainst(batch, idCol, textCol, minCount, unitPattern,
+    val unitPattern = meta("unitPattern")
+    StoreState.ingest(
+      StoreState.bucketed(censusOf(batch, idCol, textCol, unitPattern),
+        meta("nBuckets").toInt), path, "bucket", appId, batchVersion)
+    cleanAgainst(batch, idCol, textCol, meta("minCount").toInt, unitPattern,
       TxLog.read(spark, path).filter(col("first_batch") < batchVersion))
   }
 
-  /** CENSUS COMPACTION — bound the per-hash row growth (the append-only
-    * design keeps one counted row per batch that saw a hash, so a hot
-    * boilerplate hash accumulates a row per ingest forever): sum-merge
-    * every census row of batches STRICTLY EARLIER than `upTo` into ONE row
-    * per hash. The merged row carries `first_batch = max(merged
-    * first_batch)` — so any strictly-earlier-batch fence with
-    * `batchVersion >= upTo` (every future ingest, and a replay of the
-    * latest batch) sees EXACTLY the per-hash sums it saw before: the
-    * merged row is inside its `first_batch < batchVersion` window and
-    * carries the same total (probe bit-identity is spec'd). Rows of
-    * batches `>= upTo` are kept as-is.
-    *
-    * One [[TxLog.overwrite]] manifest swap — readers see the old or the
-    * new census, never a mix, and the `@txn:` exactly-once watermarks ride
-    * through the overwrite untouched, so a replayed batch's append still
-    * no-ops after compaction.
-    *
-    * CALLER CONTRACT: only compact past batches that can no longer replay
-    * — `upTo` at most the ingest watermark (a replay of a batch `< upTo`
-    * would see the merged row excluded by its own fence and under-count;
-    * streaming restarts only ever replay the latest uncommitted batch, so
-    * `upTo = <last committed batchVersion>` is always safe). Run every
-    * K-th ingest, the [[TxLog]] checkpoint cadence.
-    *
-    * Returns the new table version. Scale shape: one census-sized
-    * hash-aggregate (the census is distinct-lines-sized, not corpus-
-    * sized), bucket partitioning preserved so probes keep their pruning.
+  /** CENSUS COMPACTION — [[StoreState.compact]] per hash: sum-merge the
+    * counted rows of batches STRICTLY EARLIER than `upTo` (a hot
+    * boilerplate hash gains a row per ingest) into one row per hash, keep
+    * later rows as-is; probes stay bit-identical (spec'd) and bucket
+    * partitioning is preserved so probes keep their pruning. Caller
+    * contract: `upTo` at most the ingest watermark — run every K-th
+    * ingest, the [[TxLog]] checkpoint cadence. Returns the new table
+    * version. Scale shape: one census-sized hash-aggregate (the census is
+    * distinct-lines-sized, not corpus-sized).
     */
-  def compactCensus(spark: SparkSession, path: String, upTo: Long): Long = {
-    readMeta(spark, path) // fail loudly on a non-line-store path
-    val cur = TxLog.read(spark, path)
-    val cols = Seq("h", "cnt", "bucket", "first_batch").map(col)
-    val merged = cur.filter(col("first_batch") < upTo)
-      .groupBy("bucket", "h")
-      .agg(sum(col("cnt")).as("cnt"),
-        max(col("first_batch")).as("first_batch"))
-      .select(cols: _*)
-    val recent = cur.filter(col("first_batch") >= upTo).select(cols: _*)
-    TxLog.overwrite(merged.unionByName(recent), path,
-      partitionCol = "bucket")
-  }
+  def compactCensus(spark: SparkSession, path: String, upTo: Long): Long =
+    StoreState.compact(spark, path, "line", Seq("h"), "cnt", "bucket", upTo)
 }

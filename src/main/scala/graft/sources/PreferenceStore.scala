@@ -1,7 +1,6 @@
 package graft.sources
 
 import graft.operators.Preference
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -30,24 +29,6 @@ import org.apache.spark.sql.functions._
   */
 object PreferenceStore {
 
-  private def metaPath(path: String) = new Path(path, "_graft_pref_meta")
-
-  private def writeMeta(spark: SparkSession, path: String): Unit = {
-    val p = metaPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write("kind=preference\n".getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  private def requireStore(spark: SparkSession, path: String): Unit = {
-    val p = metaPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p),
-      s"no _graft_pref_meta under $path — not a graft preference store; " +
-        "build via PreferenceStore.create.")
-  }
-
   private def censusOf(comparisons: DataFrame, winnerCol: String,
                        loserCol: String): DataFrame =
     // NULL winner/loser rows carry no pairwise information — excluded at
@@ -63,12 +44,9 @@ object PreferenceStore {
     * counts are tagged `first_batch = -1`: earlier than every real batch.
     */
   def create(comparisons: DataFrame, winnerCol: String, loserCol: String,
-             path: String): Unit = {
-    val counts = censusOf(comparisons, winnerCol, loserCol)
-      .withColumn("first_batch", lit(-1L))
-    TxLog.overwrite(counts, path, partitionCol = "winner")
-    writeMeta(comparisons.sparkSession, path)
-  }
+             path: String): Unit =
+    StoreState.create(censusOf(comparisons, winnerCol, loserCol), path,
+      "winner", "preference")
 
   /** Exactly-once incremental refresh: the batch's directed census lands
     * under the (appId, batchVersion) fence; a replayed batch no-ops.
@@ -77,18 +55,16 @@ object PreferenceStore {
   def ingestBatch(spark: SparkSession, comparisons: DataFrame,
                   winnerCol: String, loserCol: String, path: String,
                   appId: String, batchVersion: Long): Long = {
-    requireStore(spark, path)
-    val fresh = censusOf(comparisons, winnerCol, loserCol)
-      .withColumn("first_batch", lit(batchVersion))
-    TxLog.appendOnce(fresh, path, appId, batchVersion,
-      partitionCol = Some("winner"))
+    StoreState.read(spark, path, "preference") // fails on a non-store path
+    StoreState.ingest(censusOf(comparisons, winnerCol, loserCol), path,
+      "winner", appId, batchVersion)
   }
 
   /** The accumulated directed census: per-batch rows sum per
     * (winner, loser) — exact, order-independent.
     */
   def census(spark: SparkSession, path: String): DataFrame = {
-    requireStore(spark, path)
+    StoreState.read(spark, path, "preference") // fails on a non-store path
     TxLog.read(spark, path)
       .groupBy("winner", "loser").agg(sum(col("n")).as("n"))
   }
@@ -102,7 +78,7 @@ object PreferenceStore {
     Preference.bradleyTerryFromCensus(census(spark, path),
       "winner", "loser", "n", iters, maxItems)
 
-  /** CENSUS COMPACTION — the [[LineStore.compactCensus]] rule: sum-merge
+  /** CENSUS COMPACTION — the [[StoreState.compact]] rule: sum-merge
     * rows of batches STRICTLY EARLIER than `upTo` into one row per
     * (winner, loser) tagged with the max merged `first_batch`, keep later
     * rows as-is. Ratings are unchanged (integer sums re-associate); the
@@ -110,16 +86,7 @@ object PreferenceStore {
     * Caller contract: `upTo` at most the ingest watermark. Returns the new
     * table version.
     */
-  def compactCensus(spark: SparkSession, path: String, upTo: Long): Long = {
-    requireStore(spark, path)
-    val cur = TxLog.read(spark, path)
-    val cols = Seq("winner", "loser", "n", "first_batch").map(col)
-    val merged = cur.filter(col("first_batch") < upTo)
-      .groupBy("winner", "loser")
-      .agg(sum(col("n")).as("n"), max(col("first_batch")).as("first_batch"))
-      .select(cols: _*)
-    val recent = cur.filter(col("first_batch") >= upTo).select(cols: _*)
-    TxLog.overwrite(merged.unionByName(recent), path,
-      partitionCol = "winner")
-  }
+  def compactCensus(spark: SparkSession, path: String, upTo: Long): Long =
+    StoreState.compact(spark, path, "preference", Seq("winner", "loser"),
+      "n", "winner", upTo)
 }

@@ -879,8 +879,8 @@ object TxLog {
     }
   }
 
-  private def readKvFile(spark: SparkSession, path: String,
-                         file: String): Seq[(String, String)] = {
+  private[sources] def readKvFile(spark: SparkSession, path: String,
+                                  file: String): Seq[(String, String)] = {
     val f = fs(spark, path)
     val p = new Path(path, file)
     if (!f.exists(p)) return Nil
@@ -894,8 +894,9 @@ object TxLog {
     }
   }
 
-  private def writeKvFile(spark: SparkSession, path: String, file: String,
-                          kvs: Seq[(String, String)]): Unit = {
+  private[sources] def writeKvFile(spark: SparkSession, path: String,
+                                   file: String,
+                                   kvs: Seq[(String, String)]): Unit = {
     val f = fs(spark, path)
     f.mkdirs(new Path(path))
     val tmp = new Path(path, s".$file-${UUID.randomUUID()}")

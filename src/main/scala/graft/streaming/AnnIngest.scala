@@ -5,7 +5,7 @@ import graft.operators.Similarity
 import graft.sources.TxLog
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming embeddings → the persisted angular ANN layout, VERSIONED: the
   * continuous-ingest twin of [[graft.sources.AnnStore.appendAngular]],
@@ -52,19 +52,12 @@ object AnnIngest {
     */
   def embeddingIngest(emb: DataFrame, path: String, checkpoint: String,
                       vecCol: String, nPlanes: Int, dim: Int,
-                      appId: Option[String] = None): StreamingQuery =
-    emb.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // TxLog appIds are manifest tokens (no '/', tabs, newlines) — fold
-        // the path separators out of the default identity
-        ingestBatch(batch, path, vecCol, nPlanes, dim,
-          appId.getOrElse(s"ann-ingest:${path.replace('/', '|')}"),
-          batchId): Unit
-      }
-      .start()
+                      appId: Option[String] = None): StreamingQuery = {
+    val id = appId.getOrElse(AvailableNow.appId("ann", path))
+    AvailableNow.start(emb, checkpoint) { (batch, batchId) =>
+      ingestBatch(batch, path, vecCol, nPlanes, dim, id, batchId): Unit
+    }
+  }
 
   /** Probe the versioned store: ONE snapshot resolves the manifest (all of
     * every committed batch, none of any in-flight one), [[TxLog.readKey]]

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.sources.ConformalStore
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Continuous conformal-calibration accumulation — the streaming front of
   * [[ConformalStore]] (the [[LineIngest]] / [[PreferenceIngest]]
@@ -27,17 +27,10 @@ object ConformalIngest {
                       scoreCol: String, censusPath: String,
                       checkpoint: String,
                       appId: Option[String] = None): StreamingQuery = {
-    val id = appId.getOrElse(
-      s"conformal-ingest:${censusPath.replace('/', '|')}")
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ConformalStore.ingestBatch(batch.sparkSession, batch, groupCol,
-          scoreCol, censusPath, id, batchId)
-        ()
-      }
-      .start()
+    val id = appId.getOrElse(AvailableNow.appId("conformal", censusPath))
+    AvailableNow.start(stream, checkpoint) { (batch, batchId) =>
+      ConformalStore.ingestBatch(batch.sparkSession, batch, groupCol,
+        scoreCol, censusPath, id, batchId): Unit
+    }
   }
 }

@@ -5,7 +5,7 @@ import graft.sources.TxLog
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming corpus ingestion with inline dedup — the continuous-crawl twin
   * of q57's batch form: every micro-batch of documents is (1) exact-deduped
@@ -104,16 +104,11 @@ object CorpusIngest {
                      n: Int = 3, k: Int = 16, bands: Int = 8,
                      minJaccard: Double = 0.8,
                      corpusBloomItems: Long = 0L): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val accepted = acceptBatch(batch, acceptedPath, n, k, bands,
-          minJaccard, corpusBloomItems)
-        // the survivors landed in the TxLog; without this each micro-batch
-        // leaks its pinned frame in the block manager for the stream's life
-        graft.operators.Checkpoints.release(accepted)
-      }
-      .start()
+    AvailableNow.start(docs, checkpoint) { (batch, _) =>
+      val accepted = acceptBatch(batch, acceptedPath, n, k, bands,
+        minJaccard, corpusBloomItems)
+      // the survivors landed in the TxLog; without this each micro-batch
+      // leaks its pinned frame in the block manager for the stream's life
+      graft.operators.Checkpoints.release(accepted)
+    }
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.sources.TxLog
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming ingest with a built-in DATA-DRIFT monitor — the continuous
   * twin of [[graft.operators.Expectations.snapshotDrift]]: every
@@ -274,17 +274,10 @@ object DriftStream {
                       partitionCol: String, cols: Seq[String],
                       appId: Option[String] = None,
                       kmvCols: Map[String, Int] = Map.empty): StreamingQuery = {
-    // TxLog appIds are manifest tokens (no '/', tabs, newlines) — fold the
-    // path separators out of the default identity, like AnnIngest
-    val id = appId.getOrElse(s"drift-ingest:${dataPath.replace('/', '|')}")
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatch(batch.sparkSession, batch, dataPath, monitorPath,
-          partitionCol, cols, id, batchId, kmvCols)
-      }
-      .start()
+    val id = appId.getOrElse(AvailableNow.appId("drift", dataPath))
+    AvailableNow.start(stream, checkpoint) { (batch, batchId) =>
+      ingestBatch(batch.sparkSession, batch, dataPath, monitorPath,
+        partitionCol, cols, id, batchId, kmvCols)
+    }
   }
 }

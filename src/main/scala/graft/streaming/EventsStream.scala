@@ -3,7 +3,7 @@ package graft.streaming
 import graft.sources.Sinks
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming re-expression of the reference's simulated realtime
@@ -45,14 +45,9 @@ object EventsStream {
     */
   def sessionReplaceSink(events: DataFrame, path: String,
                          checkpoint: String): StreamingQuery =
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Sinks.replaceByKey(batch, path, "user_id")
-      }
-      .start()
+    AvailableNow.start(events, checkpoint) { (batch, _) =>
+      Sinks.replaceByKey(batch, path, "user_id")
+    }
 
   /** File-source stream over a directory of parquet events (micro-batch
     * reading, used by the specs to drive the above synchronously).

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.sources.{GramStore, TxLog}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Continuous exact-substring dedup — the streaming front of
   * [[GramStore]]: every micro-batch extends the persisted gram census
@@ -47,15 +47,10 @@ object GramIngest {
                       censusPath: String, spansPath: String,
                       checkpoint: String,
                       appId: Option[String] = None): StreamingQuery = {
-    val id = appId.getOrElse(s"gram-ingest:${censusPath.replace('/', '|')}")
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatch(batch.sparkSession, batch, idCol, textCol, censusPath,
-          spansPath, id, batchId)
-      }
-      .start()
+    val id = appId.getOrElse(AvailableNow.appId("gram", censusPath))
+    AvailableNow.start(stream, checkpoint) { (batch, batchId) =>
+      ingestBatch(batch.sparkSession, batch, idCol, textCol, censusPath,
+        spansPath, id, batchId)
+    }
   }
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.sources.{LineStore, TxLog}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Continuous CCNet line/paragraph dedup — the streaming front of
   * [[LineStore]] and the line-granularity sibling of [[GramIngest]]:
@@ -47,15 +47,10 @@ object LineIngest {
                       censusPath: String, cleanPath: String,
                       checkpoint: String,
                       appId: Option[String] = None): StreamingQuery = {
-    val id = appId.getOrElse(s"line-ingest:${censusPath.replace('/', '|')}")
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatch(batch.sparkSession, batch, idCol, textCol, censusPath,
-          cleanPath, id, batchId)
-      }
-      .start()
+    val id = appId.getOrElse(AvailableNow.appId("line", censusPath))
+    AvailableNow.start(stream, checkpoint) { (batch, batchId) =>
+      ingestBatch(batch.sparkSession, batch, idCol, textCol, censusPath,
+        cleanPath, id, batchId)
+    }
   }
 }

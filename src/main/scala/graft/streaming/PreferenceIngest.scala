@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.sources.PreferenceStore
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Continuous preference-census accumulation — the streaming front of
   * [[PreferenceStore]] (the [[LineIngest]] / [[GramIngest]] discipline for
@@ -24,17 +24,10 @@ object PreferenceIngest {
                       loserCol: String, censusPath: String,
                       checkpoint: String,
                       appId: Option[String] = None): StreamingQuery = {
-    val id = appId.getOrElse(
-      s"pref-ingest:${censusPath.replace('/', '|')}")
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        PreferenceStore.ingestBatch(batch.sparkSession, batch, winnerCol,
-          loserCol, censusPath, id, batchId)
-        ()
-      }
-      .start()
+    val id = appId.getOrElse(AvailableNow.appId("pref", censusPath))
+    AvailableNow.start(stream, checkpoint) { (batch, batchId) =>
+      PreferenceStore.ingestBatch(batch.sparkSession, batch, winnerCol,
+        loserCol, censusPath, id, batchId): Unit
+    }
   }
 }

@@ -8,7 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One session builder and one metrics listener under `src/main`: every
   * main runs on `BenchSession` and measures through `QueryMetrics`, so a
-  * tool cannot profile a session shape `Bench` never runs.
+  * tool cannot profile a session shape `Bench` never runs. Likewise one
+  * home for store table state (`StoreState`, on TxLog's kv sidecar) and
+  * one stream launcher (`AvailableNow`).
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -29,5 +31,17 @@ class SourceGuardSpec extends AnyFunSuite {
   test("SparkListener is subclassed only in QueryMetrics") {
     assert(filesMatching("""(extends|with|new)\s+SparkListener\b""") ==
       Seq("QueryMetrics.scala"))
+  }
+
+  test("store state: its file name and kv I/O live in StoreState only") {
+    assert(filesMatching("_graft_state") == Seq("StoreState.scala"))
+    // TxLog owns the kv primitive (its constraints and generated columns)
+    assert(filesMatching("""\b(read|write)KvFile\b""") ==
+      Seq("StoreState.scala", "TxLog.scala"))
+    assert(filesMatching("""_graft_\w+_meta""").isEmpty)
+  }
+
+  test("writeStream appears only in the AvailableNow launcher") {
+    assert(filesMatching("""\bwriteStream\b""") == Seq("AvailableNow.scala"))
   }
 }
