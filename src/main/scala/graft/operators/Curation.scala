@@ -964,13 +964,8 @@ object Curation {
     val topNs = Seq(2, 3, 4)
     val dupNs = Seq(5, 6, 7, 8, 9, 10)
     // the 9-way n-gram explode is CPU-bound and NARROW — spread a
-    // low-parallelism input (the single-file harness parquet) first, the
-    // [[TextDedup.wordShingles]] contract: an already-parallel input (any
-    // real corpus scan) passes through untouched
-    val want = df.sparkSession.sparkContext.defaultParallelism
-    val spread =
-      if (Parallelism.estimate(df) >= want) df
-      else df.repartition(want, col(idCol))
+    // low-parallelism input first ([[Parallelism.spread]])
+    val spread = Parallelism.spread(df, idCol)
     val base = spread.select(col(idCol).as("__id"),
       split(col(textCol), " ").as("__ws"))
 

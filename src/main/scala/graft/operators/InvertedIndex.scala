@@ -23,7 +23,7 @@ object InvertedIndex {
   /** The posting-list relation: one row per (term, doc) with the term
     * frequency. Whitespace tokenization to match the corpus conventions.
     *
-    * Spread-before-explode (the [[TextDedup.wordShingles]] discipline): a
+    * Spread-before-explode ([[Parallelism.spread]]): a
     * narrow document source — one small file, a coalesced upstream — would
     * serialize the CPU-bound tokenize+explode on its few tasks, and a
     * consumer like [[bm25JoinScores]] replays this leg once per derived
@@ -32,11 +32,7 @@ object InvertedIndex {
     * at corpus scale the scan always is, and the repartition never fires.
     */
   def postings(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val want = docs.sparkSession.sparkContext.defaultParallelism
-    val base =
-      if (Parallelism.estimate(docs) >= want) docs
-      else docs.repartition(want, col(idCol))
-    base.select(col(idCol).as("doc_id"),
+    Parallelism.spread(docs, idCol).select(col(idCol).as("doc_id"),
         explode(split(col(textCol), " ")).as("term"))
       .groupBy(col("term"), col("doc_id"))
       .agg(count(lit(1)).as("tf"))
@@ -61,11 +57,7 @@ object InvertedIndex {
   def positionalPostings(docs: DataFrame, idCol: String,
                          textCol: String): DataFrame = {
     // same spread-before-explode contract as [[postings]]
-    val want = docs.sparkSession.sparkContext.defaultParallelism
-    val base =
-      if (Parallelism.estimate(docs) >= want) docs
-      else docs.repartition(want, col(idCol))
-    base.select(col(idCol).as("doc_id"),
+    Parallelism.spread(docs, idCol).select(col(idCol).as("doc_id"),
       posexplode(split(col(textCol), " ")).as(Seq("pos", "term")))
   }
 

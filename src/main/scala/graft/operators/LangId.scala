@@ -93,15 +93,10 @@ object LangId {
   /** Lower-cased character trigrams, hashed into `buckets` slots. Carries
     * every non-`__t` column of `in` through the explode. The per-character
     * explode is CPU-bound and NARROW — a low-parallelism input (the
-    * single-file harness parquet) is spread first, the
-    * [[graft.operators.TextDedup.wordShingles]] contract: an
-    * already-parallel input passes through untouched.
+    * single-file harness parquet) is spread first ([[Parallelism.spread]]).
     */
   private def trigramBuckets(in0: DataFrame, buckets: Int): DataFrame = {
-    val want = in0.sparkSession.sparkContext.defaultParallelism
-    val in =
-      if (Parallelism.estimate(in0) >= want) in0
-      else in0.repartition(want)
+    val in = Parallelism.spread(in0)
     // lower-case ONCE into an attribute before the per-gram lambda: a
     // higher-order function re-evaluates its lambda body per element with
     // no loop-invariant hoisting, so `substring(lower(__t), i, 3)` inside

@@ -4,10 +4,13 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.functions.col
 
-/** Plan-derived parallelism estimate for the "spread a narrow input before
-  * a CPU-bound explode" call sites ([[TextDedup.wordShingles]],
-  * [[LangId]]'s trigram explode, [[Curation.gopherRepetitionReport]]).
+/** The "spread a narrow input before a CPU-bound explode" rule
+  * ([[spread]]) and the plan-derived parallelism estimate it rests on. Its
+  * callers: [[TextDedup.wordShingles]], [[LangId]]'s trigram explode,
+  * [[Curation.gopherRepetitionReport]], [[InvertedIndex.postings]] and
+  * [[InvertedIndex.positionalPostings]].
   *
   * Those sites previously probed `df.rdd.getNumPartitions`, which converts
   * the whole analyzed plan to an RDD lineage on EVERY call just to read one
@@ -37,6 +40,21 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * never changes rows), only the physical plan differs.
   */
 private[graft] object Parallelism {
+
+  /** `df` hash-repartitioned on `keys` (round-robin when none) to the
+    * session's default parallelism when its estimated width falls short —
+    * a narrow input (one small file, a coalesced upstream) would serialize
+    * the CPU-bound explode above it on its few tasks. An input that is
+    * already parallel passes through untouched: at corpus scale the scan
+    * always is, and consumers that must not shuffle the corpus side keep
+    * that guarantee.
+    */
+  def spread(df: DataFrame, keys: String*): DataFrame = {
+    val want = df.sparkSession.sparkContext.defaultParallelism
+    if (estimate(df) >= want) df
+    else if (keys.isEmpty) df.repartition(want)
+    else df.repartition(want, keys.map(col): _*)
+  }
 
   def estimate(df: DataFrame): Int = {
     val spark = df.sparkSession

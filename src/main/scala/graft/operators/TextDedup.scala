@@ -30,15 +30,10 @@ object TextDedup {
   def wordShingles(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
     val words = split(col(textCol), " ")
     // the explode + hashing downstream is CPU-bound and narrow; spread a
-    // LOW-parallelism input (the single-file harness parquet) across the
-    // cluster first. An input that already has enough partitions must pass
-    // through untouched — [[Decontamination]]'s contract is that the corpus
-    // side never shuffles, and at 100 TB the corpus scan is always parallel.
-    val want = df.sparkSession.sparkContext.defaultParallelism
-    val base =
-      if (Parallelism.estimate(df) >= want) df
-      else df.repartition(want, col(idCol))
-    base
+    // LOW-parallelism input (the single-file harness parquet) first. An
+    // already-parallel input passes through untouched — [[Decontamination]]'s
+    // contract is that the corpus side never shuffles.
+    Parallelism.spread(df, idCol)
       .select(col(idCol).as("id"), words.as("w"))
       .filter(size(col("w")) >= n)
       .select(col("id"), explode(

@@ -121,35 +121,21 @@ object F1Intermediate {
   /** W4–W9 + P5/P6 — `int_driver_lap_features.sql` in full: lap-to-lap
     * windows, rolling stability, bests, the performance score, and the seven
     * CASE-ladder labels. One ordered window spec is shared by every ordered
-    * function (single shuffle+sort); the windowed count-distinct uses
-    * `size(collect_set)` (Spark has no DISTINCT window aggregates).
+    * function (single shuffle+sort); the session-wide aggregates are one
+    * grouped aggregate joined back.
     */
-  def driverLapFeatures(sdl: DataFrame, partitionAggsViaJoin: Boolean = true): DataFrame = {
-    val bySession = Window.partitionBy("meeting_key", "session_key")
-
+  def driverLapFeatures(sdl: DataFrame): DataFrame = {
     val orderedFeats = withOrderedFeatures(sdl)
-
-    // W8/W9: the scale path computes the session-wide aggregates once per key
-    // and joins back (partial-agg shuffle instead of a full sort of every
-    // row — SURVEY §7.4.4); the aggregate reads orderedFeats (not sdl) so the
-    // as-of stage below feeds exactly ONE consumer and its shuffle is reused.
-    // The window formulation is kept for parity and proven equivalent in
-    // F1PipelineSpec.
-    val base =
-      if (partitionAggsViaJoin) {
-        val sess = orderedFeats.groupBy("meeting_key", "session_key")
-          .agg(min("lap_time").as("best_lap_time_session"),
-            countDistinct("driver_number").as("driver_count_in_session"))
-        orderedFeats
-          .join(sess, Seq("meeting_key", "session_key"))
-      } else {
-        orderedFeats
-          .withColumn("best_lap_time_session", min(col("lap_time")).over(bySession))
-          .withColumn("driver_count_in_session",
-            size(collect_set(col("driver_number")).over(bySession)).cast("long"))
-      }
-
-    finishFeatures(base)
+    // W8/W9: the session-wide aggregates computed once per key and joined
+    // back (partial-agg shuffle instead of a full sort of every row — SURVEY
+    // §7.4.4); the aggregate reads orderedFeats (not sdl) so the as-of stage
+    // below feeds exactly ONE consumer and its shuffle is reused. The
+    // reference's window formulation lives in F1PipelineSpec, proven
+    // row-equal.
+    val sess = orderedFeats.groupBy("meeting_key", "session_key")
+      .agg(min("lap_time").as("best_lap_time_session"),
+        countDistinct("driver_number").as("driver_count_in_session"))
+    finishFeatures(orderedFeats.join(sess, Seq("meeting_key", "session_key")))
   }
 
   /** Single-pass twin of [[driverLapFeatures]]: the session-wide aggregates
@@ -171,9 +157,9 @@ object F1Intermediate {
     * SESSION, so parallelism is bounded by the session count and the largest
     * session must fit a partition. Right choice when sessions are numerous
     * and bounded (the reference's domain: ~20 drivers × ~80 laps each);
-    * for few-giant-partition-key regimes use `driverLapFeatures(
-    * partitionAggsViaJoin = true)`, whose aggregate shuffles only partial
-    * rows. Row-equal to both other forms (F1PipelineSpec).
+    * for few-giant-partition-key regimes use [[driverLapFeatures]], whose
+    * aggregate shuffles only partial rows. Row-equal to it and to the
+    * reference's window formulation (F1PipelineSpec).
     */
   def driverLapFeaturesSinglePass(sdl: DataFrame): DataFrame = {
     val bySession = Window.partitionBy("meeting_key", "session_key")
@@ -195,7 +181,7 @@ object F1Intermediate {
     * and a separate window. `position_momentum`'s lag lives here too, so no
     * consumer re-sorts the frame for one more ordered function downstream.
     */
-  private def withOrderedFeatures(sdl: DataFrame): DataFrame = {
+  private[pipeline] def withOrderedFeatures(sdl: DataFrame): DataFrame = {
     val byDriver = Window.partitionBy("meeting_key", "session_key", "driver_number")
     val ordered = byDriver.orderBy(col("lap_number"))
     val rolling5 = ordered.rowsBetween(-4, Window.currentRow)
@@ -212,7 +198,7 @@ object F1Intermediate {
   /** P5/P6 — the derived features, the performance score, and the seven
     * CASE-ladder labels (pure projections over the window/aggregate columns).
     */
-  private def finishFeatures(base: DataFrame): DataFrame = {
+  private[pipeline] def finishFeatures(base: DataFrame): DataFrame = {
     val features = base
       .withColumn("pace_momentum", col("prev_lap_time") - col("lap_time"))
       .withColumn("pace_stability_index", col("rolling_stddev_5_laps"))

@@ -61,8 +61,7 @@ object F1Pipeline {
   case class Marts(
       fctDriverLaps: DataFrame,
       fctDriverRaceSummary: DataFrame,
-      finalF1: DataFrame,
-      raceControlAll: DataFrame)
+      finalF1: DataFrame)
 
   /** The two-frame raw shape as one tagged frame per endpoint. */
   def tagged(raw: Raw): TaggedRaw = {
@@ -100,8 +99,7 @@ object F1Pipeline {
     Marts(
       F1Marts.fctDriverLaps(feats),
       F1Marts.fctDriverRaceSummary(feats),
-      F1Marts.finalF1Windowed(feats),
-      F1Intermediate.raceControlAllTagged(F1Staging.stgRaceControlTagged(raw.raceControl)))
+      F1Marts.finalF1Windowed(feats))
   }
 
   /** Materialize the three marts as Parquet under `outDir`, partitioned by

@@ -212,7 +212,8 @@ object F1Synthetic {
     * (`int_openf1_race_control_all`), emitted oracle-safe.
     */
   def raceControl(spark: SparkSession, dir: String): DataFrame =
-    F1Pipeline.buildTagged(rawTagged(spark, dir)).raceControlAll.select(
+    F1Intermediate.raceControlAllTagged(
+      F1Staging.stgRaceControlTagged(rawTagged(spark, dir).raceControl)).select(
       col("meeting_key"), col("session_key"),
       expr("unix_micros(event_timestamp)").as("event_us"),
       col("driver_number"), col("lap_number"), col("category"), col("flag"),

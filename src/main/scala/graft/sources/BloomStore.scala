@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileContext, Options, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, xxhash64}
 import org.apache.spark.util.sketch.BloomFilter
@@ -13,9 +13,10 @@ import org.apache.spark.util.sketch.BloomFilter
   *
   * Layout: `<tablePath>/_graft_bloom/<key>-v<version>` — the serialized
   * filter, tagged with the [[TxLog]] version of the table it summarizes.
-  * Writes are dot-temp + atomic no-overwrite rename (the same commit
-  * protocol as the log itself); racing maintainers of the same version
-  * produce identical bytes, so the loser just discards its copy.
+  * Writes go through [[TxLog.claim]], the atomic no-overwrite creation the
+  * log's own version claim uses (raw, so no `.crc` sidecar); racing
+  * maintainers of the same version produce identical bytes, so the loser
+  * just discards its copy.
   *
   * Maintenance is INCREMENTAL: a filter persisted at version v is brought to
   * version v' by hashing only the files the manifest diff says were ADDED —
@@ -55,22 +56,11 @@ object BloomStore {
     */
   def save(spark: SparkSession, tablePath: String, key: String, version: Long,
            bloom: BloomFilter): Unit = {
-    val f = fs(spark, tablePath)
     val dir = new Path(tablePath, Dir)
-    f.mkdirs(dir)
-    val tmp = new Path(dir, s".tmp-${java.util.UUID.randomUUID()}")
-    val out = f.create(tmp, true)
-    try bloom.writeTo(out) finally out.close()
-    val dst = new Path(dir, fileName(key, version))
-    val fc = FileContext.getFileContext(tmp.toUri,
-      spark.sparkContext.hadoopConfiguration)
-    try fc.rename(tmp, dst, Options.Rename.NONE)
-    catch {
-      case _: org.apache.hadoop.fs.FileAlreadyExistsException |
-           _: java.nio.file.FileAlreadyExistsException |
-           _: org.apache.hadoop.fs.PathExistsException =>
-        f.delete(tmp, false)
-    }
+    // false when a racing save of this version claimed it first — the
+    // copies are identical, so the loser's is simply discarded
+    TxLog.claim(spark, new Path(dir, fileName(key, version)))(bloom.writeTo)
+    val f = fs(spark, tablePath)
     // retire superseded filters for this key (keep the latest two: a reader
     // that resolved the previous version mid-maintenance can still open its
     // file; [[load]] always picks the max, so stale files are never served)

@@ -24,13 +24,19 @@ import java.util.UUID
   * referenced — a "delete" is a new manifest that stops listing them, so any
   * in-flight reader keeps reading the files its snapshot pinned.
   *
-  * Commit protocol: write the file list to a dot-temp, then
-  * [[FileContext#rename]] with `Rename.NONE` onto the next version — an
-  * atomic no-overwrite rename on HDFS-like filesystems, so of two racing
-  * committers exactly one wins; the loser re-reads the new snapshot,
-  * re-validates for conflicts (same partition touched → abort) and retries.
-  * (Object stores without atomic rename need an external CAS — same
-  * deployment caveat as Delta/Iceberg on S3.)
+  * Commit protocol: every writer commits through ONE function, [[commit]].
+  * It pins the current snapshot and asks the writer for the table's NEXT
+  * full entry list; [[manifestFor]] writes that list in full (at v0, every
+  * [[CheckpointInterval]]-th version, a full rewrite — overwrite,
+  * compaction, clone, restore — or when the delta would be empty) and
+  * otherwise as a `-` remove per dropped entry path followed by a `+` add
+  * per new entry. [[tryCommit]] claims the next version with a dot-temp
+  * write and an atomic no-overwrite rename, so of two racing committers
+  * exactly one wins; the loser backs off, re-pins the winner's snapshot,
+  * re-validates (same partition touched, or a writer derived from an
+  * expected version that has passed → abort) and retries, at most
+  * [[MaxCommitAttempts]] times. (Object stores without atomic rename need
+  * an external CAS — same deployment caveat as Delta/Iceberg on S3.)
   *
   * Scale posture: the manifest read replaces the 100 TB killer — recursive
   * directory LISTing on every query — with one small-file read; per-key reads
@@ -147,7 +153,7 @@ object TxLog {
     * DUPLICATED into `__<col>=<value>` dirs while the real column stays in
     * the data files: Spark's partition-dir inference can't cope with the
     * non-`k=v` `tx-<uuid>` level above them ([CONFLICTING_DIRECTORY_
-    * STRUCTURES]), so reads disable inference (`recursiveFileLookup`) and
+    * STRUCTURES]), so reads disable inference ([[parquetFiles]]) and
     * take the column from the file contents — the dir name exists purely for
     * manifest-side pruning. Constant-per-file values RLE-compress to ~0 in
     * Parquet, so the duplication is free.
@@ -365,8 +371,7 @@ object TxLog {
     import spark.implicits._
     val refDf = refs.map { case (f, d, _) => (absPath(path, f), d.split('/').last) }
       .toDF("__dabs", "__dvname")
-    val dv = spark.read.option("recursiveFileLookup", "true")
-      .parquet(refs.map(_._2).distinct.map(resolve(path, _)): _*)
+    val dv = parquetFiles(spark, refs.map(_._2).distinct.map(resolve(path, _)))
     Some(dv.join(broadcast(refDf),
         dv("__file") === refDf("__dabs") && dv("__dv") === refDf("__dvname"))
       .select(col("__dabs"), col("__pos").as("__dpos")))
@@ -400,33 +405,55 @@ object TxLog {
       if (p != l && d.columns.contains(l)) d.withColumnRenamed(l, p) else d
     }
 
-  /** Anti-filter the snapshot's deletion vectors out of `df`, which must be
-    * the direct parquet read of `files` (a subset of the snapshot's), then
-    * surface the snapshot's LOGICAL column names ([[renameColumn]]). The
-    * no-DV, no-rename path returns `df` untouched — zero plan overhead;
-    * with DVs the anti-join's build side is the deleted positions
-    * (broadcast-sized for any sane delete:table ratio, and AQE picks the
-    * strategy regardless).
+  /** The one raw Parquet read under a table root: exactly `paths` (data
+    * files or sidecar dirs), partition inference off — see [[partSeg]].
     */
-  private def applyDeletes(spark: SparkSession, path: String, s: Snapshot,
-                           files: Seq[String], df: DataFrame,
-                           logicalSnap: Option[Snapshot] = None): DataFrame = {
-    // DVs always resolve against `s` (the snapshot that owns the files);
-    // the logical column surface may be pinned to a DIFFERENT snapshot —
-    // rowChanges logicalizes both sides of a cross-rename CDC span under
-    // the TO snapshot, physical names being write-stable (physicalize)
-    val ls = logicalSnap.getOrElse(s)
-    dvRows(spark, path, s, files) match {
-      case None => logicalize(df, ls)
+  private def parquetFiles(spark: SparkSession, paths: Seq[String],
+                           mergeSchema: Boolean = false): DataFrame = {
+    val reader = spark.read.option("recursiveFileLookup", "true")
+    (if (mergeSchema) reader.option("mergeSchema", "true") else reader)
+      .parquet(paths: _*)
+  }
+
+  /** The one pruned read behind every snapshot reader: scan `files` (the
+    * pruning survivors among `s`'s), anti-filter `s`'s deletion vectors,
+    * surface `logical`'s column names ([[renameColumn]]), then apply the
+    * caller's residual `where`. When no file survives, the result is empty
+    * but keeps the schema of the first `donors` file — the table's, by
+    * default — so downstream resolution still works; only a donor-less
+    * read is the schemaless `emptyDataFrame`.
+    *
+    * DVs always resolve against `s` (the snapshot that owns the files);
+    * the logical surface may be pinned to a DIFFERENT snapshot —
+    * [[rowChanges]] logicalizes both sides of a cross-rename span under the
+    * TO snapshot, physical names being write-stable ([[physicalize]]). The
+    * no-DV, no-rename path is the bare scan — zero plan overhead; with DVs
+    * the anti-join's build side is the deleted positions (broadcast-sized
+    * for any sane delete:table ratio, and AQE picks the strategy
+    * regardless).
+    */
+  private def scan(spark: SparkSession, path: String, s: Snapshot)(
+      files: Seq[String] = s.files, mergeSchema: Boolean = false,
+      donors: Seq[String] = s.files, logical: Snapshot = s,
+      where: DataFrame => DataFrame = identity): DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit}
+    if (files.isEmpty) {
+      // one footer read; the false filter folds to an empty LocalRelation
+      return if (donors.isEmpty) spark.emptyDataFrame
+        else logicalize(parquetFiles(spark, Seq(resolve(path, donors.head))),
+          logical).filter(lit(false))
+    }
+    val df = parquetFiles(spark, files.map(resolve(path, _)), mergeSchema)
+    val live = dvRows(spark, path, s, files) match {
+      case None => df
       case Some(dv) =>
-        import org.apache.spark.sql.functions.col
-        val cols = df.columns.map(col)
-        logicalize(df.withColumn("__rabs", normalizeUri(col("_metadata.file_path")))
+        df.withColumn("__rabs", normalizeUri(col("_metadata.file_path")))
           .withColumn("__rpos", col("_metadata.row_index"))
           .join(dv, col("__rabs") === col("__dabs") &&
             col("__rpos") === col("__dpos"), "left_anti")
-          .select(cols: _*), ls)
+          .select(df.columns.map(col): _*)
     }
+    where(logicalize(live, logical))
   }
 
   /** Row-level transactional DELETE (`DELETE FROM t WHERE cond`) as a
@@ -476,10 +503,7 @@ object TxLog {
       val txDir = s"tx-${UUID.randomUUID().toString.take(8)}"
       // DVs applied: a previously-deleted row matching `condition` must not
       // be resurrected as an updated image
-      val live = applyDeletes(spark, path, s, s.files,
-        spark.read.option("recursiveFileLookup", "true")
-          .option("mergeSchema", "true")
-          .parquet(s.files.map(resolve(path, _)): _*))
+      val live = scan(spark, path, s)(mergeSchema = true)
       // UPDATE preserves column types (the Delta rule): each set expression
       // is cast back to the column's live type, so a literal of a narrower
       // type can't drift the replacement files' schema
@@ -503,23 +527,8 @@ object TxLog {
       }
       // replacement images must carry PHYSICAL names like every other file
       physicalize(regenerated, s.renames).write.parquet(s"$path/$txDir")
-      val f = fs(spark, path)
-      val it = f.listFiles(new Path(path, txDir), true)
-      val written = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
-        .map(_.getPath)
-        .filter(p => p.getName.endsWith(".parquet") &&
-          !p.getName.startsWith("_") && !p.getName.startsWith("."))
-        .map { p =>
-          val root = new Path(path).toUri.getPath
-          p.toUri.getPath.stripPrefix(root).stripPrefix("/")
-        }.toVector
-      if (statsCols.isEmpty) written
-      else {
-        val stats = fileStats(spark, path, written,
-          statsCols.map(toPhysical(s, _)))
-        written.map(fl =>
-          stats.get(fl).map(sc => (fl +: sc).mkString("\t")).getOrElse(fl))
-      }
+      withStats(spark, path, writtenFiles(spark, path, txDir),
+        statsCols.map(toPhysical(s, _)))
     })
   }
 
@@ -533,7 +542,7 @@ object TxLog {
                         writeReplacement: Snapshot => Vector[String],
                         op: String = "DELETE"): Long = {
     import org.apache.spark.sql.functions.{col, count, expr, lit}
-    val v0 = if (expectedVersion >= 0) expectedVersion else currentVersion(spark, path)
+    val v0 = pinned(spark, path, expectedVersion)
     require(v0 >= 0, s"deleteWhere on a table with no commits: $path")
     val s = snapshot(spark, path, v0)
     if (s.files.isEmpty) return v0
@@ -545,9 +554,7 @@ object TxLog {
     // above the scan; grabbing `_metadata` first keeps resolution trivial),
     // then evaluate the predicate over LOGICAL names
     val matched = logicalize(
-        spark.read.option("recursiveFileLookup", "true")
-          .option("mergeSchema", "true")
-          .parquet(s.files.map(resolve(path, _)): _*)
+        parquetFiles(spark, s.files.map(resolve(path, _)), mergeSchema = true)
           .withColumn("__mfile", normalizeUri(col("_metadata.file_path")))
           .withColumn("__mpos", col("_metadata.row_index")), s)
       .filter(expr(condition))
@@ -575,43 +582,24 @@ object TxLog {
     // value disagreeing with its declared expression (later generated-
     // partition reads trust those values). Rejection aborts before the
     // manifest swap — the table stays at v0, images are unreferenced.
-    if (replacements.nonEmpty) {
-      val replacementFiles = replacements.map(entryPath)
-      validateConstraints(spark, path, replacementFiles)
-      validateGenerated(spark, path, replacementFiles,
-        generatedColumns(spark, path))
-    }
+    validateBatch(spark, path, replacements.map(entryPath),
+      generatedColumns(spark, path))
     val dvDir = s"dv-${UUID.randomUUID().toString.take(8)}"
     allDel.filter(col("__file").isin(touched.keys.toSeq: _*))
       .withColumn("__dv", lit(dvDir))
       .coalesce(1)
       .write.parquet(s"$path/$dvDir")
-    val removals = scala.collection.mutable.ArrayBuffer[String]()
-    val adds = scala.collection.mutable.ArrayBuffer[String]()
-    val newEntries = s.entries.flatMap { e =>
-      val p = entryPath(e)
-      touched.get(absPath(path, p)) match {
+    // each touched file's entry is re-pointed at the new sidecar, or leaves
+    // the manifest outright when every one of its rows is deleted
+    val next = s.entries.flatMap { e =>
+      touched.get(absPath(path, entryPath(e))) match {
         case None => Some(e)
         case Some(cnt) =>
-          removals += p
-          val fullyDead = s.statsFor(p, RowCountCol).exists(_._1.toLong == cnt)
-          if (fullyDead) None
-          else {
-            val ne = withTriple(e, DvCol, dvDir, cnt.toString)
-            adds += ne; Some(ne)
-          }
+          if (s.statsFor(entryPath(e), RowCountCol).exists(_._1.toLong == cnt)) None
+          else Some(withTriple(e, DvCol, dvDir, cnt.toString))
       }
-    }
-    val target = v0 + 1
-    val content: Seq[String] =
-      if (target % CheckpointInterval == 0) newEntries ++ replacements
-      else removals.map(RemovePrefix + _).toSeq ++
-        (adds.toSeq ++ replacements).map(AddPrefix + _)
-    if (currentVersion(spark, path) != v0 ||
-        !tryCommit(spark, path, target, s"$OpPrefix$op" +: content))
-      throw new ConcurrentWriteConflict(
-        s"delete derived from v$v0 but the table moved on $path")
-    target
+    } ++ replacements
+    commit(spark, path, op, expectedVersion = v0)(_ => Right(next))
   }
 
   /** Point lookup through the per-file bloom index: only files that might
@@ -625,16 +613,8 @@ object TxLog {
                 value: Any, version: Long = -1L): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
     val s = snapshot(spark, path, version)
-    val matching = bloomPrunedFiles(spark, s, toPhysical(s, column), value)
-    if (matching.isEmpty) {
-      if (s.files.isEmpty) return spark.emptyDataFrame
-      return spark.read.option("recursiveFileLookup", "true")
-        .parquet(resolve(path, s.files.head)).filter(lit(false))
-    }
-    applyDeletes(spark, path, s, matching,
-      spark.read.option("recursiveFileLookup", "true")
-        .parquet(matching.map(resolve(path, _)): _*))
-      .filter(col(column).cast("string") === lit(String.valueOf(value)))
+    scan(spark, path, s)(bloomPrunedFiles(spark, s, toPhysical(s, column), value),
+      where = _.filter(col(column).cast("string") === lit(String.valueOf(value))))
   }
 
   /** Metadata-only COUNT(*): the sum of per-file row counts recorded at
@@ -672,16 +652,13 @@ object TxLog {
   }
 
   /** DataFrame over only the files ADDED since `fromVersion` (valid when
-    * [[changesBetween]] reports no removals — append-only CDC reads).
+    * [[changesBetween]] reports no removals — append-only CDC reads), read
+    * through `toVersion`'s deletion vectors like every other snapshot read.
     */
   def readAddedSince(spark: SparkSession, path: String, fromVersion: Long,
                      toVersion: Long = -1L): DataFrame = {
     val (added, _) = changesBetween(spark, path, fromVersion, toVersion)
-    if (added.isEmpty) spark.emptyDataFrame
-    else logicalize(
-      spark.read.option("recursiveFileLookup", "true")
-        .parquet(added.map(resolve(path, _)): _*),
-      snapshot(spark, path, toVersion))
+    scan(spark, path, snapshot(spark, path, toVersion))(added)
   }
 
   /** Row-level change-data feed between two versions: each changed row
@@ -697,6 +674,7 @@ object TxLog {
                  fromVersion: Long, toVersion: Long = -1L): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
     val (added, removed) = changesBetween(spark, path, fromVersion, toVersion)
+    if (added.isEmpty && removed.isEmpty) return spark.emptyDataFrame
     val sFrom = if (fromVersion < 0) Snapshot(-1L, Nil)
       else snapshot(spark, path, fromVersion)
     val sTo = snapshot(spark, path, toVersion)
@@ -705,21 +683,10 @@ object TxLog {
     // sides surface the TO snapshot's logical schema: physical column names
     // are write-stable across renames, so FROM-era files resolve correctly
     // under TO's physical→logical map, and a span crossing a rename/drop
-    // commit diffs under one coherent naming instead of throwing
-    def readFiles(files: Seq[String], dvSnap: Snapshot,
-                  schemaDonor: Seq[String]): DataFrame =
-      if (files.nonEmpty)
-        applyDeletes(spark, path, dvSnap, files,
-          spark.read.option("recursiveFileLookup", "true")
-            .parquet(files.map(resolve(path, _)): _*),
-          logicalSnap = Some(sTo))
-      else if (schemaDonor.nonEmpty)
-        logicalize(spark.read.option("recursiveFileLookup", "true")
-          .parquet(resolve(path, schemaDonor.head)).filter(lit(false)), sTo)
-      else spark.emptyDataFrame
-    val a0 = readFiles(added, sTo, removed)
-    val r0 = readFiles(removed, sFrom, added)
-    if (added.isEmpty && removed.isEmpty) return spark.emptyDataFrame
+    // commit diffs under one coherent naming instead of throwing. An empty
+    // side takes its schema from the other side's files.
+    val a0 = scan(spark, path, sTo)(added, donors = removed)
+    val r0 = scan(spark, path, sFrom)(removed, donors = added, logical = sTo)
     // width-align across in-span schema drift (a column added/widened
     // between the versions): absent columns surface as typed NULLs — the
     // same view a merged-schema read of the old files would give
@@ -778,34 +745,6 @@ object TxLog {
                                cs: Seq[(String, String)]): Unit =
     writeKvFile(spark, path, ConstraintsFile, cs)
 
-  /** Reject the batch if any declared constraint evaluates to FALSE on any
-    * row (or fails to resolve against the batch schema). Called from the
-    * commit path on the just-written files.
-    */
-  private def validateConstraints(spark: SparkSession, path: String,
-                                  written: Seq[String]): Unit = {
-    val cs = constraints(spark, path)
-    if (cs.isEmpty || written.isEmpty) return
-    import org.apache.spark.sql.functions.{coalesce, expr, lit, not}
-    // constraints are declared over LOGICAL names; the batch files carry
-    // physical ones
-    val batch = logicalize(
-      spark.read.option("recursiveFileLookup", "true")
-        .parquet(written.map(fl => s"$path/$fl"): _*),
-      snapshot(spark, path))
-    cs.foreach { case (name, e) =>
-      val bad =
-        try batch.filter(not(coalesce(expr(e), lit(true)))).limit(1).count()
-        catch { case ex: Exception =>
-          throw new ConstraintViolation(
-            s"constraint '$name' ($e) could not be validated against the batch: ${ex.getMessage}")
-        }
-      if (bad > 0)
-        throw new ConstraintViolation(
-          s"constraint '$name' ($e) violated by the incoming batch on $path")
-    }
-  }
-
   // ------------------------------------------------------ generated columns
   //
   // Delta `GENERATED ALWAYS AS (expr)`: a column the table computes. A batch
@@ -853,29 +792,34 @@ object TxLog {
     (filled, gens.filter { case (n, _) => df.columns.contains(n) })
   }
 
-  /** Reject the batch when an EXPLICITLY supplied generated column disagrees
-    * with its expression on any row (null-safe compare) — same pre-CAS
-    * timing and O(batch) cost as [[validateConstraints]].
+  /** The pre-CAS gate of every commit that writes data files: reject the
+    * batch (the just-written `written` files, read under the table's
+    * LOGICAL names) when a declared CHECK constraint is FALSE on some row,
+    * when an EXPLICITLY supplied generated column disagrees with its
+    * expression (null-safe compare), or when either cannot be resolved
+    * against the batch schema. One O(batch) scan per check.
     */
-  private def validateGenerated(spark: SparkSession, path: String,
-                                written: Seq[String],
-                                explicit: Seq[(String, String)]): Unit = {
-    if (explicit.isEmpty || written.isEmpty) return
-    import org.apache.spark.sql.functions.{col, expr, not}
-    val batch = logicalize(
-      spark.read.option("recursiveFileLookup", "true")
-        .parquet(written.map(fl => s"$path/$fl"): _*),
+  private def validateBatch(spark: SparkSession, path: String,
+                            written: Seq[String],
+                            explicitGenerated: Seq[(String, String)]): Unit = {
+    import org.apache.spark.sql.functions.{coalesce, col, expr, lit, not}
+    val checks = constraints(spark, path).map { case (name, e) =>
+      s"constraint '$name' ($e)" -> (() => coalesce(expr(e), lit(true)))
+    } ++ explicitGenerated.map { case (n, e) =>
+      s"generated column '$n' ($e)" -> (() => col(n) <=> expr(e))
+    }
+    if (checks.isEmpty || written.isEmpty) return
+    val batch = logicalize(parquetFiles(spark, written.map(resolve(path, _))),
       snapshot(spark, path))
-    explicit.foreach { case (n, e) =>
+    checks.foreach { case (what, ok) =>
       val bad =
-        try batch.filter(not(col(n) <=> expr(e))).limit(1).count()
+        try batch.filter(not(ok())).limit(1).count()
         catch { case ex: Exception =>
           throw new ConstraintViolation(
-            s"generated column '$n' ($e) could not be validated: ${ex.getMessage}")
+            s"$what could not be validated against the batch: ${ex.getMessage}")
         }
       if (bad > 0)
-        throw new ConstraintViolation(
-          s"generated column '$n' ($e): batch supplies non-matching values on $path")
+        throw new ConstraintViolation(s"$what violated by the incoming batch on $path")
     }
   }
 
@@ -1037,13 +981,8 @@ object TxLog {
     * schema (cheap) — for a table whose commits DRIFTED schemas, use
     * [[readMerged]].
     */
-  def read(spark: SparkSession, path: String, version: Long = -1L): DataFrame = {
-    val s = snapshot(spark, path, version)
-    if (s.files.isEmpty) spark.emptyDataFrame
-    else applyDeletes(spark, path, s, s.files,
-      spark.read.option("recursiveFileLookup", "true")
-        .parquet(s.files.map(resolve(path, _)): _*))
-  }
+  def read(spark: SparkSession, path: String, version: Long = -1L): DataFrame =
+    scan(spark, path, snapshot(spark, path, version))()
 
   /** Schema-evolving read (S5 drift recovery on the versioned table): union
     * the footers of every file the snapshot pins, so commits that ADDED
@@ -1052,14 +991,8 @@ object TxLog {
     * manifest's file list (no directory walk). Footer-read cost is
     * O(snapshot files); prefer [[read]] when the schema is known stable.
     */
-  def readMerged(spark: SparkSession, path: String, version: Long = -1L): DataFrame = {
-    val s = snapshot(spark, path, version)
-    if (s.files.isEmpty) spark.emptyDataFrame
-    else applyDeletes(spark, path, s, s.files,
-      spark.read.option("recursiveFileLookup", "true")
-        .option("mergeSchema", "true")
-        .parquet(s.files.map(resolve(path, _)): _*))
-  }
+  def readMerged(spark: SparkSession, path: String, version: Long = -1L): DataFrame =
+    scan(spark, path, snapshot(spark, path, version))(mergeSchema = true)
 
   /** The files a key-scoped read must hand the reader: those carrying the
     * exact `col=value` segment, PLUS any file with no `col` segment at all —
@@ -1084,6 +1017,7 @@ object TxLog {
     * string form the partition dirs encode — keeps the result right
     * whatever the pruning admitted; on a uniformly-partitioned table it
     * folds into the scan as a pushed filter over constant-RLE pages (~free).
+    * An absent key reads as zero rows with the table's columns.
     */
   def readKey(spark: SparkSession, path: String, col: String, value: Any): DataFrame = {
     import org.apache.spark.sql.functions.{col => c, lit}
@@ -1091,15 +1025,11 @@ object TxLog {
     val v = String.valueOf(value)
     val phys = toPhysical(s, col) // partition dirs use physical names
     val candidates = keyFiles(s, phys, v)
-    val mixed = candidates.exists(!_.split('/').contains(partSeg(phys, v)))
-    if (candidates.isEmpty) return spark.emptyDataFrame
     // mixed eras can carry drifted schemas — union the candidate footers
-    val reader = spark.read.option("recursiveFileLookup", "true")
-    val df = applyDeletes(spark, path, s, candidates,
-      (if (mixed) reader.option("mergeSchema", "true") else reader)
-        .parquet(candidates.map(resolve(path, _)): _*))
-    if (!df.columns.contains(col)) df.filter(lit(false)) // column never existed
-    else df.filter(c(col).cast("string") === lit(v))
+    val mixed = candidates.exists(!_.split('/').contains(partSeg(phys, v)))
+    scan(spark, path, s)(candidates, mergeSchema = mixed, where = df =>
+      if (!df.columns.contains(col)) df.filter(lit(false)) // column never existed
+      else df.filter(c(col).cast("string") === lit(v)))
   }
 
   /** Key-range read with MANIFEST-driven file skipping (Delta-style data
@@ -1118,20 +1048,8 @@ object TxLog {
                 lo: BigDecimal, hi: BigDecimal, version: Long = -1L): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
     val s = snapshot(spark, path, version)
-    val matching = prunedFiles(s, toPhysical(s, column), lo, hi)
-    if (matching.isEmpty) {
-      // every file pruned: keep the TABLE's schema on the empty result (one
-      // footer read; the false filter folds to an empty LocalRelation, so
-      // nothing is scanned) — a schemaless emptyDataFrame would break
-      // downstream resolution
-      if (s.files.isEmpty) spark.emptyDataFrame
-      else spark.read.option("recursiveFileLookup", "true")
-        .parquet(resolve(path, s.files.head)).filter(lit(false))
-    }
-    else applyDeletes(spark, path, s, matching,
-      spark.read.option("recursiveFileLookup", "true")
-        .parquet(matching.map(resolve(path, _)): _*))
-      .filter(col(column) >= lit(lo) && col(column) <= lit(hi))
+    scan(spark, path, s)(prunedFiles(s, toPhysical(s, column), lo, hi),
+      where = _.filter(col(column) >= lit(lo) && col(column) <= lit(hi)))
   }
 
   /** The file subset [[readRange]] would hand the reader (exposed so specs
@@ -1140,14 +1058,17 @@ object TxLog {
     */
   def prunedFiles(s: Snapshot, column: String,
                   lo: BigDecimal, hi: BigDecimal): Seq[String] =
-    s.files.filter { f =>
-      s.statsFor(f, column) match {
-        case Some((mn, mx)) =>
-          try !(BigDecimal(mx) < lo || BigDecimal(mn) > hi)
-          catch { case _: NumberFormatException => true }
-        case None => true
-      }
+    statsPruned(s, column) { (mn, mx) =>
+      try !(BigDecimal(mx) < lo || BigDecimal(mn) > hi)
+      catch { case _: NumberFormatException => true }
     }
+
+  /** The files whose recorded `(min, max)` for `column` `overlaps` the
+    * range; a file without stats for it is always kept.
+    */
+  private def statsPruned(s: Snapshot, column: String)(
+      overlaps: (String, String) => Boolean): Seq[String] =
+    s.files.filter(f => s.statsFor(f, column).forall(overlaps.tupled))
 
   /** LEXICAL-range file skipping — [[readRange]] for string-typed columns
     * whose encoding orders like the value: ISO dates/timestamps
@@ -1159,12 +1080,7 @@ object TxLog {
     */
   def prunedFilesString(s: Snapshot, column: String,
                         lo: String, hi: String): Seq[String] =
-    s.files.filter { f =>
-      s.statsFor(f, column) match {
-        case Some((mn, mx)) => !(mx < lo || mn > hi)
-        case None => true
-      }
-    }
+    statsPruned(s, column)((mn, mx) => !(mx < lo || mn > hi))
 
   /** String-range read with manifest file skipping (the lexical twin of
     * [[readRange]] — date-string and category predicates prune files before
@@ -1175,16 +1091,8 @@ object TxLog {
                       lo: String, hi: String, version: Long = -1L): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
     val s = snapshot(spark, path, version)
-    val matching = prunedFilesString(s, toPhysical(s, column), lo, hi)
-    if (matching.isEmpty) {
-      if (s.files.isEmpty) spark.emptyDataFrame
-      else spark.read.option("recursiveFileLookup", "true")
-        .parquet(resolve(path, s.files.head)).filter(lit(false))
-    }
-    else applyDeletes(spark, path, s, matching,
-      spark.read.option("recursiveFileLookup", "true")
-        .parquet(matching.map(resolve(path, _)): _*))
-      .filter(col(column) >= lit(lo) && col(column) <= lit(hi))
+    scan(spark, path, s)(prunedFilesString(s, toPhysical(s, column), lo, hi),
+      where = _.filter(col(column) >= lit(lo) && col(column) <= lit(hi)))
   }
 
   /** Transactional append (S3/S4 semantics, table-atomic). `statsCols`
@@ -1331,28 +1239,9 @@ object TxLog {
   def mergeKeys(updates: DataFrame, path: String, partitionCol: String,
                 keyCols: Seq[String], expectedVersion: Long = -1L,
                 statsCols: Seq[String] = Nil,
-                allowSchemaEvolution: Boolean = false): Long = {
-    val spark = updates.sparkSession
-    val v0 = if (expectedVersion >= 0) expectedVersion else currentVersion(spark, path)
-    if (v0 < 0) return mutate(updates, path, Some(partitionCol),
-      replacedValues = identity, statsCols = statsCols, op = "MERGE")
-    val touched = updates.select(updates.col(partitionCol).cast("string"))
-      .distinct().collect().map(_.getString(0)).toSet
-    val current = (if (allowSchemaEvolution) readMerged(spark, path, v0)
-                   else read(spark, path, v0))
-      .filter(org.apache.spark.sql.functions.col(partitionCol).cast("string")
-        .isin(touched.toSeq: _*))
-    val survivors = current.join(
-      updates.select(keyCols.map(updates.col): _*).distinct(), keyCols, "left_anti")
-    val merged =
-      if (allowSchemaEvolution)
-        survivors.unionByName(updates, allowMissingColumns = true)
-      else survivors
-        .select(updates.columns.map(org.apache.spark.sql.functions.col): _*)
-        .unionByName(updates)
-    mutate(merged, path, Some(partitionCol), replacedValues = identity,
-      expectedVersion = v0, statsCols = statsCols, op = "MERGE")
-  }
+                allowSchemaEvolution: Boolean = false): Long =
+    mergeOnKeys(updates, updates, path, partitionCol, keyCols, expectedVersion,
+      statsCols, allowSchemaEvolution, op = "MERGE")
 
   /** CDC APPLY CHANGES INTO (the Delta Live Tables `apply_changes` /
     * Debezium-sink shape): fold a change feed of (keys…, payload…, seqCol,
@@ -1383,31 +1272,48 @@ object TxLog {
                    statsCols: Seq[String] = Nil): Long = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions.{col, row_number}
-    val spark = feed.sparkSession
     val w = Window.partitionBy(keyCols.map(feed.col): _*)
       .orderBy(col(seqCol).desc, col(opCol).desc)
     val winners = feed.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
-    val upserts = winners.filter(col(opCol) === "upsert").drop(seqCol, opCol)
-    val v0 = if (expectedVersion >= 0) expectedVersion
-      else currentVersion(spark, path)
-    if (v0 < 0) return mutate(upserts, path, Some(partitionCol),
-      replacedValues = identity, statsCols = statsCols, op = "CDC-APPLY")
-    val touched = winners.select(col(partitionCol).cast("string"))
-      .distinct().collect().map(_.getString(0)).toSet
-    val current = read(spark, path, v0)
-      .filter(col(partitionCol).cast("string").isin(touched.toSeq: _*))
-    val survivors = current.join(
-      winners.select(keyCols.map(winners.col): _*).distinct(),
-      keyCols, "left_anti")
-    val merged = survivors.select(upserts.columns.map(col): _*)
-      .unionByName(upserts)
-    // replace every TOUCHED partition, not just those the rewrite wrote
-    // files for — a partition whose rows were all deleted must still drop
-    // its old files from the manifest
-    mutate(merged, path, Some(partitionCol), replacedValues = _ => touched,
-      expectedVersion = v0, statsCols = statsCols, op = "CDC-APPLY")
+    mergeOnKeys(winners,
+      winners.filter(col(opCol) === "upsert").drop(seqCol, opCol),
+      path, partitionCol, keyCols, expectedVersion, statsCols,
+      evolve = false, op = "CDC-APPLY")
   }
+
+  /** The one key-merge body of [[mergeKeys]] and [[applyChanges]]: read the
+    * partitions `keys` touches at the pinned version, anti-join `keys`'
+    * keyCols, union `upserts` and commit a partition replace on top of that
+    * version. Every TOUCHED partition is replaced, not just those the
+    * rewrite wrote files for — a partition whose rows were all deleted must
+    * still drop its old files from the manifest. `evolve` unions the
+    * footers of the read and lets `upserts` widen the schema.
+    */
+  private def mergeOnKeys(keys: DataFrame, upserts: DataFrame, path: String,
+                          partitionCol: String, keyCols: Seq[String],
+                          expectedVersion: Long, statsCols: Seq[String],
+                          evolve: Boolean, op: String): Long = {
+    import org.apache.spark.sql.functions.col
+    val spark = upserts.sparkSession
+    val v0 = pinned(spark, path, expectedVersion)
+    if (v0 < 0) return mutate(upserts, path, Some(partitionCol),
+      replacedValues = identity, statsCols = statsCols, op = op)
+    val touched = keys.select(col(partitionCol).cast("string"))
+      .distinct().collect().map(_.getString(0)).toSet
+    val survivors = scan(spark, path, snapshot(spark, path, v0))(mergeSchema = evolve)
+      .filter(col(partitionCol).cast("string").isin(touched.toSeq: _*))
+      .join(keys.select(keyCols.map(keys.col): _*).distinct(), keyCols, "left_anti")
+    val merged =
+      if (evolve) survivors.unionByName(upserts, allowMissingColumns = true)
+      else survivors.select(upserts.columns.map(col): _*).unionByName(upserts)
+    mutate(merged, path, Some(partitionCol), replacedValues = _ ++ touched,
+      expectedVersion = v0, statsCols = statsCols, op = op)
+  }
+
+  /** `expectedVersion` when the caller pinned one, else the current version. */
+  private def pinned(spark: SparkSession, path: String, expectedVersion: Long): Long =
+    if (expectedVersion >= 0) expectedVersion else currentVersion(spark, path)
 
   /** Identity-column append (Delta `GENERATED ALWAYS AS IDENTITY`, dense
     * variant): assign each appended row a unique id continuing from the
@@ -1481,7 +1387,7 @@ object TxLog {
     */
   def compact(spark: SparkSession, path: String, partitionCol: String,
               expectedVersion: Long = -1L, statsCols: Seq[String] = Nil): Long = {
-    val v0 = if (expectedVersion >= 0) expectedVersion else currentVersion(spark, path)
+    val v0 = pinned(spark, path, expectedVersion)
     if (v0 < 0) return -1L
     // readMerged, not read: compacting a schema-DRIFTED table with one
     // file's footer schema would silently drop the drifted columns
@@ -1553,7 +1459,7 @@ object TxLog {
   def compactWhere(spark: SparkSession, path: String, partitionCol: String,
                    values: Seq[String], expectedVersion: Long = -1L,
                    statsCols: Seq[String] = Nil): Long = {
-    val v0 = if (expectedVersion >= 0) expectedVersion else currentVersion(spark, path)
+    val v0 = pinned(spark, path, expectedVersion)
     if (v0 < 0) return -1L
     val s = snapshot(spark, path, v0)
     val physCol = toPhysical(s, partitionCol)
@@ -1588,7 +1494,7 @@ object TxLog {
                       expectedVersion: Long = -1L,
                       extraStatsCols: Seq[String] = Nil): Long = {
     import org.apache.spark.sql.functions.{col, lit}
-    val v0 = if (expectedVersion >= 0) expectedVersion else currentVersion(spark, path)
+    val v0 = pinned(spark, path, expectedVersion)
     if (v0 < 0) return -1L
     val z = graft.functions.ZOrder.zValue(
       col(xCol).bitwiseAND(lit((1L << bits) - 1)),
@@ -1640,15 +1546,7 @@ object TxLog {
       (abs +: triples.toSeq).mkString("\t")
       }
     }
-    var attempts = 0
-    while (attempts < MaxCommitAttempts) {
-      commitBackoff(attempts, destPath.hashCode)
-      val v = currentVersion(spark, destPath) + 1
-      if (tryCommit(spark, destPath, v, s"${OpPrefix}CLONE" +: entries)) return v
-      attempts += 1
-    }
-    throw new ConcurrentWriteConflict(
-      s"gave up after $attempts contended clone commits on $destPath")
+    commit(spark, destPath, "CLONE", rewrite = true)(_ => Right(entries))
   }
 
   /** RESTORE TABLE ... TO VERSION — roll the table back to `toVersion`'s
@@ -1663,16 +1561,10 @@ object TxLog {
     */
   def restore(spark: SparkSession, path: String, toVersion: Long): Long = {
     val s = snapshot(spark, path, toVersion)
-    var attempts = 0
-    while (attempts < MaxCommitAttempts) {
-      commitBackoff(attempts, path.hashCode)
-      val v = currentVersion(spark, path) + 1
-      if (v - 1 == toVersion) return v - 1 // already there: no-op commit skipped
-      if (tryCommit(spark, path, v, s"${OpPrefix}RESTORE" +: s.entries)) return v
-      attempts += 1
+    commit(spark, path, "RESTORE", rewrite = true) { cur =>
+      // already there: the no-op commit is skipped
+      if (cur.version == toVersion) Left(toVersion) else Right(s.entries)
     }
-    throw new ConcurrentWriteConflict(
-      s"gave up after $attempts contended restore commits on $path")
   }
 
   /** METADATA-ONLY column rename (Delta column mapping's `RENAME COLUMN`):
@@ -1704,17 +1596,13 @@ object TxLog {
     require(!generatedColumns(spark, path).exists(_._1 == from),
       s"'$from' is a generated column on $path — drop its definition first " +
         "(the sidecar is unversioned and would keep generating the old name)")
-    var attempts = 0
-    while (attempts < MaxCommitAttempts) {
-      commitBackoff(attempts, path.hashCode)
-      val cur = snapshot(spark, path)
+    commit(spark, path, "RENAME-COLUMN") { cur =>
       require(cur.version >= 0, s"renameColumn on a table with no commits: $path")
       // merged view: a drift-era column is renameable / collides like any other
-      val logicalCols = readMerged(spark, path).columns.toSet
+      val logicalCols = scan(spark, path, cur)(mergeSchema = true).columns.toSet
       require(logicalCols.contains(from), s"no such column '$from' on $path")
       require(!logicalCols.contains(to), s"column '$to' already exists on $path")
-      val phys = cur.renames.collectFirst { case (p, l) if l == from => p }
-        .getOrElse(from)
+      val phys = toPhysical(cur, from)
       // `to` must not shadow another column's PHYSICAL name, or the write-
       // side physicalize would collide. The union must span EVERY schema
       // era of a drifted table (a physical column present only in later
@@ -1724,28 +1612,14 @@ object TxLog {
       // no row scan
       val physicalCols = (cur.renames.keySet ++
         (if (cur.files.nonEmpty)
-          spark.read.option("mergeSchema", "true")
-            .option("recursiveFileLookup", "true")
-            .parquet(cur.files.map(resolve(path, _)): _*).columns.toSet
+          parquetFiles(spark, cur.files.map(resolve(path, _)),
+            mergeSchema = true).columns.toSet
          else Set.empty[String])) - phys
       require(!physicalCols.contains(to),
         s"'$to' is the physical name of another column on $path")
-      val oldMeta = cur.entries.filter(e => entryPath(e) == renameEntryName(phys))
-      val newMeta = if (to == phys) Nil
-        else Seq(s"${renameEntryName(phys)}\t$to")
-      val target = cur.version + 1
-      val content: Seq[String] =
-        if (target % CheckpointInterval == 0)
-          cur.entries.filterNot(oldMeta.contains) ++ newMeta
-        else oldMeta.map(e => RemovePrefix + entryPath(e)) ++
-          newMeta.map(AddPrefix + _)
-      require(content.nonEmpty, s"no-op rename commit on $path") // unreachable
-      if (tryCommit(spark, path, target,
-          s"${OpPrefix}RENAME-COLUMN" +: content)) return target
-      attempts += 1
+      Right(cur.entries.filterNot(e => entryPath(e) == renameEntryName(phys)) ++
+        (if (to == phys) Nil else Seq(s"${renameEntryName(phys)}\t$to")))
     }
-    throw new ConcurrentWriteConflict(
-      s"gave up after $attempts contended rename commits on $path")
   }
 
   private def renameEntryName(phys: String) = s"$RenameEntryPrefix$phys"
@@ -1765,37 +1639,22 @@ object TxLog {
       s"invalid column name in drop: '$name'")
     require(!generatedColumns(spark, path).exists(_._1 == name),
       s"'$name' is a generated column on $path — drop its definition first")
-    var attempts = 0
-    while (attempts < MaxCommitAttempts) {
-      commitBackoff(attempts, path.hashCode)
-      val cur = snapshot(spark, path)
+    commit(spark, path, "DROP-COLUMN") { cur =>
       require(cur.version >= 0, s"dropColumn on a table with no commits: $path")
       // a drifted table can hold the column in only SOME file eras — the
       // merged view is the table's logical schema for drop purposes
-      val logicalCols = readMerged(spark, path).columns.toSeq
+      val logicalCols = scan(spark, path, cur)(mergeSchema = true).columns.toSeq
       require(logicalCols.contains(name), s"no such column '$name' on $path")
       require(logicalCols.size > 1, s"cannot drop the last column on $path")
-      val phys = cur.renames.collectFirst { case (p, l) if l == name => p }
-        .getOrElse(name)
+      val phys = toPhysical(cur, name)
       require(!cur.files.exists(_.split('/').exists(_.startsWith(partPrefix(phys)))),
         s"cannot drop partition column '$name' on $path")
-      val oldMeta = cur.entries.filter(e => entryPath(e) == renameEntryName(phys))
-      val dropEntry = s"$DropEntryPrefix$phys"
-      val target = cur.version + 1
-      val content: Seq[String] =
-        if (target % CheckpointInterval == 0)
-          cur.entries.filterNot(oldMeta.contains) :+ dropEntry
-        else oldMeta.map(e => RemovePrefix + entryPath(e)) ++
-          Seq(AddPrefix + dropEntry)
-      if (tryCommit(spark, path, target,
-          s"${OpPrefix}DROP-COLUMN" +: content)) return target
-      attempts += 1
+      Right(cur.entries.filterNot(e => entryPath(e) == renameEntryName(phys)) :+
+        s"$DropEntryPrefix$phys")
     }
-    throw new ConcurrentWriteConflict(
-      s"gave up after $attempts contended drop-column commits on $path")
   }
 
-  /** Write `df`'s data files once, then CAS-loop the manifest commit.
+  /** Write `df`'s data files once, then [[commit]] the manifest.
     * `replacedValues` picks, from the new files' partition values, which
     * existing partitions the commit REMOVES (empty set → pure append).
     * `partitionCol = None` writes unpartitioned files (pure appends only —
@@ -1849,115 +1708,87 @@ object TxLog {
       case None =>
         dfW.write.mode(SaveMode.Overwrite).parquet(s"$path/$txDir")
     }
-    // table-relative paths of the files this txn produced (metadata-sized)
-    val it = f.listFiles(new Path(path, txDir), true)
-    val written = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
-      .map(_.getPath)
-      .filter(p => p.getName.endsWith(".parquet") &&
-        !p.getName.startsWith("_") && !p.getName.startsWith("."))
-      .map { p =>
-        val root = new Path(path).toUri.getPath
-        p.toUri.getPath.stripPrefix(root).stripPrefix("/")
-      }.toVector
+    val written = writtenFiles(spark, path, txDir)
     // CHECK constraints and generated-column agreement gate the commit: a
     // rejected batch's files never reach a manifest, and the tx dir is
     // removed so vacuum has less to do
-    try {
-      validateConstraints(spark, path, written)
-      validateGenerated(spark, path, written, explicitGen)
-    } catch { case e: ConstraintViolation =>
+    try validateBatch(spark, path, written, explicitGen)
+    catch { case e: ConstraintViolation =>
       f.delete(new Path(path, txDir), true); throw e
     }
     val touched = pColW match {
       case Some(c) => replacedValues(Snapshot(0, written).partitionValues(c))
       case None => Set.empty[String]
     }
-    // manifest entries for this txn's files: path alone, or path + per-file
-    // min/max stats (one extra column-pruned pass over just-written files —
-    // file-count rows to the driver, never data)
-    val writtenEntries: Vector[String] =
-      if (statsW.isEmpty && bloomW.isEmpty) written
-      else {
-        val stats = fileStats(spark, path, written, statsW, bloomW)
-        written.map(fl => stats.get(fl).map(s => (fl +: s).mkString("\t")).getOrElse(fl))
-      }
-
-    var attempts = 0
-    while (true) {
-      val cur = snapshot(spark, path)
+    def inTouched(file: String): Boolean = pColW.exists { c =>
+      file.split('/').exists(seg => seg.startsWith(partPrefix(c)) &&
+        touched.contains(seg.substring(partPrefix(c).length)))
+    }
+    val adds = withStats(spark, path, written, statsW, bloomW) ++
+      txn.map { case (appId, v) => s"${txnEntryName(appId)}\t$v" }
+    var lastSeen: Option[Snapshot] = None
+    commit(spark, path, op, expectedVersion, rewrite = dropAll) { cur =>
       // exactly-once guard, INSIDE the CAS loop: if a racing writer (a
       // twice-restarted streaming query, a retried job) already committed
       // this (appId, batchVersion) — or a later batch — this commit is a
       // replay. Drop its files and report the current version as success:
       // the data is already in the table exactly once.
-      txn.foreach { case (appId, batchVer) =>
-        if (cur.txnVersions.get(appId).exists(_ >= batchVer)) {
-          f.delete(new Path(path, txDir), true)
-          return cur.version
+      if (txn.exists { case (appId, v) => cur.txnVersions.get(appId).exists(_ >= v) }) {
+        f.delete(new Path(path, txDir), true)
+        Left(cur.version)
+      } else {
+        // the files were physicalized under the mapping read above — a rename
+        // or drop landing in between would make their column names stale
+        if (!dropAll && (cur.renames != ren || cur.drops != sPre.drops))
+          throw new ConcurrentWriteConflict(
+            s"column mapping changed concurrently on $path")
+        // loser of a race: a commit into the SAME partition since the last
+        // attempt's snapshot is a real conflict
+        lastSeen.foreach { prior =>
+          val seen = prior.files.toSet
+          if (cur.files.exists(fl => !seen(fl) && inTouched(fl)))
+            throw new ConcurrentWriteConflict(
+              s"partition(s) $touched were modified concurrently on $path")
         }
+        lastSeen = Some(cur)
+        // a full rewrite (overwrite/compact) drops file and mapping entries
+        // but carries the idempotent-writer watermarks forward — OPTIMIZE
+        // must not reopen a streaming sink's exactly-once window; this
+        // commit's watermark replaces the appId's previous entry
+        val kept =
+          if (dropAll) cur.entries.filter(_.startsWith(TxnEntryPrefix))
+          else cur.entries.filterNot(e => inTouched(entryPath(e)))
+        Right(txn.fold(kept) { case (appId, _) =>
+          kept.filterNot(e => entryPath(e) == txnEntryName(appId)) } ++ adds)
       }
-      // serializable-merge guard: the caller derived `df` from
-      // `expectedVersion`'s snapshot — committing on top of anything newer
-      // would overwrite the intervening writer's rows with stale data
-      if (expectedVersion >= 0 && cur.version != expectedVersion)
-        throw new ConcurrentWriteConflict(
-          s"merge derived from v$expectedVersion but table is at v${cur.version} on $path")
-      // the files were physicalized under the mapping read above — a rename
-      // or drop landing in between would make their column names stale
-      if (!dropAll && (cur.renames != ren || cur.drops != sPre.drops))
-        throw new ConcurrentWriteConflict(
-          s"column mapping changed concurrently on $path")
-      // a full rewrite (overwrite/compact) drops file and mapping entries but
-      // carries the idempotent-writer watermarks forward — OPTIMIZE must not
-      // reopen a streaming sink's exactly-once window
-      val kept0 =
-        if (dropAll) cur.entries.filter(_.startsWith(TxnEntryPrefix))
-        else if (touched.isEmpty) cur.entries
-        else cur.entries.filterNot { entry =>
-          val prefix = partPrefix(pColW.get) // touched nonempty ⇒ Some
-          entryPath(entry).split('/').exists(seg =>
-            seg.startsWith(prefix) && touched.contains(seg.substring(prefix.length)))
-        }
-      // this commit's watermark replaces the appId's previous entry
-      val kept = txn.fold(kept0) { case (appId, _) =>
-        kept0.filterNot(e => entryPath(e) == txnEntryName(appId)) }
-      val adds = writtenEntries ++
-        txn.map { case (appId, v) => s"${txnEntryName(appId)}\t$v" }.toVector
-      val target = cur.version + 1
-      // checkpoint commits (v0, every CheckpointInterval-th, full overwrites)
-      // carry the complete list; everything else carries only this commit's
-      // delta, so the log write is O(delta) instead of O(live files)
-      val content: Seq[String] =
-        if (dropAll || cur.version < 0 || target % CheckpointInterval == 0)
-          kept ++ adds
-        else {
-          val keptPaths = kept.iterator.map(entryPath).toSet
-          val removed = cur.entries.map(entryPath).filterNot(keptPaths)
-          val delta = removed.map(RemovePrefix + _) ++
-            adds.map(AddPrefix + _)
-          // an empty delta would be indistinguishable from an empty FULL
-          // manifest (and would truncate the table on read) — write full
-          if (delta.isEmpty) kept ++ adds else delta
-        }
-      if (tryCommit(spark, path, target, s"$OpPrefix$op" +: content))
-        return target
-      attempts += 1
-      if (attempts >= MaxCommitAttempts)
-        throw new ConcurrentWriteConflict(
-          s"gave up after $attempts contended commits on $path")
-      commitBackoff(attempts, txDir.hashCode)
-      // loser of the race: re-validate against the winner's snapshot —
-      // a concurrent commit into the SAME partition is a real conflict
-      val winner = snapshot(spark, path)
-      if (touched.nonEmpty &&
-          winner.files.exists(fl => !cur.files.contains(fl) &&
-            fl.split('/').exists(seg => seg.startsWith(partPrefix(pColW.get)) &&
-              touched.contains(seg.substring(partPrefix(pColW.get).length)))))
-        throw new ConcurrentWriteConflict(
-          s"partition(s) $touched were modified concurrently on $path")
     }
-    -1L // unreachable
   }
+
+  /** Table-relative paths of the Parquet files a txn wrote under `txDir`
+    * (metadata-sized).
+    */
+  private def writtenFiles(spark: SparkSession, path: String,
+                           txDir: String): Vector[String] = {
+    val it = fs(spark, path).listFiles(new Path(path, txDir), true)
+    val root = new Path(path).toUri.getPath
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath)
+      .filter(p => p.getName.endsWith(".parquet") &&
+        !p.getName.startsWith("_") && !p.getName.startsWith("."))
+      .map(_.toUri.getPath.stripPrefix(root).stripPrefix("/")).toVector
+  }
+
+  /** Manifest entries for a txn's files: the path alone, or the path plus
+    * its per-file stats triples ([[fileStats]] — one extra column-pruned
+    * pass over just-written files, file-count rows to the driver).
+    */
+  private def withStats(spark: SparkSession, path: String, written: Vector[String],
+                        statsCols: Seq[String],
+                        bloomCols: Seq[String] = Nil): Vector[String] =
+    if (statsCols.isEmpty && bloomCols.isEmpty) written
+    else {
+      val stats = fileStats(spark, path, written, statsCols, bloomCols)
+      written.map(fl => stats.get(fl).map(s => (fl +: s).mkString("\t")).getOrElse(fl))
+    }
 
   /** Per-file min/max of `statsCols` over this txn's freshly-written files:
     * ONE column-pruned scan of the new batch (the cost any stats collection
@@ -1971,8 +1802,7 @@ object TxLog {
                         bloomCols: Seq[String] = Nil): Map[String, Seq[String]] = {
     import org.apache.spark.sql.functions.{col, collect_set, count, input_file_name, lit, max, min}
     if (written.isEmpty) return Map.empty
-    val df = spark.read.option("recursiveFileLookup", "true")
-      .parquet(written.map(f => s"$path/$f"): _*)
+    val df = parquetFiles(spark, written.map(resolve(path, _)))
     val present = statsCols.filter(df.columns.contains)
     val presentBloom = bloomCols.filter(df.columns.contains)
     val aggs = present.flatMap(c => Seq(
@@ -2010,19 +1840,80 @@ object TxLog {
       }.filter(_._2.nonEmpty).toMap
   }
 
-  /** Atomic claim of version `v`: dot-temp write + no-overwrite rename.
-    * Returns false when another committer already owns `v`.
+  /** The one commit every writer goes through. Each attempt pins the
+    * current snapshot and asks `next` for the table's next FULL entry list
+    * (`Right`), or for the version that already holds the writer's effect
+    * (`Left`: a restore to the current version, a replayed batch).
+    * [[manifestFor]] turns the list into this version's manifest and
+    * [[tryCommit]] claims the version. A lost claim backs off
+    * ([[commitBackoff]]) and asks `next` again against the winner's
+    * snapshot, at most [[MaxCommitAttempts]] times. A writer that derived
+    * its content from `expectedVersion` commits only on top of it: any
+    * other pinned version aborts with [[ConcurrentWriteConflict]]
+    * (first-committer-wins), never the other writer. `rewrite` marks a
+    * commit that replaces the whole table, which always writes in full.
+    */
+  private def commit(spark: SparkSession, path: String, op: String,
+                     expectedVersion: Long = -1L, rewrite: Boolean = false)(
+      next: Snapshot => Either[Long, Seq[String]]): Long = {
+    var attempts = 0
+    while (attempts < MaxCommitAttempts) {
+      commitBackoff(attempts, path.hashCode)
+      val cur = snapshot(spark, path)
+      if (expectedVersion >= 0 && cur.version != expectedVersion)
+        throw new ConcurrentWriteConflict(s"${op.toLowerCase} derived from " +
+          s"v$expectedVersion but table is at v${cur.version} on $path")
+      next(cur) match {
+        case Left(v) => return v
+        case Right(entries) =>
+          val target = cur.version + 1
+          if (tryCommit(spark, path, target,
+              s"$OpPrefix$op" +: manifestFor(cur, entries, rewrite))) return target
+      }
+      attempts += 1
+    }
+    throw new ConcurrentWriteConflict(
+      s"gave up after $attempts contended ${op.toLowerCase} commits on $path")
+  }
+
+  /** The one full-versus-delta rule: the manifest that moves `cur` to the
+    * `next` entry list. Checkpoints — v0, every [[CheckpointInterval]]-th
+    * version and full `rewrite`s — carry the complete list; every other
+    * commit carries only its delta, the `-` removes (by entry path) and
+    * then the `+` adds, so the log write is O(delta) instead of O(live
+    * files). An empty delta would be indistinguishable from an empty FULL
+    * manifest (and would truncate the table on read), so it writes full.
+    */
+  private def manifestFor(cur: Snapshot, next: Seq[String],
+                          rewrite: Boolean): Seq[String] =
+    if (rewrite || cur.version < 0 || (cur.version + 1) % CheckpointInterval == 0) next
+    else {
+      val (was, now) = (cur.entries.toSet, next.toSet)
+      val delta = cur.entries.filterNot(now).map(RemovePrefix + entryPath(_)) ++
+        next.filterNot(was).map(AddPrefix + _)
+      if (delta.isEmpty) next else delta
+    }
+
+  /** Atomic claim of manifest version `v` ([[claim]]). Returns false when
+    * another committer already owns `v`.
     */
   private def tryCommit(spark: SparkSession, path: String, v: Long,
-                        lines: Seq[String]): Boolean = {
-    val f = fs(spark, path)
-    val logDir = new Path(path, LogDir)
-    f.mkdirs(logDir)
-    val tmp = new Path(logDir, s".tmp-${UUID.randomUUID()}")
-    val out = rawFs(f).create(tmp, true) // no crc sidecar — see [[rawFs]]
-    try out.write(lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    val dst = new Path(logDir, versionName(v))
+                        lines: Seq[String]): Boolean =
+    claim(spark, new Path(new Path(path, LogDir), versionName(v)))(
+      _.write(lines.mkString("\n").getBytes(StandardCharsets.UTF_8)))
+
+  /** Atomic no-overwrite creation of `dst`: `write` fills a dot-temp file
+    * beside it (raw, no crc sidecar — see [[rawFs]]), which then moves onto
+    * `dst` only if nothing is there yet. Returns false — the temp file
+    * discarded — when `dst` already exists.
+    */
+  private[sources] def claim(spark: SparkSession, dst: Path)(
+      write: java.io.OutputStream => Unit): Boolean = {
+    val f = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    f.mkdirs(dst.getParent)
+    val tmp = new Path(dst.getParent, s".tmp-${UUID.randomUUID()}")
+    val out = rawFs(f).create(tmp, true)
+    try write(out) finally out.close()
     if (rawFs(f).isInstanceOf[org.apache.hadoop.fs.RawLocalFileSystem]) {
       // LOCAL FS: FileContext.rename(NONE) is a check-then-act (exists()
       // probe, then rename(2), which OVERWRITES on POSIX) — under real

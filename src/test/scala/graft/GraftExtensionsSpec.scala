@@ -101,6 +101,12 @@ class GraftExtensionsSpec extends SparkSpec {
     assert(got.forall(k => k % 10 != 4)) // the DV still applies
   }
 
+  test("graft_table_key: an absent value returns no rows, not an error") {
+    GraftExtensions.register(spark)
+    val p = freshTable()
+    assert(spark.sql(s"SELECT k FROM graft_table_key('$p', 'b', 7)").collect().isEmpty)
+  }
+
   test("graft_table_range: stats-skipped range read — fewer files, exact rows") {
     GraftExtensions.register(spark)
     // range-correlated layout: two era-partitioned appends with k stats

@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * main runs on `BenchSession` and measures through `QueryMetrics`, so a
   * tool cannot profile a session shape `Bench` never runs. Likewise one
   * home for store table state (`StoreState`, on TxLog's kv sidecar) and
-  * one stream launcher (`AvailableNow`).
+  * one stream launcher (`AvailableNow`), one TxLog commit function and raw
+  * scan, and one spread-before-explode rule (`Parallelism.spread`).
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -43,5 +44,25 @@ class SourceGuardSpec extends AnyFunSuite {
 
   test("writeStream appears only in the AvailableNow launcher") {
     assert(filesMatching("""\bwriteStream\b""") == Seq("AvailableNow.scala"))
+  }
+
+  /** Occurrences of `re` per file, over the files that have any. */
+  private def occurrences(re: String): Map[String, Int] = {
+    val pattern = re.r
+    Files.walk(Paths.get("src/main/scala")).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .map(p => p.getFileName.toString -> pattern.findAllIn(Files.readString(p)).size)
+      .filter(_._2 > 0).toMap
+  }
+
+  test("TxLog: one commit call, one raw scan") {
+    // the definition plus the one call inside TxLog's commit function
+    assert(occurrences("""\btryCommit\(""") == Map("TxLog.scala" -> 2))
+    assert(occurrences("recursiveFileLookup") == Map("TxLog.scala" -> 1))
+  }
+
+  test("Parallelism.estimate is called only from Parallelism.spread") {
+    // the definition plus the one call inside spread
+    assert(occurrences("""\bestimate\(""") == Map("Parallelism.scala" -> 2))
   }
 }

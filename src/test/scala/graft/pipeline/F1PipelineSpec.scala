@@ -111,16 +111,28 @@ class F1PipelineSpec extends SparkSpec {
     assertSameRows(sdl, F1Intermediate.sessionDriverLapsOptimized(lapsAll, positionAll))
   }
 
+  /** The reference's feature layer (`int_driver_lap_features.sql`): the
+    * session-wide aggregates (W8/W9) as windows over the session, the
+    * windowed count-distinct as `size(collect_set)` (Spark has no DISTINCT
+    * window aggregates). The oracle for the join-back and single-pass forms.
+    */
+  private def windowFeatures(sdl: DataFrame): DataFrame = {
+    val bySession = org.apache.spark.sql.expressions.Window
+      .partitionBy("meeting_key", "session_key")
+    F1Intermediate.finishFeatures(F1Intermediate.withOrderedFeatures(sdl)
+      .withColumn("best_lap_time_session", min(col("lap_time")).over(bySession))
+      .withColumn("driver_count_in_session",
+        size(collect_set(col("driver_number")).over(bySession)).cast("long")))
+  }
+
   test("feature layer: partition-agg-via-join ≡ window formulation (scale path)") {
-    assertSameRows(
-      F1Intermediate.driverLapFeatures(sdl, partitionAggsViaJoin = true),
-      F1Intermediate.driverLapFeatures(sdl, partitionAggsViaJoin = false))
+    assertSameRows(F1Intermediate.driverLapFeatures(sdl), windowFeatures(sdl))
   }
 
   test("feature layer: single-pass (dense_rank distinct-count) ≡ join formulation") {
     assertSameRows(
       F1Intermediate.driverLapFeaturesSinglePass(sdl),
-      F1Intermediate.driverLapFeatures(sdl, partitionAggsViaJoin = true))
+      F1Intermediate.driverLapFeatures(sdl))
   }
 
   /** The reference-faithful composition — two-stage W1/W2 dedup, join+rank
@@ -128,25 +140,31 @@ class F1PipelineSpec extends SparkSpec {
     * the two-frame fixtures: the oracle for every scale-path formulation.
     */
   private lazy val faithful = {
-    val feats = F1Intermediate.driverLapFeatures(sdl, partitionAggsViaJoin = false)
+    val feats = windowFeatures(sdl)
     F1Pipeline.Marts(
       F1Marts.fctDriverLaps(feats),
       F1Marts.fctDriverRaceSummary(feats),
-      F1Marts.finalF1(feats),
-      F1Intermediate.raceControlAll(
-        F1Staging.stgRaceControl(rawRcHist, isRealtime = false),
-        F1Staging.stgRaceControl(rawRcRt, isRealtime = true)))
+      F1Marts.finalF1(feats))
   }
 
-  private def assertSameMarts(a: F1Pipeline.Marts, b: F1Pipeline.Marts): Unit = {
-    assertSameRows(a.fctDriverRaceSummary, b.fctDriverRaceSummary)
-    assertSameRows(a.fctDriverLaps, b.fctDriverLaps)
-    assertSameRows(a.finalF1, b.finalF1)
-    assertSameRows(a.raceControlAll, b.raceControlAll)
+  /** The reference's two-frame race-control intermediate. */
+  private lazy val faithfulRaceControl = F1Intermediate.raceControlAll(
+    F1Staging.stgRaceControl(rawRcHist, isRealtime = false),
+    F1Staging.stgRaceControl(rawRcRt, isRealtime = true))
+
+  /** `raw`'s marts and tagged race-control intermediate ≡ the faithful ones. */
+  private def assertSameAsFaithful(raw: F1Pipeline.TaggedRaw): Unit = {
+    val a = F1Pipeline.buildTagged(raw)
+    assertSameRows(a.fctDriverRaceSummary, faithful.fctDriverRaceSummary)
+    assertSameRows(a.fctDriverLaps, faithful.fctDriverLaps)
+    assertSameRows(a.finalF1, faithful.finalF1)
+    assertSameRows(
+      F1Intermediate.raceControlAllTagged(F1Staging.stgRaceControlTagged(raw.raceControl)),
+      faithfulRaceControl)
   }
 
   test("full pipeline: optimized ≡ faithful formulations end-to-end") {
-    assertSameMarts(F1Pipeline.buildTagged(F1Pipeline.tagged(raw)), faithful)
+    assertSameAsFaithful(F1Pipeline.tagged(raw))
   }
 
   test("tagged-union build ≡ two-frame build (fused W1+W2, windowed final mart)") {
@@ -165,7 +183,7 @@ class F1PipelineSpec extends SparkSpec {
     assertSameRows(
       F1Intermediate.positionAllTagged(F1Staging.stgPositionTagged(taggedRaw.positions)),
       positionAll)
-    assertSameMarts(F1Pipeline.buildTagged(taggedRaw), faithful)
+    assertSameAsFaithful(taggedRaw)
   }
 
   test("race-control staging + dedup: nullif/try-double, message filter, realtime wins") {

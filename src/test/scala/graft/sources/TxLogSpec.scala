@@ -91,6 +91,18 @@ class TxLogSpec extends SparkSpec {
       one.inputFiles.forall(_.contains("__session_key=7")))
   }
 
+  test("readKey of an absent key: zero rows with the table's columns, like readRange") {
+    val path = tmp("txabsent")
+    TxLog.append(Seq((1L, 0L, "a"), (2L, 1L, "b"), (3L, 1L, "c"))
+      .toDF("id", "bucket", "v"), path, "bucket", statsCols = Seq("bucket"))
+    val absent = TxLog.readKey(spark, path, "bucket", 5L)
+    assert(absent.columns.toSeq == Seq("id", "bucket", "v"))
+    // downstream resolution keeps working on the empty result
+    assert(absent.filter(col("id") =!= 1L).count() == 0)
+    val range = TxLog.readRange(spark, path, "bucket", 5, 5)
+    assert(range.columns.toSeq == absent.columns.toSeq && range.count() == 0)
+  }
+
   test("readKey stays exact under partition-layout evolution") {
     val path = tmp("txevolve")
     // era 1: partitioned by k1 — era 2: flat append — era 3: partitioned by k2
