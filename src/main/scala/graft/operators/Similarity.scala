@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.functions.VectorFunctions._
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Approximate-nearest-neighbor search over an embedding column (extension
@@ -12,8 +13,72 @@ import org.apache.spark.sql.functions._
   * bucket; at 100 TB the bucketed corpus is PERSISTED partitioned by bucket
   * — [[graft.sources.AnnStore]], whose probe reads exactly one partition
   * (plan-guarded, bit-identical to [[lshTopK]]; q199).
+  *
+  * Every family splits into candidate generation (its own frame or
+  * predicate: a bucket, a probe set, a filter, a code shortlist) and one
+  * shared exact re-ranking stage:
+  *   - [[topK]], the single-query probe: candidates × broadcast(query),
+  *     score, physical top-k (`TakeOrderedAndProject`);
+  *   - [[topKPerQuery]], the per-query probe: a `row_number` rank within
+  *     each query whose `rank <= k` plans as map-side `WindowGroupLimit`;
+  *   - [[byScore]], the tie rule both apply: the score in its direction,
+  *     then the id ascending, so a cut through equal scores keeps the
+  *     lower ids;
+  *   - [[probeSet]], the IVF probe-set rule: the `nProbe` nearest
+  *     centroids, chosen on the driver, ties to the lower index.
   */
 object Similarity {
+
+  /** The tie rule of every ranking here: `score` in its direction, then
+    * `idCol` ascending — a total order over distinct ids.
+    */
+  private[graft] def byScore(score: String, idCol: String,
+                             ascending: Boolean = false): Seq[Column] =
+    Seq(if (ascending) col(score).asc else col(score).desc, col(idCol).asc)
+
+  /** The single-query probe: `cands` × broadcast(`query`) when there is a
+    * query frame to join (a shortlist stage reads its score from `cands`
+    * alone), then the post-join predicate `where`, then (`idCol`, `carry`,
+    * `score` as `name`), then the top `n` by [[byScore]] — planned as
+    * `TakeOrderedAndProject`, never a sort of the candidates.
+    */
+  private[graft] def topK(cands: DataFrame, idCol: String, score: Column,
+                          name: String, n: Int,
+                          query: Option[DataFrame] = None,
+                          where: Column = lit(true), carry: Seq[String] = Nil,
+                          ascending: Boolean = false): DataFrame =
+    query.fold(cands)(q => cands.crossJoin(broadcast(q))).filter(where)
+      .select((idCol +: carry).map(col) :+ score.as(name): _*)
+      .orderBy(byScore(name, idCol, ascending): _*)
+      .limit(n)
+
+  /** The per-query probe: rank `scored` within each `qidCol` by `order`
+    * (a [[byScore]] order, or one already total within a query) and keep
+    * ranks `<= k`, which Spark plans as map-side `WindowGroupLimit`: only
+    * each task's top-k per query crosses the shuffle. The rank column is
+    * kept as `rank`, or dropped when `rank` is `None`.
+    */
+  private[graft] def topKPerQuery(scored: DataFrame, qidCol: String,
+                                  order: Seq[Column], k: Int,
+                                  rank: Option[String] = Some("rank")): DataFrame = {
+    val r = rank.getOrElse("__rn")
+    val kept = scored
+      .withColumn(r, row_number().over(
+        Window.partitionBy(col(qidCol)).orderBy(order: _*)))
+      .filter(col(r) <= k)
+    if (rank.isDefined) kept else kept.drop(r)
+  }
+
+  /** The IVF probe-set rule: the `nProbe` centroids nearest the query
+    * vector `q` by squared L2, each float widened to double before the
+    * subtraction, ties to the lower centroid index. Driver-side: k rows of
+    * centroids, no Spark job.
+    */
+  private[graft] def probeSet(centroids: Array[Array[Double]], q: Seq[Float],
+                              nProbe: Int): Seq[Int] =
+    centroids.zipWithIndex.map { case (c, i) =>
+      (c.zip(q).map { case (x, y) => (x - y) * (x - y) }.sum, i)
+    }.sorted.take(nProbe).map(_._2).toSeq
 
   /** Brute-force cosine top-k against the row `idCol == queryId`.
     * Deterministic tie-break on id.
@@ -21,11 +86,8 @@ object Similarity {
   def bruteForceTopK(emb: DataFrame, idCol: String, vecCol: String,
                      queryId: Long, k: Int): DataFrame = {
     val q = emb.filter(col(idCol) === queryId).select(col(vecCol).as("__q"))
-    emb.crossJoin(broadcast(q))
-      .filter(col(idCol) =!= queryId)
-      .select(col(idCol), cosineFast(col(vecCol), col("__q")).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col(idCol).asc)
-      .limit(k)
+    topK(emb, idCol, cosineFast(col(vecCol), col("__q")), "cos_sim", k,
+      Some(q), col(idCol) =!= queryId)
   }
 
   /** Deterministic pseudo-random hyperplanes (LCG over the flat index) — no
@@ -66,11 +128,8 @@ object Similarity {
     val bucketed = emb.withColumn("__bucket", lshBucket(col(vecCol), planes))
     val q = bucketed.filter(col(idCol) === queryId)
       .select(col(vecCol).as("__q"), col("__bucket").as("__qb"))
-    bucketed.crossJoin(broadcast(q))
-      .filter(col("__bucket") === col("__qb") && col(idCol) =!= queryId)
-      .select(col(idCol), cosineFast(col(vecCol), col("__q")).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col(idCol).asc)
-      .limit(k)
+    topK(bucketed, idCol, cosineFast(col(vecCol), col("__q")), "cos_sim", k,
+      Some(q), col("__bucket") === col("__qb") && col(idCol) =!= queryId)
   }
 
   /** Multi-table angular LSH top-k — the recall-compounding form of
@@ -95,12 +154,9 @@ object Similarity {
     val q = bucketed.filter(col(idCol) === queryId)
       .select(col(vecCol).as("__qv") +:
         ts.map(t => col(s"__b$t").as(s"__qb$t")): _*)
-    bucketed.crossJoin(broadcast(q))
-      .filter(ts.map(t => col(s"__b$t") === col(s"__qb$t")).reduce(_ || _) &&
+    topK(bucketed, idCol, cosineFast(col(vecCol), col("__qv")), "cos_sim", k,
+      Some(q), ts.map(t => col(s"__b$t") === col(s"__qb$t")).reduce(_ || _) &&
         col(idCol) =!= queryId)
-      .select(col(idCol), cosineFast(col(vecCol), col("__qv")).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col(idCol).asc)
-      .limit(k)
   }
 
   // ----------------------------------------------------------------- MIPS
@@ -113,11 +169,8 @@ object Similarity {
   def mipsTopK(emb: DataFrame, idCol: String, vecCol: String,
                queryId: Long, k: Int): DataFrame = {
     val q = emb.filter(col(idCol) === queryId).select(col(vecCol).as("__q"))
-    emb.crossJoin(broadcast(q))
-      .filter(col(idCol) =!= queryId)
-      .select(col(idCol), dot(col(vecCol), col("__q")).as("ip"))
-      .orderBy(col("ip").desc, col(idCol).asc)
-      .limit(k)
+    topK(emb, idCol, dot(col(vecCol), col("__q")), "ip", k, Some(q),
+      col(idCol) =!= queryId)
   }
 
   /** MIPS scale path — norm-augmentation reduction to angular LSH (the
@@ -166,12 +219,9 @@ object Similarity {
     val q = bucketed.filter(col(idCol) === queryId)
       .select(col(vecCol).as("__qv") +:
         tables.map(t => bucket(t, w => lit(0.0) * w).as(s"__qb$t")): _*)
-    bucketed.crossJoin(broadcast(q))
-      .filter(tables.map(t => col(s"__b$t") === col(s"__qb$t"))
-        .reduce(_ || _) && col(idCol) =!= queryId)
-      .select(col(idCol), dot(col(vecCol), col("__qv")).as("ip"))
-      .orderBy(col("ip").desc, col(idCol).asc)
-      .limit(k)
+    topK(bucketed, idCol, dot(col(vecCol), col("__qv")), "ip", k, Some(q),
+      tables.map(t => col(s"__b$t") === col(s"__qb$t")).reduce(_ || _) &&
+        col(idCol) =!= queryId)
   }
 
   /** MIPS via NORM-RANGING (the published refinement of simple-LSH: split
@@ -280,11 +330,8 @@ object Similarity {
     val q = bucketed.filter(col(idCol) === queryId)
       .select(col(vecCol).as("__qv"),
         mipsQuerySignature(col(vecCol), nPlanes, dim).as("__qb"))
-    bucketed.crossJoin(broadcast(q))
-      .filter(col("__bucket") === col("__qb") && col(idCol) =!= queryId)
-      .select(col(idCol), dot(col(vecCol), col("__qv")).as("ip"))
-      .orderBy(col("ip").desc, col(idCol).asc)
-      .limit(k)
+    topK(bucketed, idCol, dot(col(vecCol), col("__qv")), "ip", k, Some(q),
+      col("__bucket") === col("__qb") && col(idCol) =!= queryId)
   }
 
   /** BATCHED norm-ranged MIPS — the shape a retrieval-training pipeline
@@ -313,10 +360,7 @@ object Similarity {
       .join(broadcast(q),
         col("__bucket") === col("__qb") && col(idCol) =!= col("q_id"))
       .select(col("q_id"), col(idCol), dot(col(vecCol), col("__qv")).as("ip"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("ip").desc, col(idCol).asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topKPerQuery(scored, "q_id", byScore("ip", idCol), k)
   }
 
   /** Batched EXACT cosine kNN join — the N-queries-at-once form of
@@ -339,10 +383,7 @@ object Similarity {
       .filter(col(idCol) =!= col("q_id")) // self excluded, as the MIPS batch
       .select(col("q_id"), col(idCol),
         cosineFast(col(vecCol), col("__qv")).as("cos_sim"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("cos_sim").desc, col(idCol).asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topKPerQuery(scored, "q_id", byScore("cos_sim", idCol), k)
   }
 
   // ------------------------------------------------------------------ IVF
@@ -447,18 +488,11 @@ object Similarity {
     val emb = emb0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val centroids = ivfCentroids(emb, idCol, vecCol, nClusters, iters,
       trainFraction)
-    val q = emb.filter(col(idCol) === queryId).select(col(vecCol)).head().getSeq[Float](0)
-    val probes = centroids.zipWithIndex.map { case (c, i) =>
-      val d2 = c.zip(q).map { case (x, y) => (x - y) * (x - y) }.sum
-      (d2, i)
-    }.sortBy { case (d2, i) => (d2, i) }.take(nProbe).map(_._2).toSeq
     val qv = emb.filter(col(idCol) === queryId).select(col(vecCol).as("__q"))
-    emb.withColumn("__c", assignCluster(col(vecCol), centroids))
-      .filter(col("__c").isin(probes: _*) && col(idCol) =!= queryId)
-      .crossJoin(broadcast(qv))
-      .select(col(idCol), cosineFast(col(vecCol), col("__q")).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col(idCol).asc)
-      .limit(k)
+    val probes = probeSet(centroids, qv.head().getSeq[Float](0), nProbe)
+    topK(emb.withColumn("__c", assignCluster(col(vecCol), centroids))
+        .filter(col("__c").isin(probes: _*) && col(idCol) =!= queryId),
+      idCol, cosineFast(col(vecCol), col("__q")), "cos_sim", k, Some(qv))
   }
 
   /** Predicate-filtered exact top-k (the filtered-vector-search shape every
@@ -479,12 +513,8 @@ object Similarity {
   def filteredTopK(emb: DataFrame, idCol: String, vecCol: String,
                    predicate: String, queryId: Long, k: Int): DataFrame = {
     val q = emb.filter(col(idCol) === queryId).select(col(vecCol).as("__q"))
-    emb.filter(expr(predicate))
-      .filter(col(idCol) =!= queryId)
-      .crossJoin(broadcast(q))
-      .select(col(idCol), cosineFast(col(vecCol), col("__q")).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col(idCol).asc)
-      .limit(k)
+    topK(emb.filter(expr(predicate)).filter(col(idCol) =!= queryId), idCol,
+      cosineFast(col(vecCol), col("__q")), "cos_sim", k, Some(q))
   }
 
   /** Each row's `nProbe` nearest centroid indices (ascending distance, ties
@@ -521,21 +551,17 @@ object Similarity {
   def ivfKnnJoin(emb0: DataFrame, idCol: String, vecCol: String,
                  nQueries: Int, k: Int, nClusters: Int, nProbe: Int,
                  iters: Int = 3): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val emb = emb0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val centroids = ivfCentroids(emb, idCol, vecCol, nClusters, iters)
     val corpus = emb.withColumn("__c", assignCluster(col(vecCol), centroids))
     val queries = emb.filter(col(idCol) < nQueries)
       .select(col(idCol).as("query_id"), col(vecCol).as("__qv"),
         explode(probeClusters(col(vecCol), centroids, nProbe)).as("__c"))
-    corpus.join(queries, "__c")
+    topKPerQuery(corpus.join(queries, "__c")
       .filter(col(idCol) =!= col("query_id"))
       .select(col("query_id"), col(idCol),
-        cosineFast(col(vecCol), col("__qv")).as("cos_sim"))
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("cos_sim").desc, col(idCol).asc)))
-      .filter(col("__rn") <= k)
-      .select(col("query_id"), col(idCol), col("cos_sim"))
+        cosineFast(col(vecCol), col("__qv")).as("cos_sim")),
+      "query_id", byScore("cos_sim", idCol), k, rank = None)
   }
 
   /** ANN quality evaluation: recall@k of the IVF probe search
@@ -558,19 +584,15 @@ object Similarity {
   def knnRecall(emb: DataFrame, idCol: String, vecCol: String,
                 nQueries: Int, k: Int, nClusters: Int, nProbe: Int,
                 iters: Int = 3): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val approx = ivfKnnJoin(emb, idCol, vecCol, nQueries, k, nClusters, nProbe,
       iters).select(col("query_id"), col(idCol))
     val q = emb.filter(col(idCol) < nQueries)
       .select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
-    val exact = emb.crossJoin(broadcast(q))
+    val exact = topKPerQuery(emb.crossJoin(broadcast(q))
       .filter(col(idCol) =!= col("query_id"))
       .select(col("query_id"), col(idCol),
-        cosineFast(col(vecCol), col("__qv")).as("cos_sim"))
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy("query_id")
-          .orderBy(col("cos_sim").desc, col(idCol).asc)))
-      .filter(col("__rn") <= k)
+        cosineFast(col(vecCol), col("__qv")).as("cos_sim")),
+      "query_id", byScore("cos_sim", idCol), k, rank = None)
       .select(col("query_id"), col(idCol))
     val hits = exact.join(approx, Seq("query_id", idCol), "left_semi")
       .groupBy("query_id").agg(count(lit(1)).as("n_hits"))
@@ -601,11 +623,8 @@ object Similarity {
                  iters: Int = 3): DataFrame = {
     val emb = emb0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val centroids = ivfCentroids(emb, idCol, vecCol, nClusters, iters)
-    val q = emb.filter(col(idCol) === queryId).select(col(vecCol)).head().getSeq[Float](0)
-    val probes = centroids.zipWithIndex.map { case (c, i) =>
-      val d2 = c.zip(q).map { case (x, y) => (x - y) * (x - y) }.sum
-      (d2, i)
-    }.sortBy { case (d2, i) => (d2, i) }.take(nProbe).map(_._2).toSeq
+    val qv = emb.filter(col(idCol) === queryId).select(col(vecCol).as("__q"))
+    val probes = probeSet(centroids, qv.head().getSeq[Float](0), nProbe)
     val codes = int8QuantizationErrors(emb, idCol, vecCol)
       .select(col(idCol), col("dim"), col("code"))
     val qCodes = codes.filter(col(idCol) === queryId)
@@ -613,20 +632,15 @@ object Similarity {
     val cand = emb.withColumn("__c", assignCluster(col(vecCol), centroids))
       .filter(col("__c").isin(probes: _*) && col(idCol) =!= queryId)
       .select(col(idCol))
-    val shortlist = cand.join(codes, idCol)
+    val sdc = cand.join(codes, idCol)
       .join(broadcast(qCodes), "dim")
       .groupBy(col(idCol))
       .agg(sum((col("code") - col("__qcode")) * (col("code") - col("__qcode")))
         .cast("long").as("sdc_dist"))
-      .orderBy(col("sdc_dist").asc, col(idCol).asc)
-      .limit(rerank)
-    val qv = emb.filter(col(idCol) === queryId).select(col(vecCol).as("__q"))
-    shortlist.join(emb, idCol)
-      .crossJoin(broadcast(qv))
-      .select(col(idCol), col("sdc_dist"),
-        cosineFast(col(vecCol), col("__q")).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col(idCol).asc)
-      .limit(k)
+    val shortlist = topK(sdc, idCol, col("sdc_dist"), "sdc_dist", rerank,
+      ascending = true)
+    topK(shortlist.join(emb, idCol), idCol, cosineFast(col(vecCol), col("__q")),
+      "cos_sim", k, Some(qv), carry = Seq("sdc_dist"))
   }
 
   /** Per-subspace PQ codebooks: the embedding is split into `m` contiguous
@@ -676,12 +690,9 @@ object Similarity {
                 pqIters: Int = 2): DataFrame = {
     val emb = emb0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val centroids = ivfCentroids(emb, idCol, vecCol, nClusters, coarseIters)
-    val q = emb.filter(col(idCol) === queryId).select(col(vecCol))
-      .head().getSeq[Float](0)
-    val probes = centroids.zipWithIndex.map { case (c, i) =>
-      val d2 = c.zip(q).map { case (x, y) => (x - y) * (x - y) }.sum
-      (d2, i)
-    }.sortBy { case (d2, i) => (d2, i) }.take(nProbe).map(_._2).toSeq
+    val qv = emb.filter(col(idCol) === queryId).select(col(vecCol).as("__q"))
+    val q = qv.head().getSeq[Float](0)
+    val probes = probeSet(centroids, q, nProbe)
     val books = pqCodebooks(emb, idCol, vecCol, m, subDim, ksub, pqIters)
     // driver-side ADC table: dtab(j)(c) = ⌊‖q_j − books(j)(c)‖²·2¹⁴ + ½⌋
     val dtab: Array[Array[Long]] = Array.tabulate(m) { j =>
@@ -695,18 +706,12 @@ object Similarity {
       val code = assignCluster(slice(col(vecCol), j * subDim + 1, subDim), books(j))
       element_at(typedLit(dtab(j).toSeq), code + 1)
     }.reduce(_ + _)
-    val shortlist = emb.withColumn("__c", assignCluster(col(vecCol), centroids))
-      .filter(col("__c").isin(probes: _*) && col(idCol) =!= queryId)
-      .select(col(idCol), adc.as("adc_dist"))
-      .orderBy(col("adc_dist").asc, col(idCol).asc)
-      .limit(rerank)
-    val qv = emb.filter(col(idCol) === queryId).select(col(vecCol).as("__q"))
-    shortlist.join(emb, idCol)
-      .crossJoin(broadcast(qv))
-      .select(col(idCol), col("adc_dist"),
-        cosineFast(col(vecCol), col("__q")).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col(idCol).asc)
-      .limit(k)
+    val shortlist = topK(
+      emb.withColumn("__c", assignCluster(col(vecCol), centroids))
+        .filter(col("__c").isin(probes: _*) && col(idCol) =!= queryId),
+      idCol, adc, "adc_dist", rerank, ascending = true)
+    topK(shortlist.join(emb, idCol), idCol, cosineFast(col(vecCol), col("__q")),
+      "cos_sim", k, Some(qv), carry = Seq("adc_dist"))
   }
 
   /** Sub-quadratic embedding near-dup: banded multi-table random-hyperplane
@@ -841,7 +846,6 @@ object Similarity {
   def semDedupPrune(emb: DataFrame, idCol: String, vecCol: String,
                     nClusters: Int, minSim: Double,
                     iters: Int = 3): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val centroids = ivfCentroids(emb, idCol, vecCol, nClusters, iters)
     val assigned = emb
       .select(col(idCol).as("__id"), col(vecCol).as("__v"))
@@ -899,7 +903,6 @@ object Similarity {
                            idCol: String, vecCol: String,
                            nClusters: Int, minSim: Double,
                            iters: Int = 3): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val centroids = ivfCentroids(corpus, idCol, vecCol, nClusters, iters)
     val corpusA = corpus
       .select(col(idCol).as("__cid"), col(vecCol).as("__cv"))
@@ -1000,17 +1003,11 @@ object Similarity {
       binarySig(vecCol, dim).as("__sig"))
     val q = sigd.filter(col(idCol) === queryId)
       .select(col("__sig").as("__qsig"), col(vecCol).as("__qv"))
-    val scored = sigd.filter(col(idCol) =!= queryId)
-      .crossJoin(broadcast(q))
-      .select(col(idCol), col(vecCol), col("__qv"),
-        hamming(col("__sig"), col("__qsig")).as("hamming"))
-      .orderBy(col("hamming").asc, col(idCol).asc)
-      .limit(shortlist)
-    scored
-      .select(col(idCol), col("hamming"),
-        cosineFast(col(vecCol), col("__qv")).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col(idCol).asc)
-      .limit(k)
+    val scored = topK(sigd.filter(col(idCol) =!= queryId), idCol,
+      hamming(col("__sig"), col("__qsig")), "hamming", shortlist, Some(q),
+      carry = Seq(vecCol, "__qv"), ascending = true)
+    topK(scored, idCol, cosineFast(col(vecCol), col("__qv")), "cos_sim", k,
+      carry = Seq("hamming"))
   }
 
   /** HARD negative mining — the contrastive complement of
@@ -1036,7 +1033,6 @@ object Similarity {
   def hardNegatives(emb: DataFrame, idCol: String, vecCol: String,
                     queries: DataFrame, qidCol: String,
                     positives: DataFrame, pool: Int, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(pool >= k && k >= 1, s"need pool >= k >= 1, got pool=$pool k=$k")
     val posQ = if (qidCol == idCol) "q_id" else qidCol
     require(positives.columns.contains(posQ) &&
@@ -1047,9 +1043,8 @@ object Similarity {
     val hard = knn.join(
       positives.select(col(posQ).as("q_id"), col(idCol)), Seq("q_id", idCol),
       "left_anti")
-    val w = Window.partitionBy(col("q_id")).orderBy(col("rank").asc)
-    hard.withColumn("hard_rank", row_number().over(w))
-      .filter(col("hard_rank") <= k)
+    // the kNN rank already applies the tie rule: a total order per query
+    topKPerQuery(hard, "q_id", Seq(col("rank").asc), k, Some("hard_rank"))
       .select(col("q_id"), col(idCol), col("cos_sim"), col("hard_rank"))
   }
 
@@ -1105,10 +1100,8 @@ object Similarity {
       .crossJoin(broadcast(cdf))
       .select(col("__id"), col("__c"),
         floor(d2 * lit(16384.0) + lit(0.5)).cast("long").as("__q2"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("__id").orderBy(col("__q2"), col("__c"))
-    val top2 = graded.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= 2)
+    val top2 = topKPerQuery(graded, "__id",
+        byScore("__q2", "__c", ascending = true), 2, Some("__rn"))
       .groupBy("__id").agg(
         max(when(col("__rn") === 1, col("__c"))).as("cluster"),
         max(when(col("__rn") === 1, col("__q2"))).as("__qa"),

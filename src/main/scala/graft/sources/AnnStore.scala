@@ -4,6 +4,7 @@ import graft.functions.VectorFunctions._
 import graft.operators.Similarity
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 
 /** Persisted bucket-partitioned ANN/MIPS storage — the materialization of
   * the scale claim the LSH operators make in their docstrings: the bucket
@@ -114,10 +115,9 @@ object AnnStore {
     * query's signature in every table, the scan is pruned by the OR of
     * per-table (t, bucket) partition predicates — ≤ `tables` partitions
     * read — and candidates dedup by id (a row matching in several tables is
-    * stored once per table) before the exact-cosine rerank. Signatures
-    * unrepresentable in an Int-inferred partition type contribute no
-    * predicate (every stored bucket fits the type — the wrapped cast would
-    * prune to the WRONG bucket; same guard as [[rerank]]).
+    * stored once per table) before the exact-cosine rerank. A signature
+    * the store's bucket type cannot hold contributes no predicate
+    * ([[bucketLiteral]]).
     */
   def probeAngularMulti(spark: SparkSession, path: String, idCol: String,
                         vecCol: String, query: DataFrame, k: Int,
@@ -131,25 +131,13 @@ object AnnStore {
         .as(s"__s$t")): _*).head
     val sigs = ts.map(t => t -> sigRow.getLong(t))
     val store = spark.read.parquet(path)
-    val bucketType = store.schema("bucket").dataType
-    val representable: Long => Boolean = bucketType match {
-      case org.apache.spark.sql.types.IntegerType => _.isValidInt
-      case _ => _ => true
+    val preds = sigs.flatMap { case (t, s) =>
+      bucketLiteral(store, s).map(l => col("t") === t && col("bucket") === l)
     }
-    val preds = sigs.collect { case (t, s) if representable(s) =>
-      col("t") === t && col("bucket") === lit(s).cast(bucketType)
-    }
-    val hit = if (preds.isEmpty) store.filter(lit(false))
-              else store.filter(preds.reduce(_ || _))
-    val pruned = excludeId.foldLeft(hit) {
-      (d, id) => d.filter(col(idCol) =!= id)
-    }
-    pruned.select(col(idCol), col(vecCol))
-      .dropDuplicates(idCol)
-      .crossJoin(broadcast(query.select(col(vecCol).as("__q"))))
-      .select(col(idCol), cosineFast(col(vecCol), col("__q")).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col(idCol).asc)
-      .limit(k)
+    val hit = store.filter(preds.reduceOption(_ || _).getOrElse(lit(false)))
+    cosineTopK(excluding(hit, idCol, excludeId)
+      .select(col(idCol), col(vecCol)).dropDuplicates(idCol),
+      idCol, vecCol, query, k)
   }
 
   /** MULTI-PROBE angular probe (Lv et al., VLDB 2007): beside the query's
@@ -182,24 +170,8 @@ object AnnStore {
       .map(i => (math.abs(row.getDouble(i + 1)), i))
       .sortBy { case (m, i) => (m, i) }.take(nFlips).map(_._2)
     val sigs = sig +: flips.map(j => sig ^ (1L << j))
-    val store = spark.read.parquet(path)
-    // same partition-type guard as the batched probes: literals matched to
-    // the inferred type keep the IN a bare partition filter; unrepresentable
-    // signatures match nothing by construction
-    val sigLits: Seq[Any] = store.schema("bucket").dataType match {
-      case org.apache.spark.sql.types.IntegerType =>
-        sigs.filter(_.isValidInt).map(_.toInt)
-      case _ => sigs
-    }
-    val hit = if (sigLits.isEmpty) store.filter(lit(false))
-              else store.filter(col("bucket").isin(sigLits: _*))
-    val pruned = excludeId.foldLeft(hit) {
-      (d, id) => d.filter(col(idCol) =!= id)
-    }
-    pruned.crossJoin(broadcast(query.select(col(vecCol).as("__q"))))
-      .select(col(idCol), cosineFast(col(vecCol), col("__q")).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col(idCol).asc)
-      .limit(k)
+    cosineTopK(excluding(inBuckets(spark.read.parquet(path), sigs), idCol,
+      excludeId), idCol, vecCol, query, k)
   }
 
   /** Write the corpus partitioned by (norm band, augmented-sign bucket) —
@@ -320,28 +292,11 @@ object AnnStore {
     val q = queries.select(col(qidCol).as("q_id"), col(vecCol).as("__qv"),
       Similarity.mipsQuerySignature(col(vecCol), nPlanes, dim).as("__qb"))
     val sigs = q.select(col("__qb")).distinct().collect().map(_.getLong(0))
-    val store = spark.read.parquet(path)
-    // literals matched to the inferred partition type keep the IN a bare
-    // attribute-vs-literal-set partition filter (a cast on the attribute
-    // would defeat pruning). When inference yields IntegerType, every
-    // STORED bucket fits an Int — a signature outside Int range can match
-    // nothing, so it is dropped rather than narrowed (a wrapping toInt
-    // would read the wrong bucket; the join recheck keeps that correct but
-    // it is pure wasted IO, and the empty-result truth is free).
-    val sigLits: Seq[Any] = store.schema("bucket").dataType match {
-      case org.apache.spark.sql.types.IntegerType =>
-        sigs.toSeq.filter(_.isValidInt).map(_.toInt)
-      case _ => sigs.toSeq
-    }
-    val pruned = store.filter(col("bucket").isin(sigLits: _*))
-    val scored = pruned
+    val scored = inBuckets(spark.read.parquet(path), sigs.toSeq)
       .join(broadcast(q),
         col("bucket") === col("__qb") && col(idCol) =!= col("q_id"))
       .select(col("q_id"), col(idCol), dot(col(vecCol), col("__qv")).as("ip"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("ip").desc, col(idCol).asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    Similarity.topKPerQuery(scored, "q_id", Similarity.byScore("ip", idCol), k)
   }
 
   /** Write the corpus partitioned by IVF coarse-cluster id — the FAISS
@@ -408,21 +363,10 @@ object AnnStore {
   def probeIvf(spark: SparkSession, path: String, idCol: String,
                vecCol: String, query: DataFrame, k: Int, nProbe: Int,
                excludeId: Option[Long] = None): DataFrame = {
-    val centroids = readIvfCentroids(spark, path)
-    val qv = query.select(col(vecCol)).head.getSeq[Float](0)
-    val probes = centroids.zipWithIndex.map { case (c, i) =>
-      val d2 = c.zip(qv).map { case (x, y) => (x - y) * (x - y) }.sum
-      (d2, i)
-    }.sortBy { case (d2, i) => (d2, i) }.take(nProbe).map(_._2).toSeq
-    val store = spark.read.parquet(path)
-    val hit = store.filter(col("cluster").isin(probes: _*))
-    val pruned = excludeId.foldLeft(hit) {
-      (d, id) => d.filter(col(idCol) =!= id)
-    }
-    pruned.crossJoin(broadcast(query.select(col(vecCol).as("__q"))))
-      .select(col(idCol), cosineFast(col(vecCol), col("__q")).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col(idCol).asc)
-      .limit(k)
+    val probes = Similarity.probeSet(readIvfCentroids(spark, path),
+      query.select(col(vecCol)).head.getSeq[Float](0), nProbe)
+    val hit = spark.read.parquet(path).filter(col("cluster").isin(probes: _*))
+    cosineTopK(excluding(hit, idCol, excludeId), idCol, vecCol, query, k)
   }
 
   /** Incremental SemDeDup against the IVF store — the EXECUTED form of the
@@ -558,33 +502,45 @@ object AnnStore {
     }.toArray
   }
 
-  /** Shared probe tail: prune to `bucket = sig` (literal cast to the
-    * partition column's inferred type so the comparison stays a bare
-    * attribute-vs-literal partition filter, never a cast on the attribute —
-    * that is what keeps pruning effective), broadcast the 1-row query,
-    * score, top-k. A signature that cannot be represented in the inferred
-    * partition type matches nothing by construction (every stored bucket
-    * fits the type), so the probe returns empty instead of letting the
-    * non-ANSI cast wrap into the WRONG bucket.
+  /** Shared probe tail: prune to `bucket = sig` ([[inBuckets]]: a
+    * signature the store's bucket type cannot hold reads nothing), then
+    * the single-query probe over the 1-row `query`.
     */
   private[graft] def rerank(store: DataFrame, idCol: String, vecCol: String,
                      query: DataFrame, k: Int, sig: Long,
                      excludeId: Option[Long], scoreName: String,
-                     score: (Column, Column) => Column): DataFrame = {
-    val bucketType = store.schema("bucket").dataType
-    val representable = bucketType match {
-      case org.apache.spark.sql.types.IntegerType => sig.isValidInt
-      case _ => true
-    }
-    val sigLit = lit(sig).cast(bucketType)
-    val hit = if (representable) store.filter(col("bucket") === sigLit)
-              else store.filter(lit(false))
-    val pruned = excludeId.foldLeft(hit) {
-      (d, id) => d.filter(col(idCol) =!= id)
-    }
-    pruned.crossJoin(broadcast(query.select(col(vecCol).as("__q"))))
-      .select(col(idCol), score(col(vecCol), col("__q")).as(scoreName))
-      .orderBy(col(scoreName).desc, col(idCol).asc)
-      .limit(k)
+                     score: (Column, Column) => Column): DataFrame =
+    Similarity.topK(excluding(inBuckets(store, Seq(sig)), idCol, excludeId),
+      idCol, score(col(vecCol), col("__q")), scoreName, k,
+      Some(query.select(col(vecCol).as("__q"))))
+
+  /** Exact-cosine [[Similarity.topK]] of `cands` against the 1-row `query`. */
+  private def cosineTopK(cands: DataFrame, idCol: String, vecCol: String,
+                         query: DataFrame, k: Int): DataFrame =
+    Similarity.topK(cands, idCol, cosineFast(col(vecCol), col("__q")),
+      "cos_sim", k, Some(query.select(col(vecCol).as("__q"))))
+
+  private def excluding(df: DataFrame, idCol: String,
+                        excludeId: Option[Long]): DataFrame =
+    excludeId.foldLeft(df)((d, id) => d.filter(col(idCol) =!= id))
+
+  /** The bucket-literal guard: `sig` as a literal of the store's inferred
+    * `bucket` partition type, so a filter on it stays a bare
+    * attribute-vs-literal partition filter (a cast on the attribute would
+    * defeat pruning). A signature the type cannot hold (over 31 bits on an
+    * Int-inferred store) matches no stored bucket, so it is `None`: a
+    * wrapped literal would read the WRONG bucket.
+    */
+  private def bucketLiteral(store: DataFrame, sig: Long): Option[Column] = {
+    val t = store.schema("bucket").dataType
+    if (t == IntegerType && !sig.isValidInt) None else Some(lit(sig).cast(t))
+  }
+
+  /** `store` pruned to the buckets `sigs` ([[bucketLiteral]]); no rows when
+    * none of them can be stored.
+    */
+  private def inBuckets(store: DataFrame, sigs: Seq[Long]): DataFrame = {
+    val lits = sigs.flatMap(bucketLiteral(store, _))
+    store.filter(if (lits.isEmpty) lit(false) else col("bucket").isin(lits: _*))
   }
 }

@@ -407,21 +407,25 @@ object TxLog {
 
   /** The one raw Parquet read under a table root: exactly `paths` (data
     * files or sidecar dirs), partition inference off — see [[partSeg]].
+    * Without `mergeSchema` the schema is the footer of the LAST path — the
+    * newest add when `paths` are in manifest order — handed to the reader,
+    * so it never depends on the order the file index lists the `tx-*`
+    * directories in.
     */
   private def parquetFiles(spark: SparkSession, paths: Seq[String],
                            mergeSchema: Boolean = false): DataFrame = {
     val reader = spark.read.option("recursiveFileLookup", "true")
-    (if (mergeSchema) reader.option("mergeSchema", "true") else reader)
-      .parquet(paths: _*)
+    if (mergeSchema) reader.option("mergeSchema", "true").parquet(paths: _*)
+    else reader.schema(reader.parquet(paths.last).schema).parquet(paths: _*)
   }
 
   /** The one pruned read behind every snapshot reader: scan `files` (the
     * pruning survivors among `s`'s), anti-filter `s`'s deletion vectors,
     * surface `logical`'s column names ([[renameColumn]]), then apply the
     * caller's residual `where`. When no file survives, the result is empty
-    * but keeps the schema of the first `donors` file — the table's, by
-    * default — so downstream resolution still works; only a donor-less
-    * read is the schemaless `emptyDataFrame`.
+    * but keeps the schema of the last `donors` file — the table's newest
+    * add, by default, as a full read would — so downstream resolution still
+    * works; only a donor-less read is the schemaless `emptyDataFrame`.
     *
     * DVs always resolve against `s` (the snapshot that owns the files);
     * the logical surface may be pinned to a DIFFERENT snapshot —
@@ -440,7 +444,7 @@ object TxLog {
     if (files.isEmpty) {
       // one footer read; the false filter folds to an empty LocalRelation
       return if (donors.isEmpty) spark.emptyDataFrame
-        else logicalize(parquetFiles(spark, Seq(resolve(path, donors.head))),
+        else logicalize(parquetFiles(spark, Seq(resolve(path, donors.last))),
           logical).filter(lit(false))
     }
     val df = parquetFiles(spark, files.map(resolve(path, _)), mergeSchema)
@@ -976,9 +980,11 @@ object TxLog {
     Snapshot(v, entries)
   }
 
-  /** DataFrame over a snapshot; partition columns are recovered from the
-    * `part=val` path segments via `basePath`. Uses one file's footer for the
-    * schema (cheap) — for a table whose commits DRIFTED schemas, use
+  /** DataFrame over a snapshot; partition columns are read from the data
+    * files (see [[partSeg]]). The schema is one footer's (cheap): that of the
+    * snapshot's newest add in manifest order, so a table whose later
+    * commits ADDED a column reads with it, whatever the file listing order.
+    * To union the footers of a table whose commits DRIFTED schemas, use
     * [[readMerged]].
     */
   def read(spark: SparkSession, path: String, version: Long = -1L): DataFrame =

@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * tool cannot profile a session shape `Bench` never runs. Likewise one
   * home for store table state (`StoreState`, on TxLog's kv sidecar) and
   * one stream launcher (`AvailableNow`), one TxLog commit function and raw
-  * scan, and one spread-before-explode rule (`Parallelism.spread`).
+  * scan, one spread-before-explode rule (`Parallelism.spread`), and one
+  * top-k form per vector-search probe.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -64,5 +65,29 @@ class SourceGuardSpec extends AnyFunSuite {
   test("Parallelism.estimate is called only from Parallelism.spread") {
     // the definition plus the one call inside spread
     assert(occurrences("""\bestimate\(""") == Map("Parallelism.scala" -> 2))
+  }
+
+  /** The `def` enclosing each match of `re` in the vector-search sources
+    * (`Similarity.scala`, `AnnStore.scala`): the nearest `def` above it.
+    */
+  private def vectorSearchDefs(re: String): Seq[String] = {
+    val defRe = """\bdef\s+(\w+)""".r
+    Seq("operators/Similarity.scala", "sources/AnnStore.scala").flatMap { f =>
+      val src = Files.readString(Paths.get(s"src/main/scala/graft/$f"))
+      re.r.findAllMatchIn(src).map { m =>
+        defRe.findAllMatchIn(src.substring(0, m.start)).toSeq.last.group(1)
+      }
+    }
+  }
+
+  test("vector search: one bucket-literal guard, one top-k form per probe") {
+    assert(occurrences("""\bisValidInt\b""") == Map("AnnStore.scala" -> 1))
+    // the single-query probe, and ivfCentroids' init (the k smallest ids)
+    assert(vectorSearchDefs("""\.limit\(""").sorted == Seq("ivfCentroids", "topK"))
+    // the per-query probe, and the pair and semantic-dedup functions that
+    // keep only the best match (rank 1) or rank components
+    assert(vectorSearchDefs("""\brow_number\(\)""").toSet == Set("topKPerQuery",
+      "semDedupPrune", "semDedupPruneAgainst", "semDedupProbe",
+      "decontaminationProbe"))
   }
 }

@@ -231,6 +231,86 @@ class AnnStoreSpec extends SparkSpec {
     assert(run(wide).count() == 0)
   }
 
+  /** A float vector whose sign against each of `planes` spells `sig` (bit p
+    * set ↔ dot ≥ 0): the minimum-norm solution of `planes · v = ±1`.
+    */
+  private def vectorSpelling(planes: Seq[Seq[Double]], sig: Long): Seq[Float] = {
+    val n = planes.size
+    val t = Array.tabulate(n)(p => if ((sig >> p & 1L) == 1L) 1.0 else -1.0)
+    val a = Array.tabulate(n, n)((i, j) =>
+      planes(i).zip(planes(j)).map { case (x, y) => x * y }.sum)
+    for (c <- 0 until n) { // Gaussian elimination, partial pivoting
+      val piv = (c until n).maxBy(r => math.abs(a(r)(c)))
+      val (ar, tr) = (a(c), t(c)); a(c) = a(piv); t(c) = t(piv); a(piv) = ar; t(piv) = tr
+      for (r <- c + 1 until n) {
+        val f = a(r)(c) / a(c)(c)
+        for (j <- c until n) a(r)(j) -= f * a(c)(j)
+        t(r) -= f * t(c)
+      }
+    }
+    val y = new Array[Double](n)
+    for (r <- n - 1 to 0 by -1)
+      y(r) = (t(r) - (r + 1 until n).map(j => a(r)(j) * y(j)).sum) / a(r)(r)
+    planes.head.indices.map(d => planes.indices.map(p => y(p) * planes(p)(d)).sum.toFloat)
+  }
+
+  test("probeAngularMulti, probeAngularMultiProbe, probeMipsBatch: a signature outside an Int-inferred partition type returns empty, never a wrapped bucket") {
+    import spark.implicits._
+    // 33 planes put bit 32 in reach; dim 96 makes the 33 LCG planes (and
+    // the MIPS construction's first 96 coordinates of its 97-wide planes)
+    // linearly independent, so any signature has a vector that spells it
+    val (nPlanes, dim, wide) = (33, 96, 5L + (1L << 32))
+    assert(wide.toInt == 5)
+    val angular = Similarity.hyperplanes(nPlanes, dim)
+    val mips = Similarity.hyperplanesFrom(0, nPlanes, dim + 1).map(_.init)
+    def queries(planes: Seq[Seq[Double]]) = Seq(5L, wide).map { s =>
+      s -> Seq((100L, vectorSpelling(planes, s))).toDF("vec_id", "embedding")
+    }
+    def sigOf(q: DataFrame, c: org.apache.spark.sql.Column) =
+      q.select(c).head.getLong(0)
+    // bucket 5 of each layout holds two rows; no stored bucket exceeds Int
+    val rows = Seq((1L, Seq.fill(dim)(1.0f)), (2L, Seq.fill(dim)(0.5f)))
+    val tmp = java.nio.file.Files.createTempDirectory("graft-annguard").toString
+    val single = s"$tmp/single"; val multi = s"$tmp/multi"; val mipsPath = s"$tmp/mips"
+    rows.map { case (id, v) => (id, v, 5) }.toDF("vec_id", "embedding", "bucket")
+      .write.partitionBy("bucket").parquet(single)
+    rows.map { case (id, v) => (id, v, 0, 5) }.toDF("vec_id", "embedding", "t", "bucket")
+      .write.partitionBy("t", "bucket").parquet(multi)
+    rows.map { case (id, v) => (id, v, 0, 5) }.toDF("vec_id", "embedding", "band", "bucket")
+      .write.partitionBy("band", "bucket").parquet(mipsPath)
+    Seq(single, multi, mipsPath).foreach(p => assert(
+      spark.read.parquet(p).schema("bucket").dataType ==
+        org.apache.spark.sql.types.IntegerType))
+    val probes: Seq[(String, Seq[Seq[Double]], DataFrame => DataFrame)] = Seq(
+      ("probeAngularMulti", angular, q => AnnStore.probeAngularMulti(spark, multi,
+        "vec_id", "embedding", q, k = 10, planesPerTable = nPlanes, tables = 1,
+        dim = dim)),
+      ("probeAngularMultiProbe", angular, q => AnnStore.probeAngularMultiProbe(
+        spark, single, "vec_id", "embedding", q, k = 10, nPlanes = nPlanes,
+        dim = dim, nFlips = 0)),
+      ("probeMipsBatch", mips, q => AnnStore.probeMipsBatch(spark, mipsPath,
+        "vec_id", "embedding", q, "vec_id", k = 10, nPlanes = nPlanes,
+        dim = dim)))
+    probes.foreach { case (name, planes, probe) =>
+      queries(planes).foreach { case (sig, q) =>
+        // the query really carries the signature under the probe's planes
+        val spelled = if (planes eq mips)
+          sigOf(q, Similarity.mipsQuerySignature(col("embedding"), nPlanes, dim))
+        else sigOf(q, Similarity.lshBucket(col("embedding"), angular))
+        assert(spelled == sig, s"$name: query spells $spelled, not $sig")
+        val out = probe(q)
+        val got = out.select("vec_id").as[Long].collect().sorted.toSeq
+        // bucket 5 ranks its two rows; the >31-bit signature reads nothing
+        // (a wrapped cast would have ranked bucket 5 instead, and the batch
+        // probe, whose join rechecks the bucket, would still have read it)
+        assert(got == (if (sig == 5L) Seq(1L, 2L) else Nil), s"$name sig=$sig")
+        val scansStore = out.queryExecution.optimizedPlan.collectLeaves().exists(
+          _.isInstanceOf[org.apache.spark.sql.execution.datasources.LogicalRelation])
+        assert(scansStore == (sig == 5L), s"$name sig=$sig scans the store: $scansStore")
+      }
+    }
+  }
+
   test("multi-probe: nFlips=0 ≡ single probe; flips widen candidates, read ≤ 1+nFlips partitions") {
     val path = java.nio.file.Files.createTempDirectory("graft-annstore").toString + "/mp"
     AnnStore.writeAngular(emb, "vec_id", "embedding", path, nPlanes = 4, dim = 64)

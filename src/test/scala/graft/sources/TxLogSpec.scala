@@ -103,6 +103,18 @@ class TxLogSpec extends SparkSpec {
     assert(range.columns.toSeq == absent.columns.toSeq && range.count() == 0)
   }
 
+  test("read: the newest add's footer sets the columns, whatever the file listing order") {
+    // the tx-* directory names are random, so the listing order of the two
+    // commits' files differs from table to table
+    val columns = (1 to 12).map { _ =>
+      val path = tmp("txschema")
+      TxLog.append(Seq((1L, 0L)).toDF("k", "b"), path, "b")
+      TxLog.append(Seq((2L, 1L, "x")).toDF("k", "b", "extra"), path, "b")
+      TxLog.read(spark, path).columns.toSet
+    }
+    assert(columns.forall(_ == Set("k", "b", "extra")), columns)
+  }
+
   test("readKey stays exact under partition-layout evolution") {
     val path = tmp("txevolve")
     // era 1: partitioned by k1 — era 2: flat append — era 3: partitioned by k2
