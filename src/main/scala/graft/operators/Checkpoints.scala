@@ -5,7 +5,11 @@ import scala.concurrent.{Await, TimeoutException}
 import scala.concurrent.duration._
 
 import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Observation, Row}
+import org.apache.spark.sql.catalyst.expressions.{AttributeSet, Expression}
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioningLike,
+  Partitioning, PartitioningCollection, SinglePartition, UnknownPartitioning}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 
 /** Loop state for the iterative operators ([[Preference]], [[Dedup]],
@@ -31,6 +35,25 @@ import org.apache.spark.sql.functions._
   * six operators' jobs per call from 95/34/22/28/9/18
   * (Preference/Dedup/LabelProp/PageRank/KCore/Bfs) to 44/20/20/20/6/15;
   * q278 runs 3 jobs per round instead of 8.
+  *
+  * PARTITIONING: `localCheckpoint` declares the partitioning of the
+  * checkpoint job's plan as it stood BEFORE the job ran. Under AQE (the
+  * `Bench`/`perfbench` session shape) that plan is an
+  * `AdaptiveSparkPlanExec`, which reports `UnknownPartitioning(0)`.
+  * Measured on `local[4]` with 4 shuffle partitions, on a `groupBy(k)` of
+  * 200k rows into 5,000 groups: with AQE on, the final plan of the
+  * checkpoint job reads `coalescedhashpartitioning(hashpartitioning(k, 4))`
+  * over 1 partition, the checkpoint declares `UnknownPartitioning(0)`, and
+  * a following `groupBy(k)` plans an `Exchange hashpartitioning(k, 4)`;
+  * with AQE off the checkpoint declares `hashpartitioning(k, 4)` and the
+  * regroup plans no exchange. [[state]] therefore reads the partitioning
+  * from the plan the job RAN (the adaptive plan's final plan) and declares
+  * it on the re-planned checkpoint, under the rule of `produced`. With
+  * it the loops stop re-shuffling their own state: `perfbench`
+  * `graph_similarity` (4 cores, traced, seed 7) wrote 1.099 MB of shuffle
+  * per pass instead of 1.720, and ran 32/18/12/15/5/12 jobs
+  * (Preference/Dedup/LabelProp/PageRank/KCore/Bfs) instead of
+  * 44/20/20/20/6/14. [[sized]] keeps a carried hash partitioning's width.
   *
   * RELEASE: `Dataset.unpersist` only touches the SQL cache; an eager
   * `localCheckpoint`'s blocks live in the BLOCK MANAGER until the
@@ -58,13 +81,13 @@ object Checkpoints {
   /** Eagerly `localCheckpoint` `df`, observing its row count and
     * `observed` (aliased aggregate columns, e.g. `max(x).as("mx")`) in the
     * checkpointing job itself, and re-plan the checkpoint with its true
-    * statistics (see the object doc). Release `State.df` like any
-    * checkpoint once it is superseded.
+    * statistics and the partitioning its job produced (see the object
+    * doc). Release `State.df` like any checkpoint once it is superseded.
     */
   def state(df: DataFrame, observed: Column*): State = {
     val obs = Observation()
-    val cp = df.observe(obs, count(lit(1)).as("__rows"), observed: _*)
-      .localCheckpoint(true)
+    val od = df.observe(obs, count(lit(1)).as("__rows"), observed: _*)
+    val cp = od.localCheckpoint(true)
     val row = try Await.result(obs.future, ObservedWait) catch {
       case e: TimeoutException =>
         release(cp)
@@ -74,8 +97,36 @@ object Checkpoints {
             "backlog or dropped events)", e)
     }
     val rows = row.getLong(0)
-    State(GraftColumnBridge.withTrueStats(cp, rows), rows,
+    State(GraftColumnBridge.withTrueStats(cp, rows, produced(od, cp)), rows,
       Row.fromSeq(row.toSeq.tail))
+  }
+
+  /** The partitioning the checkpoint `cp` of `od` truly has, read from the
+    * plan its job ran (under AQE, the adaptive plan's final plan):
+    * `SinglePartition` for one partition; else the final plan's
+    * partitioning, or the first member of a partitioning collection, that
+    * has exactly the checkpoint's partition count and references only
+    * columns of its output; else none. A partitioning over a column the
+    * checkpoint projected away is not carried: a declared partitioning
+    * that is not true silently breaks joins.
+    */
+  private def produced(od: DataFrame, cp: DataFrame): Partitioning = {
+    val lr = cp.queryExecution.analyzed.asInstanceOf[LogicalRDD]
+    val parts = lr.rdd.getNumPartitions
+    val ran = od.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val out = AttributeSet(lr.output)
+    def flat(p: Partitioning): Seq[Partitioning] = p match {
+      case c: PartitioningCollection => c.partitionings.flatMap(flat)
+      case p => Seq(p)
+    }
+    if (parts == 1) SinglePartition
+    else flat(ran.outputPartitioning).find {
+      case p: Expression => p.numPartitions == parts && p.references.subsetOf(out)
+      case _ => false
+    }.getOrElse(UnknownPartitioning(parts))
   }
 
   /** The loop-scan width rule: read `df` (`rows` rows) at ⌈rows/64k⌉
@@ -85,11 +136,24 @@ object Checkpoints {
     * regardless of the data; the narrow coalesce reads the same blocks with
     * as many tasks as the DATA warrants — a per-row bound that keeps its
     * parallelism on a billion-row frame, never a core-count constant.
+    *
+    * Width against partitioning: a frame is coalesced unless it carries a
+    * hash partitioning ([[state]]) and its target width is above 1. A
+    * coalesce to n > 1 partitions reports no partitioning, so a hash-
+    * partitioned state keeps the width AQE already gave the stage that
+    * produced it, and a round that groups or joins it on its key needs no
+    * exchange. A coalesce to 1 still reports `SinglePartition`, so that
+    * width always wins. An unpartitioned or range-partitioned frame (a
+    * `spark.range` source, a sort) is narrowed as before.
     */
   def sized(df: DataFrame, rows: Long): DataFrame = {
     val parts = df.rdd.getNumPartitions
     val n = math.min(parts.toLong, rows / 65536L + 1L).toInt
-    if (n < parts) df.coalesce(n) else df
+    val hashed = df.queryExecution.analyzed match {
+      case lr: LogicalRDD => lr.outputPartitioning.isInstanceOf[HashPartitioningLike]
+      case _ => false
+    }
+    if (n < parts && (n == 1 || !hashed)) df.coalesce(n) else df
   }
 
   /** The round driver of the iterative operators. Round `r` (1 to

@@ -312,36 +312,29 @@ object TextDedup {
     // discriminative for prefix filtering to prune — tiny-vocabulary
     // unigram sets make every pair a candidate AND a match (degenerate)
     // four consumers (freq, sizes, and both verify legs ta/tb) re-evaluate
-    // the shingle explode without materialization — persist the
-    // (doc × distinct-shingle)-bounded frame so tokenization runs once.
-    // Both persisted frames are MATERIALIZED before anything plans over
-    // them: a lazy cache lands mid-query, and AQE planned the joins above
-    // it from estimates or from true sizes depending on whether it had
-    // landed yet — under co-tenant load 1 call in 4 ran an extra
-    // 26.9k-row shuffle (1.05 vs 0.47 MB on the benchmark corpus). A
-    // checkpoint (Checkpoints.state) drops the cache's hash-by-id
-    // partitioning, so the rarity window would shuffle on every call.
+    // the shingle explode without materialization — checkpoint the
+    // (doc × distinct-shingle)-bounded frame so tokenization runs once. The
+    // checkpoint is eager, so AQE plans every join above it from its true
+    // size, and it keeps the hash-by-id partitioning its job produced
+    // ([[Checkpoints.state]]), so the rarity window and the verify joins on
+    // id read it without an exchange.
     // Cleanup: session owner drops persisted blocks between queries.
-    val toks = wordShingles(df, idCol, textCol, n)
-      .select(col("id"), col("s").as("tok"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    toks.count()
+    val toks = Checkpoints.state(wordShingles(df, idCol, textCol, n)
+      .select(col("id"), col("s").as("tok"))).df
     // global rarity: (document frequency ASC, token ASC) is a total order —
     // used directly, never materialized as a rank (see Scaladoc)
     val freq = toks.groupBy("tok").agg(count(lit(1)).as("df_"))
     val sizes = toks.groupBy("id").agg(count(lit(1)).as("m"))
-    val prefix = toks.join(freq, Seq("tok"))
+    // both legs of the candidate self-join read the prefixes — checkpoint
+    // them so the rarity window runs once, not per leg
+    val prefix = Checkpoints.state(toks.join(freq, Seq("tok"))
       .join(sizes, "id")
       .withColumn("rn", row_number().over(
         Window.partitionBy("id").orderBy(col("df_").asc, col("tok").asc)))
       .withColumn("plen",
         col("m") - expr(s"(($tNum * m + ${tDen - 1}) div $tDen)") + 1)
       .filter(col("rn") <= col("plen"))
-      .select(col("id"), col("tok"))
-      // both legs of the candidate self-join read this frame — persist so
-      // the rarity window runs once, not per leg
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    prefix.count()
+      .select(col("id"), col("tok"))).df
     val cand = prefix.as("x").join(prefix.as("y"),
         col("x.tok") === col("y.tok") && col("x.id") < col("y.id"))
       .select(col("x.id").as("a_id"), col("y.id").as("b_id"))

@@ -22,12 +22,13 @@ package graft
   *     [[operators.Checkpoints.release]] once consumed.
   *
   *   - '''Caller-released''' — the operator returns a LAZY frame that
-  *     still READS one or more internal `persist`s (a shared candidate
-  *     census, a shingle table, a qrels frame:
+  *     still READS one or more internal `persist`s or checkpoints (a shared
+  *     candidate census, a shingle table, a qrels frame:
   *     [[operators.FuzzyJoin.fellegiSunter]] / `fellegiSunterEm`,
   *     [[operators.Evaluation.multiclassPrf]] / `krippendorffAlpha` /
   *     `pairedBootstrapCi`,
-  *     [[operators.TextDedup.prefixJaccardJoin]] /
+  *     [[operators.TextDedup.prefixJaccardJoin]] (its shingle and prefix
+  *     tables are eager [[operators.Checkpoints.state]] checkpoints) /
   *     `exactSubstringSpans` / `duplicateSpanCoverage`, and the
   *     language-model censuses). An eager release inside the operator
   *     would either recompute the expensive shared stage per consumer or

@@ -10,9 +10,10 @@ import org.apache.spark.sql.functions.lit
   * materialization points.
   *
   * [[run]] is the runner that writes the marts. Three marts consume the
-  * feature layer, so `run` materializes it ONCE with an eager
-  * `localCheckpoint` and writes all three from that snapshot — where dbt
-  * builds its mart tables over one set of shared upstream views. Without it
+  * feature layer, so `run` materializes it ONCE with an eager checkpoint
+  * ([[graft.operators.Checkpoints.state]]) and writes all three from that
+  * snapshot — where dbt builds its mart tables over one set of shared
+  * upstream views. Without it
   * Spark re-evaluates the whole upstream (generator, dedup, as-of join,
   * feature windows) per mart write. The checkpoint holds the rows of one
   * evaluation with the lineage cut, so all three marts come from the same
@@ -20,19 +21,26 @@ import org.apache.spark.sql.functions.lit
   * sources that may have changed since. The columnar cache (`persist`)
   * measured 2–3× slower than recomputing over the former two-frame DAG;
   * over this DAG it is slower than the checkpoint at sf0.001, as fast at
-  * sf0.1, and keeps the lineage. Measured on 4 cores with a 2 GB heap in the
-  * benchmark's session shape, median of warm reps:
+  * sf0.1, and keeps the lineage. The checkpoint keeps the
+  * `(meeting_key, session_key, driver_number)` partitioning of the as-of
+  * exchange (see `Checkpoints`), so the summary mart aggregates without a
+  * partial-aggregate exchange; a bare `localCheckpoint` under AQE declares
+  * no partitioning and paid that exchange. Measured on 4 cores with a 2 GB
+  * heap in the benchmark's session shape, median of warm reps (the two
+  * checkpoint rows: two runs of 4 warm reps each per side, both medians):
   *
-  * | scale   | three-mart write                      | wall   | jobs | shuffle  | CPU    |
-  * |---------|---------------------------------------|--------|------|----------|--------|
-  * | sf0.001 | two-frame DAG, evaluated per mart     | 8.0 s  | 45   | 3.69 MB  | 4.9 s  |
-  * | sf0.001 | tagged DAG, evaluated per mart        | 6.8 s  |      |          |        |
-  * | sf0.001 | tagged DAG, columnar cache            | 4.9 s  |      |          |        |
-  * | sf0.001 | tagged DAG, checkpoint (`run`)        | 3.7 s  | 16   | 1.61 MB  | 1.9 s  |
-  * | sf0.1   | two-frame DAG, evaluated per mart     | 45.8 s | 45   | 363.6 MB | 116 s  |
-  * | sf0.1   | tagged DAG, evaluated per mart        | 27.9 s |      |          |        |
-  * | sf0.1   | tagged DAG, columnar cache            | 16.7 s |      |          |        |
-  * | sf0.1   | tagged DAG, checkpoint (`run`)        | 16.4 s | 16   | 159.5 MB | 35 s   |
+  * | scale   | three-mart write                        | wall          | jobs | shuffle  | CPU           |
+  * |---------|-----------------------------------------|---------------|------|----------|---------------|
+  * | sf0.001 | two-frame DAG, evaluated per mart       | 8.0 s         | 45   | 3.69 MB  | 4.9 s         |
+  * | sf0.001 | tagged DAG, evaluated per mart          | 6.8 s         |      |          |               |
+  * | sf0.001 | tagged DAG, columnar cache              | 4.9 s         |      |          |               |
+  * | sf0.001 | tagged DAG, bare `localCheckpoint`      | 4.8 / 4.2 s   | 14   | 1.611 MB | 2.4 / 2.3 s   |
+  * | sf0.001 | tagged DAG, `Checkpoints.state` (`run`) | 4.2 / 4.3 s   | 13   | 1.599 MB | 2.1 / 2.2 s   |
+  * | sf0.1   | two-frame DAG, evaluated per mart       | 45.8 s        | 45   | 363.6 MB | 116 s         |
+  * | sf0.1   | tagged DAG, evaluated per mart          | 27.9 s        |      |          |               |
+  * | sf0.1   | tagged DAG, columnar cache              | 16.7 s        |      |          |               |
+  * | sf0.1   | tagged DAG, bare `localCheckpoint`      | 17.1 / 14.8 s | 14   | 159.5 MB | 35.8 / 33.0 s |
+  * | sf0.1   | tagged DAG, `Checkpoints.state` (`run`) | 15.1 / 14.0 s | 13   | 158.6 MB | 33.1 / 31.0 s |
   *
   * At scale the mart writes go out partitioned by
   * (`season_year`, `meeting_key`) — the dashboard's filter surface — giving
@@ -113,7 +121,7 @@ object F1Pipeline {
     * is ISO-8601, so the raw-string order is the timestamp order.
     */
   def run(raw: Raw, outDir: String): Unit = {
-    val feats = features(tagged(raw)).localCheckpoint()
+    val feats = Checkpoints.state(features(tagged(raw))).df
     def write(df: DataFrame, name: String, partitionCols: String*): Unit =
       df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(s"$outDir/$name")
     try {

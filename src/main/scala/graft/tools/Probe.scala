@@ -1,7 +1,9 @@
 package graft.tools
 
+import java.security.MessageDigest
+
 import graft.{BenchSession, QueryMetrics, SparkEntry}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.{ExplainMode, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
@@ -13,7 +15,7 @@ import org.apache.spark.sql.execution.window.WindowExec
   * ([[graft.QueryMetrics]]). Each query name is an exact registry name or a
   * unique prefix of one (`q38`).
   *
-  * Usage: runMain graft.tools.Probe <sfDir> <q,...> [time|jobs|stages|plan] [reps]
+  * Usage: runMain graft.tools.Probe <sfDir> <q,...> [time|jobs|stages|plan|matrix] [reps]
   *
   *   - `time` (default): per rep, the build/plan/exec wall split (build =
   *     the query function, which runs any eager checkpoints; plan = physical
@@ -25,6 +27,12 @@ import org.apache.spark.sql.execution.window.WindowExec
   *   - `plan`: the formatted physical plan, the AQE-final plan after one
   *     run that discards its rows (as the `noop` sink does), and the
   *     exchange/broadcast/sort/window/join counts of both.
+  *   - `matrix`: the layout check. Each query runs under every shuffle
+  *     width of {1, 7, 64} with AQE on and off; per cell it prints the row
+  *     count and an order-insensitive digest of the rows (floats at 9
+  *     decimal places, the oracle checker's rule). Results must not depend
+  *     on the layout, so any cell that differs from the query's first is a
+  *     MISMATCH, and the probe exits 1.
   *
   * Every rep starts from a fresh GC, settles the listener bus before and
   * after, and releases the session's cached blocks afterwards, as `Bench`
@@ -32,7 +40,10 @@ import org.apache.spark.sql.execution.window.WindowExec
   */
 object Probe extends AdaptiveSparkPlanHelper {
 
-  private val Modes = Set("time", "jobs", "stages", "plan")
+  private val Modes = Set("time", "jobs", "stages", "plan", "matrix")
+
+  /** The (shuffle partitions, AQE) layouts of the `matrix` mode. */
+  private val Layouts = for (p <- Seq(1, 7, 64); aqe <- Seq(true, false)) yield (p, aqe)
 
   /** The registry name `q` denotes: itself, or the one name it prefixes. */
   def resolve(names: Iterable[String], q: String): Either[String, String] =
@@ -46,7 +57,7 @@ object Probe extends AdaptiveSparkPlanHelper {
   def main(args: Array[String]): Unit = {
     val mode = if (args.length > 2) args(2) else "time"
     if (args.length < 2 || !Modes(mode)) {
-      System.err.println("usage: Probe <sfDir> <q,...> [time|jobs|stages|plan] [reps]")
+      System.err.println("usage: Probe <sfDir> <q,...> [time|jobs|stages|plan|matrix] [reps]")
       sys.exit(2)
     }
     val sfDir = args(0)
@@ -61,14 +72,18 @@ object Probe extends AdaptiveSparkPlanHelper {
     val metrics = new QueryMetrics
     spark.sparkContext.addSparkListener(metrics)
     BenchSession.warm(spark, sfDir)
-    names.foreach { name =>
-      if (mode == "plan") plan(spark, sfDir, name)
-      else {
-        val walls = (1 to reps).map(rep => measure(spark, sfDir, name, rep, mode, metrics))
-        println(f"[probe] $name best ${walls.min}%.3f s of $reps")
+    val same = if (mode == "matrix") matrix(spark, sfDir, names) else {
+      names.foreach { name =>
+        if (mode == "plan") plan(spark, sfDir, name)
+        else {
+          val walls = (1 to reps).map(rep => measure(spark, sfDir, name, rep, mode, metrics))
+          println(f"[probe] $name best ${walls.min}%.3f s of $reps")
+        }
       }
+      true
     }
     spark.stop()
+    if (!same) sys.exit(1)
   }
 
   private def mb(bytes: Long): Double = bytes / 1e6
@@ -131,6 +146,61 @@ object Probe extends AdaptiveSparkPlanHelper {
     println(s"[probe] $name final   ${counts(qe.executedPlan)}")
     BenchSession.release(spark)
   }
+
+  /** Runs every query under every layout of [[Layouts]] and prints one
+    * line per cell; true when each query's cells all agree.
+    */
+  private def matrix(spark: SparkSession, dir: String, names: Seq[String]): Boolean = {
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    val saved = keys.map(k => k -> spark.conf.get(k))
+    try names.map { name =>
+      val cells = Layouts.map { case (parts, aqe) =>
+        spark.conf.set(keys(0), parts.toLong)
+        spark.conf.set(keys(1), aqe)
+        try digest(SparkEntry.queries(name)(spark, dir))
+        finally BenchSession.release(spark)
+      }
+      Layouts.zip(cells).foreach { case ((parts, aqe), cell @ (rows, hash)) =>
+        val verdict = if (cell == cells.head) "ok" else "MISMATCH"
+        println(f"[matrix] $name%-32s partitions $parts%2d aqe ${if (aqe) "on " else "off"}" +
+          f" $rows%8d rows $hash $verdict")
+      }
+      val same = cells.distinct.size == 1
+      println(s"[matrix] $name ${if (same) "same rows in all" else "DIFFERS across"} " +
+        s"${cells.size} layouts")
+      same
+    }.forall(identity)
+    finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
+  /** Row count and an order-insensitive SHA-256 over the rows' canonical
+    * strings, sorted.
+    */
+  private[tools] def digest(df: DataFrame): (Long, String) = {
+    val lines = df.collect().map(r => canon(r)).sorted
+    val md = MessageDigest.getInstance("SHA-256")
+    lines.foreach(l => md.update((l + "\n").getBytes("UTF-8")))
+    (lines.length.toLong, md.digest().take(8).map("%02x".format(_)).mkString)
+  }
+
+  private def canon(v: Any): String = v match {
+    case null => "NULL"
+    case d: Double => decimal(d)
+    case f: Float => decimal(f.toDouble)
+    case b: Array[Byte] => b.map("%02x".format(_)).mkString("0x", "", "")
+    case r: Row => r.toSeq.map(canon).mkString("(", ",", ")")
+    case m: scala.collection.Map[_, _] =>
+      m.toSeq.map { case (k, x) => canon(k) + "->" + canon(x) }.sorted.mkString("{", ",", "}")
+    case s: scala.collection.Seq[_] => s.map(canon).mkString("[", ",", "]")
+    case x => x.toString
+  }
+
+  private def decimal(d: Double): String =
+    if (d.isNaN || d.isInfinite) d.toString
+    else String.format(java.util.Locale.ROOT, "%.9f", Double.box(d)) match {
+      case "-0.000000000" => "0.000000000"
+      case s => s
+    }
 
   private def counts(p: SparkPlan): String = {
     def n(f: PartialFunction[SparkPlan, Unit]) = collect(p)(f).size

@@ -3,6 +3,7 @@ package org.apache.spark.sql
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.catalyst.plans.physical.Partitioning
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.LogicalRDD
 
@@ -29,19 +30,22 @@ object GraftColumnBridge {
 
   /** An eager checkpoint's frame re-planned with `rows` as its TRUE
     * statistics: `rowCount = rows`, `sizeInBytes = rows × row width` (the
-    * planner's own per-row estimate over the output types). The checkpoint's
-    * `LogicalRDD` otherwise carries the estimate of the plan it replaced
-    * (see [[graft.operators.Checkpoints]]). Same blocks, output attributes,
-    * partitioning and constraints; only the statistics change.
+    * planner's own per-row estimate over the output types), and
+    * `partitioning` as its output partitioning. The checkpoint's
+    * `LogicalRDD` otherwise carries the estimate of the plan it replaced,
+    * and under AQE no partitioning at all (see
+    * [[graft.operators.Checkpoints]]). Same blocks, output attributes,
+    * ordering and constraints.
     */
-  def withTrueStats(df: Dataset[Row], rows: Long): DataFrame = {
+  def withTrueStats(df: Dataset[Row], rows: Long,
+                    partitioning: Partitioning): DataFrame = {
     val lr = df.queryExecution.analyzed.asInstanceOf[LogicalRDD]
     val session = df.queryExecution.sparkSession
     val stats = Statistics(
       sizeInBytes = EstimationUtils.getSizePerRow(lr.output) * rows,
       rowCount = Some(BigInt(rows)))
     classic.Dataset.ofRows(session, new LogicalRDD(lr.output, lr.rdd,
-      lr.outputPartitioning, lr.outputOrdering, lr.isStreaming,
+      partitioning, lr.outputOrdering, lr.isStreaming,
       lr.stream)(session, Some(stats), Some(lr.constraints)))
   }
 }

@@ -2,8 +2,6 @@ package graft.sources
 
 import graft.SparkSpec
 import graft.operators.Similarity
-import org.apache.spark.sql.execution.FileSourceScanExec
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -22,32 +20,32 @@ class AnnStoreSpec extends SparkSpec {
       x => x.cast("double") * (lit(1.0) + (col("vec_id") % 5).cast("double")))
       .as("embedding"))
 
-  /** Partitions actually read by the parquet scans of df — recursing
-    * through AQE's leaf-node stages (QueryStageExec hides its subtree from
-    * plain TreeNode traversal).
+  /** Partitions the store's parquet scan read when `df` runs as a `noop`
+    * write, from the SQL metrics of the execution that write ran. Neither
+    * plan object can be read for this. The write plans and runs its own
+    * QueryExecution, so the scans of `df.queryExecution` hold counts only
+    * if an earlier action ran that one (and read 0 otherwise). The write's
+    * own AQE-final plan loses a scan whose branch AQE dropped once it
+    * returned no rows (the semDedup probe's unmatched candidates). The
+    * session's status store keeps the metrics of every plan AQE produced
+    * for the execution. Only the store's partitioned scan has the
+    * partition-count metric; the query-vector source is unpartitioned.
     */
-  private def allScans(p: org.apache.spark.sql.execution.SparkPlan): Seq[FileSourceScanExec] =
-    p.collect {
-      case f: FileSourceScanExec => Seq(f)
-      case a: AdaptiveSparkPlanExec => allScans(a.executedPlan)
-      case s: org.apache.spark.sql.execution.adaptive.QueryStageExec => allScans(s.plan)
-      case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => allScans(r.child)
-      // a probe that persists an intermediate (decontaminationProbe's
-      // flagged pairs) hides the store scan inside the cached plan
-      case i: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-        allScans(i.relation.cachedPlan)
-    }.flatten
-
   private def partitionsRead(df: DataFrame): Long = {
+    val status = spark.sharedState.statusStore
+    val before = status.executionsList().map(_.executionId).foldLeft(-1L)(math.max)
     df.write.format("noop").mode("overwrite").save()
-    val scans = allScans(df.queryExecution.executedPlan)
-    assert(scans.nonEmpty, "no parquet scan in the probe plan")
-    // the probe also scans the (unpartitioned) query-vector source; only
-    // the store's scan carries the partition-count metric
-    val partitioned = scans.filter(_.metrics.contains("numPartitions"))
-    assert(partitioned.nonEmpty,
-      "metric keys: " + scans.map(_.metrics.keys.mkString("|")).mkString(" ; "))
-    partitioned.map(_.metrics("numPartitions").value).max
+    def ended = status.executionsList()
+      .filter(e => e.executionId > before && e.completionTime.isDefined)
+    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+    while (ended.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    val exec = ended.headOption.getOrElse(fail("the noop write's execution did not end"))
+    val values = status.executionMetrics(exec.executionId)
+    val reads = exec.metrics.filter(_.name == "number of partitions read")
+      .flatMap(m => values.get(m.accumulatorId))
+    assert(reads.nonEmpty, "no partitioned scan ran: " +
+      exec.metrics.map(_.name).distinct.mkString("|"))
+    reads.map(_.replace(",", "").toLong).max
   }
 
   test("angular store: probe == lshTopK bit-for-bit, reading ONE partition") {
@@ -83,7 +81,7 @@ class AnnStoreSpec extends SparkSpec {
     // the signature's bucket may be missing from some bands on a small
     // corpus — read count is AT MOST nBands, and strictly below the layout
     val read = partitionsRead(probe)
-    assert(read <= 5L && read < layout,
+    assert(read >= 1L && read <= 5L && read < layout,
       s"MIPS probe read $read partitions of $layout — pruning failed")
   }
 
@@ -109,7 +107,7 @@ class AnnStoreSpec extends SparkSpec {
       .select(Similarity.mipsQuerySignature(col("embedding"), 3, 64))
       .distinct().count()
     val read = partitionsRead(probe)
-    assert(read <= nSigs * 5 && read < layout,
+    assert(read >= 1L && read <= nSigs * 5 && read < layout,
       s"batched probe read $read of $layout partitions (sigs=$nSigs)")
   }
 
@@ -156,7 +154,7 @@ class AnnStoreSpec extends SparkSpec {
     assert(probeSims.zip(singleSims).forall { case (m, s) => m >= s },
       s"multi-table top-k must dominate its first table: $probeSims vs $singleSims")
     val read = partitionsRead(probe)
-    assert(read <= 3L && read < layout,
+    assert(read >= 1L && read <= 3L && read < layout,
       s"multi-table probe read $read of $layout partitions")
   }
 
@@ -348,7 +346,7 @@ class AnnStoreSpec extends SparkSpec {
     assert(m2.toSeq == expect.collect().toSeq)
     // partition economics: ≤ 1 + nFlips of the full layout
     val read = partitionsRead(mp(2))
-    assert(read <= 3L && read < nParts,
+    assert(read >= 1L && read <= 3L && read < nParts,
       s"multi-probe read $read of $nParts partitions")
   }
 
@@ -365,7 +363,7 @@ class AnnStoreSpec extends SparkSpec {
       queryId = 0L, k = 10, nClusters = 16, nProbe = 4)
     assert(probe.collect().toSeq == expect.collect().toSeq)
     val read = partitionsRead(probe)
-    assert(read <= 4L && read < nParts,
+    assert(read >= 1L && read <= 4L && read < nParts,
       s"IVF probe read $read of $nParts inverted lists — pruning failed")
   }
 
@@ -425,7 +423,7 @@ class AnnStoreSpec extends SparkSpec {
     val probe = AnnStore.semDedupProbe(spark, path, small,
       "vec_id", "embedding", minSim = 0.45)
     val read = partitionsRead(probe)
-    assert(read <= touched && read < layout,
+    assert(read >= 1L && read <= touched && read < layout,
       s"semDedup probe read $read partitions of $layout (touched=$touched)")
   }
 
